@@ -280,7 +280,12 @@ def grouped_percentiles_from_bounded_hist(hist: DataFrame,
     replacing the range shuffle, per-partition windows, offset windows
     and metadata broadcast joins the scale-safe machinery needs when a
     group's histogram may NOT fit a task (callers without the bound stay
-    on :func:`grouped_percentiles_from_hist`)."""
+    on :func:`grouped_percentiles_from_hist`).
+
+    PRECONDITION (as for :func:`grouped_histogram_cdf`): ``hist`` is
+    already aggregated — rows are unique per (group, value), each
+    carrying that value's multiplicity in ``cnt_col``. Rows with a NULL
+    value are dropped before the walk."""
     hist = hist.where(F.col(value_col).isNotNull())
     w_cum = (Window.partitionBy(*group_cols).orderBy(value_col)
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))

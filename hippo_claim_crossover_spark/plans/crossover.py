@@ -33,6 +33,7 @@ from hippo_claim_crossover_spark.plans.base import (
     money_sum_sql,
     t,
 )
+from hippo_claim_crossover_spark.session import run_dir
 
 # CASE dictionary mirroring the insurance-type map (reference :60-66, C2).
 STATUS_MAP = {"F": "fulfilled", "O": "open", "P": "pending"}
@@ -138,11 +139,10 @@ FROM lineitem WHERE l_shipdate >= TIMESTAMP '1999-01-01'
 def q_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 sink: write parquet, read it back (replaces the per-record PDF
     render, lib/hippo_claim_crossover.rb:316). Write-side coalesce keeps
-    small outputs from fragmenting into many files. The output path is
-    scoped to this Spark application (applicationId is unique per
-    session), so concurrent harness runs never race on a shared file."""
-    out = ("/root/repo/_scratch/"
-           f"q_sink-{spark.sparkContext.applicationId}.parquet")
+    small outputs from fragmenting into many files. Every run writes a
+    fresh ``session.run_dir`` scoped to this Spark application, so
+    concurrent harness runs never race on a shared file."""
+    out = run_dir(spark, "q_sink", sf_dir)
     agg = (
         t(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")

@@ -1366,7 +1366,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes both phases from scratch (CTE per phase) —
     a hash match proves the persisted index round-trips losslessly.
     """
-    from hippo_claim_crossover_spark.plans.sources import _materialize
+    from hippo_claim_crossover_spark.session import fixture_dir
 
     d = t_wide(spark, sf_dir, "documents")
     corpus = d.where(F.col("doc_id") % 5 != 0)
@@ -1375,7 +1375,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write(out: str) -> None:
         band_key_table(corpus).write.mode("overwrite").parquet(out)
 
-    out = _materialize(spark, sf_dir, "mhidx", write)
+    out = fixture_dir(spark, "mhidx", sf_dir, write)
     from pyspark.sql import types as T
     idx = spark.read.schema(T.StructType([
         T.StructField("doc_id", T.LongType()),

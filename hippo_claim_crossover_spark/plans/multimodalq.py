@@ -15,6 +15,7 @@ from hippo_claim_crossover_spark.multimodal import (
     sample_frames,
 )
 from hippo_claim_crossover_spark.plans.base import QuerySpec, t
+from hippo_claim_crossover_spark.session import fixture_dir
 
 
 def q_mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,15 +56,12 @@ def q_mm_binfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the source's own ``length`` column and sha-256 over the BinaryType
     ``content``. Oracle: DuckDB computes the identical triple straight
     from the documents table, so a mismatch anywhere in write → list →
-    read → hash fails the gate."""
-    import os
-
+    read → hash fails the gate. The file set is exists-guarded input
+    setup, written once per (session, sf_dir)."""
     d = t(spark, sf_dir, "documents")
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        os.pardir, "_scratch", "binfiles", sf_tag)
-    materialize_binary_fixture(d, out_dir, max_files=N_BINFILES)
+    out_dir = fixture_dir(
+        spark, "binfiles", sf_dir,
+        lambda out: materialize_binary_fixture(d, out, max_files=N_BINFILES))
     files = read_binary_files(spark, out_dir, glob="*.bin")
     return files.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)

@@ -1193,31 +1193,30 @@ FROM lineitem l JOIN orders o
 
 # One bucketed-table write per (session, sf_dir); the join below then runs
 # shuffle-free forever after — the write is the one-time cost the 100 TB
-# story amortizes. Keyed by applicationId so concurrent harness runs never
-# share catalog tables or paths.
-_BUCKETED_READY: set[tuple[str, str]] = set()
+# story amortizes. The catalog is per application, and the fixture dir is
+# application-scoped, so concurrent harness runs never share tables or paths.
 _N_BUCKETS = 8
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    import os
     import re
 
     from hippo_claim_crossover_spark.operators.bucketing import write_bucketed
+    from hippo_claim_crossover_spark.session import fixture_dir
 
-    tag = re.sub(r"[^0-9a-zA-Z]", "_",
-                 f"{spark.sparkContext.applicationId}_"
-                 f"{sf_dir.rstrip('/').split('/')[-1]}")
+    tag = re.sub(r"[^0-9a-zA-Z]", "_", os.path.basename(sf_dir.rstrip("/")))
     li_tbl, o_tbl = f"lineitem_b_{tag}", f"orders_b_{tag}"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED_READY:
-        base = f"/root/repo/_scratch/bucketed-{tag}"
+
+    def write(base: str) -> None:
         write_bucketed(t(spark, sf_dir, "lineitem"), li_tbl,
                        "l_orderkey", _N_BUCKETS, sort_by="l_orderkey",
                        path=f"{base}/lineitem")
         write_bucketed(t(spark, sf_dir, "orders"), o_tbl,
                        "o_orderkey", _N_BUCKETS, sort_by="o_orderkey",
                        path=f"{base}/orders")
-        _BUCKETED_READY.add(key)
+
+    fixture_dir(spark, "bucketed", sf_dir, write)
     return li_tbl, o_tbl
 
 

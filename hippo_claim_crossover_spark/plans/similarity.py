@@ -399,7 +399,7 @@ def q_sim_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical top-k."""
     from pyspark.sql import types as T
 
-    from hippo_claim_crossover_spark.plans.sources import _materialize
+    from hippo_claim_crossover_spark.session import fixture_dir
 
     e = _vectors(spark, sf_dir)
     q = _query_vec(e)
@@ -413,7 +413,7 @@ def q_sim_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
          .write.mode("overwrite").partitionBy("cell")
          .parquet(f"{out}/assign"))
 
-    out = _materialize(spark, sf_dir, "ivfidx", write_index)
+    out = fixture_dir(spark, "ivfidx", sf_dir, write_index)
     cents = spark.read.schema(T.StructType([
         T.StructField("cent_id", T.LongType()),
         T.StructField("cv", T.ArrayType(T.DoubleType())),

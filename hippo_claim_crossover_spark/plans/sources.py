@@ -4,18 +4,18 @@ layout, CSV, and JSON-lines ingestion.
 The reference reads exactly one format — a whole EDI file as a string
 (lib/hippo_claim_crossover.rb:313). A Spark engine's source surface is a
 family of formats behind one DataFrame API; each query here materializes a
-fixture-derived file set once per (session, sf_dir) into ``_scratch/``
-(same device as q_sink / q_mm_binfile / q_join_bucketed), reads it back
-through the format under test with an **explicit schema** (never
-inferSchema on a production path, SURVEY §1.4), and computes an aggregate
-the DuckDB oracle reproduces straight from the parquet table — so the gate
-proves the full write → list → parse → compute path, not just the API call.
+fixture-derived file set once per (session, sf_dir) through
+``session.fixture_dir`` (sinks: a fresh ``session.run_dir`` per run),
+reads it back through the format under test with an **explicit schema**
+(never inferSchema on a production path, SURVEY §1.4), and computes an
+aggregate the DuckDB oracle reproduces straight from the parquet table —
+so the gate proves the full write → list → parse → compute path, not
+just the API call.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,46 +28,7 @@ from hippo_claim_crossover_spark.plans.base import (
     sql_hex2long,
     t,
 )
-
-_SCRATCH = "/root/repo/_scratch"
-
-
-def _tag(spark: SparkSession, sf_dir: str) -> str:
-    return re.sub(r"[^0-9a-zA-Z]", "_",
-                  f"{spark.sparkContext.applicationId}_"
-                  f"{sf_dir.rstrip('/').split('/')[-1]}")
-
-
-# One materialization per (applicationId, sf_dir, format) — concurrent
-# harness runs never share paths (app id in the tag).
-_READY: set[tuple[str, str, str]] = set()
-_RUN_SEQ: dict[tuple[str, str, str], int] = {}
-
-
-def _materialize(spark: SparkSession, sf_dir: str, fmt: str,
-                 write, per_run: bool = False) -> str:
-    """``per_run=False`` (source fixtures): exists-guarded — the write
-    is INPUT SETUP (the stand-in for an upstream table), so one
-    materialization per (app, sf, format) is the honest treatment and
-    repeated plan builds read steady state. ``per_run=True`` (sink
-    queries, r16 — VERDICT r15 #5): the write IS the declared operator,
-    so every call gets a fresh run-numbered dir and pays the write —
-    best-of-N bench runs now time the sink, not an exists-guard
-    short-circuit. Abandoned run dirs are app-id-tagged and reclaimed
-    by the stale-scratch pruner."""
-    key = (spark.sparkContext.applicationId, sf_dir, fmt)
-    if per_run:
-        n = _RUN_SEQ.get(key, 0) + 1
-        _RUN_SEQ[key] = n
-        out = os.path.join(_SCRATCH,
-                           f"src_{fmt}-{_tag(spark, sf_dir)}-r{n}")
-        write(out)
-        return out
-    out = os.path.join(_SCRATCH, f"src_{fmt}-{_tag(spark, sf_dir)}")
-    if key not in _READY:
-        write(out)
-        _READY.add(key)
-    return out
+from hippo_claim_crossover_spark.session import fixture_dir, run_dir
 
 
 def q_part_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,7 +49,7 @@ def q_part_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t(spark, sf_dir, "events").repartition(4)
          .write.mode("overwrite").partitionBy("event_type").parquet(out))
 
-    out = _materialize(spark, sf_dir, "partev", write)
+    out = fixture_dir(spark, "partev", sf_dir, write)
     ev = spark.read.schema(
         # explicit schema: data columns + the string partition column
         T.StructType([
@@ -138,7 +99,7 @@ def q_src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t(spark, sf_dir, "customer").repartition(4)
          .write.mode("overwrite").option("header", True).csv(out))
 
-    out = _materialize(spark, sf_dir, "csv", write)
+    out = fixture_dir(spark, "csv", sf_dir, write)
     c = (spark.read.schema(CSV_SCHEMA).option("header", True)
          .option("mode", "PERMISSIVE").csv(out))
     return (
@@ -175,7 +136,7 @@ def q_src_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t(spark, sf_dir, "supplier").repartition(2)
          .write.mode("overwrite").json(out))
 
-    out = _materialize(spark, sf_dir, "jsonl", write)
+    out = fixture_dir(spark, "jsonl", sf_dir, write)
     s = spark.read.schema(JSONL_SCHEMA).json(out)
     n = t(spark, sf_dir, "nation")
     return (
@@ -215,7 +176,7 @@ def q_src_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t(spark, sf_dir, "part").repartition(4)
          .write.mode("overwrite").orc(out))
 
-    out = _materialize(spark, sf_dir, "orc", write)
+    out = fixture_dir(spark, "orc", sf_dir, write)
     p = spark.read.schema(ORC_SCHEMA).orc(out)
     return (
         p.where(F.col("p_size") >= 25)
@@ -256,7 +217,7 @@ def q_src_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
          .write.mode("overwrite").option("rootTag", "nations")
          .option("rowTag", "nation").format("xml").save(out))
 
-    out = _materialize(spark, sf_dir, "xml", write)
+    out = fixture_dir(spark, "xml", sf_dir, write)
     x = (spark.read.schema(XML_SCHEMA).option("rowTag", "nation")
          .format("xml").load(out))
     r = t(spark, sf_dir, "region")
@@ -321,7 +282,7 @@ def q_src_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         (t(spark, sf_dir, "events").repartition(4)
          .write.mode("overwrite").partitionBy("event_type").parquet(out))
 
-    out = _materialize(spark, sf_dir, "metaev", write)
+    out = fixture_dir(spark, "metaev", sf_dir, write)
     ev = spark.read.schema(T.StructType([
         T.StructField("event_id", T.LongType()),
         T.StructField("ts", T.TimestampNTZType()),
@@ -363,14 +324,12 @@ def q_sink_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     datasource.register(spark)
 
-    def write(out: str) -> None:
-        (t(spark, sf_dir, "orders")
-         .select("o_orderkey", "o_orderpriority", "o_totalprice")
-         .repartition(4)
-         .write.format("synthdocs").mode("overwrite")
-         .option("path", out).save())
-
-    out = _materialize(spark, sf_dir, "pydsw", write, per_run=True)
+    out = run_dir(spark, "q_sink_pyds", sf_dir)
+    (t(spark, sf_dir, "orders")
+     .select("o_orderkey", "o_orderpriority", "o_totalprice")
+     .repartition(4)
+     .write.format("synthdocs").mode("overwrite")
+     .option("path", out).save())
     back = spark.read.schema(T.StructType([
         T.StructField("o_orderkey", T.LongType()),
         T.StructField("o_orderpriority", T.StringType()),
@@ -441,13 +400,11 @@ def q_sink_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pairwise disjoint. The readback query filters one quarter and
     aggregates; the oracle reproduces it from the raw table, proving the
     rewrite is lossless."""
-    def write(out: str) -> None:
-        (t(spark, sf_dir, "lineitem")
-         .repartitionByRange(8, F.col("l_shipdate"))
-         .sortWithinPartitions("l_shipdate")
-         .write.mode("overwrite").parquet(out))
-
-    out = _materialize(spark, sf_dir, "clustered", write, per_run=True)
+    out = run_dir(spark, "q_sink_clustered", sf_dir)
+    (t(spark, sf_dir, "lineitem")
+     .repartitionByRange(8, F.col("l_shipdate"))
+     .sortWithinPartitions("l_shipdate")
+     .write.mode("overwrite").parquet(out))
     li = spark.read.parquet(out)
     return (
         li.where((F.col("l_shipdate") >= "1995-01-01")
@@ -487,27 +444,25 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         z_value,
     )
 
-    def write(out: str) -> None:
-        li = t(spark, sf_dir, "lineitem")
-        # Both keys must land on the same bit grid before interleaving —
-        # raw partkey is ~4 bits wider than suppkey, and its high bits
-        # would otherwise own the top of the code (leaving suppkey with
-        # no locality). Domain bounds ride a broadcast 1-row aggregate.
-        mm = li.agg(F.min("l_partkey").alias("plo"),
-                    F.max("l_partkey").alias("phi"),
-                    F.min("l_suppkey").alias("slo"),
-                    F.max("l_suppkey").alias("shi"))
-        z = z_value(
-            minmax_norm(F.col("l_partkey"), F.col("plo"), F.col("phi")),
-            minmax_norm(F.col("l_suppkey"), F.col("slo"), F.col("shi")))
-        (li.join(F.broadcast(mm))
-         .withColumn("_z", z)
-         .repartitionByRange(8, F.col("_z"))
-         .sortWithinPartitions("_z")
-         .drop("_z", "plo", "phi", "slo", "shi")
-         .write.mode("overwrite").parquet(out))
-
-    out = _materialize(spark, sf_dir, "zorder", write, per_run=True)
+    out = run_dir(spark, "q_sink_zorder", sf_dir)
+    li = t(spark, sf_dir, "lineitem")
+    # Both keys must land on the same bit grid before interleaving —
+    # raw partkey is ~4 bits wider than suppkey, and its high bits
+    # would otherwise own the top of the code (leaving suppkey with
+    # no locality). Domain bounds ride a broadcast 1-row aggregate.
+    mm = li.agg(F.min("l_partkey").alias("plo"),
+                F.max("l_partkey").alias("phi"),
+                F.min("l_suppkey").alias("slo"),
+                F.max("l_suppkey").alias("shi"))
+    z = z_value(
+        minmax_norm(F.col("l_partkey"), F.col("plo"), F.col("phi")),
+        minmax_norm(F.col("l_suppkey"), F.col("slo"), F.col("shi")))
+    (li.join(F.broadcast(mm))
+     .withColumn("_z", z)
+     .repartitionByRange(8, F.col("_z"))
+     .sortWithinPartitions("_z")
+     .drop("_z", "plo", "phi", "slo", "shi")
+     .write.mode("overwrite").parquet(out))
     li = spark.read.parquet(out)
     return (
         li.where((F.col("l_partkey") < 400)
@@ -550,7 +505,7 @@ def q_src_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select("o_orderkey", "o_totalprice", "o_orderpriority")
          .repartition(2).write.mode("overwrite").parquet(f"{out}/b2"))
 
-    out = _materialize(spark, sf_dir, "evolve", write)
+    out = fixture_dir(spark, "evolve", sf_dir, write)
     merged = (spark.read.option("mergeSchema", True)
               .parquet(f"{out}/b1", f"{out}/b2"))
     return (
@@ -618,14 +573,12 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         money_micros(F.col("l_quantity")).alias("qty_u"),
         money_micros(F.col("l_extendedprice")).alias("price_u"))
 
-    def write(out: str) -> None:
-        src.repartition(COMPACT_FRAG_FILES) \
-            .write.mode("overwrite").parquet(f"{out}/frag")
-        spark.read.parquet(f"{out}/frag") \
-            .repartition(COMPACT_TARGET_FILES) \
-            .write.mode("overwrite").parquet(f"{out}/compact")
-
-    out = _materialize(spark, sf_dir, "compact", write, per_run=True)
+    out = run_dir(spark, "q_compact_files", sf_dir)
+    src.repartition(COMPACT_FRAG_FILES) \
+        .write.mode("overwrite").parquet(f"{out}/frag")
+    spark.read.parquet(f"{out}/frag") \
+        .repartition(COMPACT_TARGET_FILES) \
+        .write.mode("overwrite").parquet(f"{out}/compact")
 
     def audit(leg: str):
         from hippo_claim_crossover_spark.plans.base import hex2long
@@ -707,11 +660,11 @@ def q_backfill_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     default is a loaded gun for unrelated writes)."""
     from hippo_claim_crossover_spark.plans.base import hex2long, money_micros
 
-    out = os.path.join(_SCRATCH, f"src_backfill-{_tag(spark, sf_dir)}")
+    out = run_dir(spark, "q_backfill_partition", sf_dir)
     base = t(spark, sf_dir, "events").select(
         "event_id", "value", "event_type")
-    # run-idempotent: every invocation lays down the pristine base,
-    # then backfills — the declared result never depends on prior runs
+    # run-idempotent: every invocation lays down the pristine base in a
+    # fresh run dir, then backfills — the result never depends on prior runs
     (base.repartition(4).write.mode("overwrite")
      .partitionBy("event_type").parquet(out))
     revised = (base.where(F.col("event_type") == "purchase")
@@ -789,19 +742,16 @@ def q_sink_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props")
 
-    def write(out: str) -> None:
-        src = f"{out}.src"
-        ckpt = f"{out}.ckpt"
-        write_batch_files(ev, src, "event_id", n_batches=3)
-        stream = read_event_stream(spark, src, max_files_per_trigger=1)
-        q = (stream.select("event_id", "user_id", "event_type", "value")
-             .writeStream.format("synthdocs")
-             .option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-
-    out = _materialize(spark, sf_dir, "pydsws", write, per_run=True)
+    run = run_dir(spark, "q_sink_pyds_stream", sf_dir)
+    src, out = f"{run}/src", f"{run}/out"
+    write_batch_files(ev, src, "event_id", n_batches=3)
+    stream = read_event_stream(spark, src, max_files_per_trigger=1)
+    q = (stream.select("event_id", "user_id", "event_type", "value")
+         .writeStream.format("synthdocs")
+         .option("path", out)
+         .option("checkpointLocation", f"{run}/ckpt")
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
     back = spark.read.schema(T.StructType([
         T.StructField("event_id", T.LongType()),
         T.StructField("user_id", T.LongType()),

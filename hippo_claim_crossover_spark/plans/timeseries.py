@@ -11,7 +11,7 @@ window/session key.
 from __future__ import annotations
 
 import datetime as dt
-import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -24,6 +24,7 @@ from hippo_claim_crossover_spark.plans.base import (
     money_sum_sql,
     t,
 )
+from hippo_claim_crossover_spark.session import fixture_dir, run_dir
 
 # DuckDB: naive timestamp from epoch seconds (events.ts is micro-precision;
 # bucket starts are whole seconds so BIGINT arithmetic is exact).
@@ -122,74 +123,39 @@ FROM sess GROUP BY user_id, sid
 """
 
 
-_LATE_RUN = itertools.count()
-
-
-def _write_stream_batches(spark: SparkSession, batches,
-                          prefix: str, src_dir: str | None = None,
-                          start: int = 0,
-                          shared: bool = False) -> tuple[str, int]:
-    """Materialize a pinned micro-batch sequence for a file-source
-    streaming run: one parquet file per batch under a per-(app, run)
-    scratch dir, mtimes forced monotone so the file source's
-    modification-time ordering never depends on write latency.
-
-    ``shared=True`` (r16): single-shot fixtures — the batch files are a
-    pure function of the literal ``batches`` this query pins, so a
-    SINGLE-DRAIN caller may share one exists-guarded source dir per
-    (app-id, prefix) across runs, the ensure_event_batches discipline
-    (input synthesis is the Kafka stand-in, not the operator). The
-    ``run_id`` still advances so checkpoints/outputs/sink tables stay
-    PER-RUN — a reused checkpoint would turn a fresh run into a resume.
-    Callers that land batches INCREMENTALLY against one dir
-    (q_stream_resume) must keep ``shared=False``: a pre-populated
-    shared dir would leak later splits into the first drain."""
-    import os
-
-    run_id = next(_LATE_RUN)
-    if shared and src_dir is None:
-        src = ("/root/repo/_scratch/"
-               f"{prefix}-{spark.sparkContext.applicationId}-shared")
-        marker = os.path.join(src, "_complete")
-        if os.path.exists(marker):
-            return src, run_id
-        os.makedirs(src, exist_ok=True)
-        _land_stream_batches(spark, batches, src, start)
-        with open(marker, "w") as f:
-            f.write("ok")
-        return src, run_id
-    src = src_dir or ("/root/repo/_scratch/"
-                      f"{prefix}-{spark.sparkContext.applicationId}"
-                      f"-{run_id}")
-    os.makedirs(src, exist_ok=True)
-    _land_stream_batches(spark, batches, src, start)
-    return src, run_id
-
-
-def _land_stream_batches(spark: SparkSession, batches, src: str,
-                         start: int) -> None:
-    import glob
-    import os
-    import shutil
-
-    from hippo_claim_crossover_spark.streaming.ops import EVENT_STREAM_SCHEMA
-
+def _write_stream_batches(spark: SparkSession, batches, src: str,
+                          start: int = 0) -> None:
+    """Land a pinned micro-batch sequence under ``src`` for a file-source
+    streaming run: one single-file parquet batch per element, mtimes
+    forced monotone (``streaming.ops.land_batch_file``). Single-drain
+    callers land their literal ``batches`` once per session through
+    ``session.fixture_dir`` (input synthesis is the Kafka stand-in, not
+    the operator) and keep checkpoints/outputs in a per-run
+    ``session.run_dir`` — a reused checkpoint would turn a fresh run
+    into a resume. q_stream_resume lands INCREMENTALLY into its own run
+    dir instead: a pre-populated shared dir would leak later splits into
+    the first drain."""
     from hippo_claim_crossover_spark.io import local_frame
+    from hippo_claim_crossover_spark.streaming.ops import (
+        EVENT_STREAM_SCHEMA,
+        land_batch_file,
+    )
+
     for i, rows in enumerate(batches, start=start):
-        stage = f"{src}.stage"
         # local_frame (Arrow/pandas path): the plain-list
         # createDataFrame builds a 32-slice PYTHON RDD whose
         # coalesce(1) chains every pickled slice into one task — one
         # Python-worker round trip PER SLICE, measured ~4.4s per 2-row
         # batch write vs ~0.1s here (r15; was the dominant cost of
         # every streaming harness query in the sweep).
-        (local_frame(spark, rows, EVENT_STREAM_SCHEMA)
-         .coalesce(1).write.mode("overwrite").parquet(stage))
-        part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(src, f"batch-{i}.parquet")
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + i * 100,) * 2)
-        shutil.rmtree(stage)
+        land_batch_file(local_frame(spark, rows, EVENT_STREAM_SCHEMA),
+                        src, i)
+
+
+def _stream_fixture(spark: SparkSession, batches, name: str) -> str:
+    """The session's shared source dir holding ``batches``."""
+    return fixture_dir(spark, name, None,
+                       lambda src: _write_stream_batches(spark, batches, src))
 
 
 def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,11 +204,12 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
          ev(7, 65, "view", 5.0)],
     ]
 
-    src, run_id = _write_stream_batches(spark, batches, "late_src",
-                                         shared=True)
+    src = _stream_fixture(spark, batches, "late_src")
+    run = run_dir(spark, "q_stream_late")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    out_name = f"late_out_{run_id}"
-    run_to_memory(tumbling_agg(stream), out_name, output_mode="append")
+    out_name = f"late_out_{os.path.basename(run)}"
+    run_to_memory(tumbling_agg(stream), out_name, output_mode="append",
+                  checkpoint=f"{run}/ckpt")
     return spark.table(out_name)
 
 
@@ -308,12 +275,12 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
          ev(4, 125, 13, "click", 4.0)],
     ]
 
-    src, run_id = _write_stream_batches(spark, batches, "dedup_src",
-                                         shared=True)
+    src = _stream_fixture(spark, batches, "dedup_src")
+    run = run_dir(spark, "q_stream_dedup")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    out_name = f"stream_dedup_out_{run_id}"
+    out_name = f"stream_dedup_out_{os.path.basename(run)}"
     run_to_memory(dedup_stream(stream, ["event_id"], "30 minutes"),
-                  out_name, output_mode="append")
+                  out_name, output_mode="append", checkpoint=f"{run}/ckpt")
     return spark.table(out_name).select(
         "event_id", "ts", "user_id", "event_type", "value")
 
@@ -1372,8 +1339,8 @@ def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
         [ev(3, 120, "click", 4.0)],
         [ev(4, 130, "view", 5.0)],
     ]
-    src, run_id = _write_stream_batches(spark, batches, "chained_src",
-                                         shared=True)
+    src = _stream_fixture(spark, batches, "chained_src")
+    run = run_dir(spark, "q_stream_chained")
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     # ONE watermark for the whole chain (set by dedup_stream; Spark
     # forbids redefining it between chained stateful operators), so the
@@ -1387,8 +1354,9 @@ def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select(F.col("window.start").alias("window_start"),
                      F.col("window.end").alias("window_end"),
                      "event_type", "n_events", "sum_value"))
-    out_name = f"chained_out_{run_id}"
-    run_to_memory(agged, out_name, output_mode="append")
+    out_name = f"chained_out_{os.path.basename(run)}"
+    run_to_memory(agged, out_name, output_mode="append",
+                  checkpoint=f"{run}/ckpt")
     return spark.table(out_name)
 
 
@@ -1439,13 +1407,14 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
              ev(3, 9, "view", 3.0), ev(4, 15, "click", 10.0)]]
     run2 = [[ev(5, 90, "click", 4.0)], [ev(6, 91, "view", 5.0)]]
 
-    src, run_id = _write_stream_batches(spark, run1, "resume_src")
-    ckpt, out = f"{src}.ckpt", f"{src}.out"
+    run = run_dir(spark, "q_stream_resume")
+    src, ckpt, out = f"{run}/src", f"{run}/ckpt", f"{run}/out"
+    _write_stream_batches(spark, run1, src)
     run_to_parquet(tumbling_agg(read_event_stream(
         spark, src, max_files_per_trigger=1)), out, ckpt)
     # the restart: new files land, a FRESH query resumes from ckpt
     # into the same exactly-once file sink
-    _write_stream_batches(spark, run2, "resume_src", src_dir=src, start=1)
+    _write_stream_batches(spark, run2, src, start=1)
     run_to_parquet(tumbling_agg(read_event_stream(
         spark, src, max_files_per_trigger=1)), out, ckpt)
     return spark.read.parquet(out)
@@ -1500,10 +1469,10 @@ def q_stream_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches = [[ev(1, 0, "click", 1.0), ev(2, 4, "click", 2.0),
                 ev(3, 9, "view", 3.0), ev(4, 15, "click", 10.0)],
                [ev(5, 90, "click", 4.0)], [ev(6, 91, "view", 5.0)]]
-    src, run_id = _write_stream_batches(spark, batches, "sinkaudit",
-                                         shared=True)
-    # ckpt/out stay PER-RUN (run_id-keyed): only the input dir is shared
-    ckpt, out = f"{src}.ckpt-{run_id}", f"{src}.out-{run_id}"
+    src = _stream_fixture(spark, batches, "sinkaudit_src")
+    # ckpt/out stay PER-RUN: only the input dir is shared
+    run = run_dir(spark, "q_stream_sink_audit")
+    ckpt, out = f"{run}/ckpt", f"{run}/out"
     run_to_parquet(tumbling_agg(read_event_stream(
         spark, src, max_files_per_trigger=1)), out, ckpt)
 
@@ -1620,10 +1589,10 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = dt.datetime(2024, 1, 1, 10, 0)
     batches = [[(i + 1, base + dt.timedelta(minutes=30 * i), 1, "click",
                  float(i + 1), None)] for i in range(6)]
-    src, run_id = _write_stream_batches(spark, batches, "sinkcompact",
-                                         shared=True)
-    # ckpt/out stay PER-RUN (run_id-keyed): only the input dir is shared
-    ckpt, out = f"{src}.ckpt-{run_id}", f"{src}.out-{run_id}"
+    src = _stream_fixture(spark, batches, "sinkcompact_src")
+    # ckpt/out stay PER-RUN: only the input dir is shared
+    run = run_dir(spark, "q_stream_compact")
+    ckpt, out = f"{run}/ckpt", f"{run}/out"
     # compactInterval pinned for the run (default 10 would never compact
     # a 7-batch run); shuffle partitions shrunk for the run only — the
     # 7 micro-batches each pay per-partition state-store/task overhead
@@ -2138,17 +2107,18 @@ def q_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         cumulative_profile_exact,
     )
 
-    run_id = next(_LATE_RUN)
     ev = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props")
     src = ensure_event_batches(spark, ev, sf_dir)
+    run = run_dir(spark, "q_stream_state", sf_dir)
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
     prof = cumulative_profile_exact(stream)
-    out_name = f"state_out_{run_id}"
+    out_name = f"state_out_{os.path.basename(run)}"
     # real-table stream: partition count derives from the source bytes
     # (r16 — the pinned-fixture default is harness-sized; this stream's
     # state is data-proportional). Output is partition-count-independent.
     run_to_memory(prof, out_name, output_mode="update",
+                  checkpoint=f"{run}/ckpt",
                   partitions=sized_stream_partitions(src))
     mem = spark.table(out_name)
     return (mem.groupBy("user_id")
@@ -2201,10 +2171,8 @@ def q_stream_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_foreach_batch,
     )
 
-    run_id = next(_LATE_RUN)
-    tag = f"{spark.sparkContext.applicationId}-{run_id}"
-    src = f"/root/repo/_scratch/feb_src-{tag}"
-    out, ckpt = f"{src}.out", f"{src}.ckpt"
+    run = run_dir(spark, "q_stream_foreach", sf_dir)
+    src, out, ckpt = f"{run}/src", f"{run}/out", f"{run}/ckpt"
     ev = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props")
     for b in (0, 1):
@@ -2265,10 +2233,10 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         sized_stream_partitions,
     )
 
-    run_id = next(_LATE_RUN)
     ev = t(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props")
     src = ensure_event_batches(spark, ev, sf_dir)
+    run = run_dir(spark, "q_stream_rocksdb", sf_dir)
     key = "spark.sql.streaming.stateStore.providerClass"
     try:
         prev = spark.conf.get(key)
@@ -2276,7 +2244,7 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = None
     spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
                         "RocksDBStateStoreProvider")
-    out_name = f"rocks_out_{run_id}"
+    out_name = f"rocks_out_{os.path.basename(run)}"
     try:
         stream = read_event_stream(spark, src, max_files_per_trigger=1)
         agg = (stream
@@ -2291,6 +2259,7 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         # real-table stream: size the state partitions from source bytes
         # (r16), same rationale as q_stream_state.
         run_to_memory(agg, out_name, output_mode="complete",
+                      checkpoint=f"{run}/ckpt",
                       partitions=sized_stream_partitions(src))
     finally:
         spark.conf.set(key, prev) if prev is not None \

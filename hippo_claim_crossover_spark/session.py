@@ -17,16 +17,20 @@ import shutil
 
 from pyspark.sql import SparkSession
 
-# Run-scoped scratch output (q_sink, bucketed tables, source
-# materializations, streaming fixtures) is keyed by applicationId so
-# concurrent runs never race — but nothing else ever deletes those dirs,
-# so repeated harness runs accumulate one generation per session. Prune
-# anything carrying a different session's `local-<millis>` tag at startup,
+# Every scratch path the package writes goes through ``fixture_dir`` /
+# ``run_dir`` below: ``<root>/<applicationId>/<name>-<sf>[/r<n>]``. The
+# application id is one directory level, so concurrent runs never race —
+# but nothing else ever deletes an application's directory, so repeated
+# harness runs accumulate one per session. Prune any top-level entry
+# carrying a different session's `local-<millis>` tag at startup,
 # PROVIDED it has been idle past a safety margin: a tag-differs-only rule
 # deletes the scratch of a session that is still running concurrently
 # (observed: a check_oracle session pruned a live pytest session's
-# bucketed tables mid-suite).
-_SCRATCH_ROOTS = ("/root/repo/_scratch", "/root/repo/spark-warehouse/bktest.db")
+# bucketed tables mid-suite). The root is ``_SCRATCH_ROOTS[0]``, read at
+# call time so a harness can redirect it by assignment.
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SCRATCH_ROOTS = (os.path.join(_REPO, "_scratch"),
+                  os.path.join(_REPO, "spark-warehouse", "bktest.db"))
 _RUN_TAG = re.compile(r"local[-_](\d+)")
 _PRUNED_FOR: set[str] = set()
 _PRUNE_IDLE_SECS = 2 * 3600  # > any single harness session's lifetime
@@ -65,8 +69,8 @@ def _prune_stale_scratch(app_id: str,
     sweep): its scratch keeps fresh mtimes as it writes, so even
     bench.py's shorter 30-min margin never deletes live state — the tag
     age alone could not guarantee that for a session >idle_secs old.
-    Entries without a run tag (e.g. the binfiles fixture cache, the
-    stress corpora) are shared across sessions and kept."""
+    Entries without a run tag (e.g. the stress corpora) are shared
+    across sessions and kept."""
     import time
 
     m = _RUN_TAG.search(app_id)
@@ -96,6 +100,76 @@ def _prune_stale_scratch(app_id: str,
                     os.remove(path)
             except OSError:
                 pass
+
+
+# Fixture guard, written last; `_`-prefixed, so file sources skip it.
+_FIXTURE_DONE = "_complete"
+_RUN_NAME = re.compile(r"r(\d+)")
+
+
+def _scratch_base(spark: SparkSession, name: str, sf_dir: str | None) -> str:
+    if sf_dir is not None:
+        name = f"{name}-{os.path.basename(sf_dir.rstrip('/'))}"
+    return os.path.join(_SCRATCH_ROOTS[0],
+                        spark.sparkContext.applicationId, name)
+
+
+def _run_numbers(base: str) -> list[int]:
+    try:
+        names = os.listdir(base)
+    except FileNotFoundError:
+        return []
+    return sorted(int(m.group(1)) for m in map(_RUN_NAME.fullmatch, names)
+                  if m)
+
+
+def fixture_dir(spark: SparkSession, name: str, sf_dir: str | None,
+                write) -> str:
+    """Exists-guarded INPUT setup (the stand-in for an upstream table or
+    topic): ``write(path)`` runs once per (application, name, sf), and
+    later calls return the same directory without writing. The guard is
+    a ``_complete`` marker written after ``write`` returns, so a crashed
+    half-write is cleared and rebuilt on the next call."""
+    path = _scratch_base(spark, name, sf_dir)
+    marker = os.path.join(path, _FIXTURE_DONE)
+    if not os.path.exists(marker):
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
+        os.makedirs(path, exist_ok=True)
+        open(marker, "w").close()
+    return path
+
+
+def run_dir(spark: SparkSession, name: str, sf_dir: str | None = None) -> str:
+    """A fresh, empty directory for one run of a query whose write IS the
+    declared operator (sinks, stream checkpoints): run ``n`` of
+    (application, name, sf) is ``.../<name>-<sf>/r<n>``. A run with one
+    output writes the directory itself; a run with several parts puts
+    them inside it as named children (``src/``, ``ckpt/``, ``out/``).
+
+    Scratch stays bounded: once run ``n`` is handed out, the directories
+    of earlier runs are deleted, so a DataFrame returned by run ``n-1``
+    is invalid once run ``n`` starts — consume a result before calling
+    its query again."""
+    base = _scratch_base(spark, name, sf_dir)
+    earlier = _run_numbers(base)
+    path = os.path.join(base, f"r{earlier[-1] + 1 if earlier else 1}")
+    os.makedirs(path)
+    for n in earlier:
+        shutil.rmtree(os.path.join(base, f"r{n}"), ignore_errors=True)
+    return path
+
+
+def last_output(spark: SparkSession, name: str,
+                sf_dir: str | None = None) -> str:
+    """The directory of the latest :func:`run_dir` run of (application,
+    name, sf) — how tests inspect what a query wrote."""
+    base = _scratch_base(spark, name, sf_dir)
+    runs = _run_numbers(base)
+    if not runs:
+        raise FileNotFoundError(f"no run of {name!r} under {base}")
+    return os.path.join(base, f"r{runs[-1]}")
+
 
 # Defaults tuned for the local[32] test harness. On a 1000-executor cluster
 # the operative settings (shuffle partitions ~= 2-3x total cores, AQE

@@ -323,27 +323,21 @@ def ensure_event_batches(spark: SparkSession, df: DataFrame,
     stand-in for a Kafka topic), not the measured operator — the same
     exists-guard discipline as the binaryFile and bucketed-table
     fixtures. CHECKPOINTS stay per-run (a reused checkpoint would turn
-    a fresh run into a resume); only the source dir is shared, keyed by
-    session app-id (so the stale-scratch pruner reclaims it) + sf tag.
-    The ``_complete`` marker is written last and is invisible to the
-    file source (``_``-prefixed), so a crashed half-write is rebuilt."""
+    a fresh run into a resume); only the source dir is shared, as a
+    ``session.fixture_dir`` keyed by session app-id (so the
+    stale-scratch pruner reclaims it) + sf tag."""
     import hashlib
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    from hippo_claim_crossover_spark.session import fixture_dir
+
     # r16 (ADVICE): key the shared dir by the projected schema too — two
     # callers with identical defaults but different projections must
     # never read each other's fixture.
     schema_tag = hashlib.md5(
         df.schema.simpleString().encode()).hexdigest()[:8]
-    src = ("/root/repo/_scratch/"
-           f"{prefix}-{spark.sparkContext.applicationId}"
-           f"-{sf_tag}-{key_col}-{n_batches}-{schema_tag}")
-    marker = os.path.join(src, "_complete")
-    if not os.path.exists(marker):
-        write_batch_files(df, src, key_col, n_batches)
-        with open(marker, "w") as f:
-            f.write("ok")
-    return src
+    return fixture_dir(
+        spark, f"{prefix}-{key_col}-{n_batches}-{schema_tag}", sf_dir,
+        lambda src: write_batch_files(df, src, key_col, n_batches))
 
 
 def write_batch_files(df: DataFrame, src_dir: str, key_col: str,

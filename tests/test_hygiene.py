@@ -21,6 +21,9 @@ This test walks the package AST and fails on any NEW ``.collect()`` /
 quietly turns an operator into a driver loop fails the suite instead of a
 100 TB run. (``bench.py`` / ``tools/`` / ``tests/`` are exempt — they are
 harness code and legitimately materialize results.)
+
+A second lint keeps every scratch path behind ``session.py``'s API: no
+other package module may spell a scratch root or checkout path.
 """
 
 from __future__ import annotations
@@ -172,3 +175,36 @@ def test_committed_freshness_artifact_matches_the_live_gate_window():
         d = json.load(f)
     assert d["gate_window"] == GATE_ORDER[:GATE_WINDOW]
     assert not d["failing"], d["failing"]
+
+
+# the checkout path (what a hard-coded scratch root spells) and the
+# scratch directory name
+SCRATCH_LITERALS = (os.path.dirname(PKG), "_scratch")
+
+
+def test_scratch_paths_come_only_from_the_session_api():
+    """Every scratch path in the package goes through ``session.py``
+    (``fixture_dir`` / ``run_dir`` / ``last_output``): a hard-coded
+    scratch root or checkout path in any other module — in a string
+    literal or a comment — fails here."""
+    import io
+    import tokenize
+
+    hits = []
+    for root, _dirs, files in os.walk(PKG):
+        for fname in files:
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, PKG)
+            if not fname.endswith(".py") or rel == "session.py":
+                continue
+            with open(path) as f:
+                src = f.read()
+            texts = [(n.lineno, n.value) for n in ast.walk(ast.parse(src))
+                     if isinstance(n, ast.Constant)
+                     and isinstance(n.value, str)]
+            texts += [(tok.start[0], tok.string) for tok in
+                      tokenize.generate_tokens(io.StringIO(src).readline)
+                      if tok.type == tokenize.COMMENT]
+            hits += [f"{rel}:{line} {lit!r}" for line, text in texts
+                     for lit in SCRATCH_LITERALS if lit in text]
+    assert not hits, f"hard-coded scratch path(s) outside session.py: {hits}"

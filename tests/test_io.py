@@ -4,10 +4,12 @@ and write-side coalesce bounds file counts."""
 from __future__ import annotations
 
 import glob
+import os
 
 from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.io import load_table, write_parquet
+from hippo_claim_crossover_spark.session import last_output
 
 
 def test_partitioned_write_prunes_on_read(spark, sf_dir, tmp_path):
@@ -48,11 +50,8 @@ def test_clustered_sink_ranges_are_disjoint(spark, sf_dir):
 
     # executing the query materializes the clustered copy
     assert ALL_SPECS["q_sink_clustered"].fn(spark, sf_dir).count() > 0
-    from hippo_claim_crossover_spark.plans.sources import _tag
-
-    paths = glob.glob(
-        f"/root/repo/_scratch/src_clustered-{_tag(spark, sf_dir)}/"
-        "part-*.parquet")
+    out = last_output(spark, "q_sink_clustered", sf_dir)
+    paths = glob.glob(os.path.join(out, "part-*.parquet"))
     assert len(paths) >= 2
     spans = []
     for p in paths:
@@ -106,12 +105,10 @@ def test_zorder_sink_has_2d_locality(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from hippo_claim_crossover_spark.plans import ALL_SPECS
-    from hippo_claim_crossover_spark.plans.sources import _tag
 
     assert ALL_SPECS["q_sink_zorder"].fn(spark, sf_dir).count() > 0
-    paths = glob.glob(
-        f"/root/repo/_scratch/src_zorder-{_tag(spark, sf_dir)}/"
-        "part-*.parquet")
+    out = last_output(spark, "q_sink_zorder", sf_dir)
+    paths = glob.glob(os.path.join(out, "part-*.parquet"))
     assert len(paths) >= 4
     spans = {"l_partkey": [], "l_suppkey": []}
     domain = {}
@@ -130,6 +127,24 @@ def test_zorder_sink_has_2d_locality(spark, sf_dir):
         full = domain[col][1] - domain[col][0]
         mean_frac = sum(ss) / len(ss) / full
         assert mean_frac < 0.7, (col, mean_frac)
+
+
+def test_sink_runs_reclaim_earlier_run_dirs(spark, sf_dir):
+    """Per-run scratch stays bounded: after three q_sink_zorder runs in
+    one session exactly one zorder run directory remains under the
+    application's scratch dir, and the third run's frame still reads."""
+    from hippo_claim_crossover_spark.plans import ALL_SPECS
+    from hippo_claim_crossover_spark.session import _SCRATCH_ROOTS
+
+    fn = ALL_SPECS["q_sink_zorder"].fn
+    want = sorted(fn(spark, sf_dir).collect())
+    fn(spark, sf_dir)
+    third = fn(spark, sf_dir)
+    app_dir = os.path.join(_SCRATCH_ROOTS[0],
+                           spark.sparkContext.applicationId)
+    runs = glob.glob(os.path.join(app_dir, "*zorder*", "r*"))
+    assert runs == [last_output(spark, "q_sink_zorder", sf_dir)], runs
+    assert sorted(third.collect()) == want
 
 
 def test_pyds_stream_writer_round_trip(spark, tmp_path):

@@ -1813,15 +1813,13 @@ def test_backfill_partition_touches_only_target_dir(spark):
     import glob
     import os
 
-    from hippo_claim_crossover_spark.plans.sources import _SCRATCH, _tag
+    from hippo_claim_crossover_spark.session import last_output
 
     rows = ALL_SPECS["q_backfill_partition"].fn(spark, SF_DIR).collect()
     assert len(rows) == 5
     for r in rows:
         assert r["was_backfilled"] == (r["event_type"] == "purchase"), r
         assert r["n_rows"] > 0, r
-
-    out = os.path.join(_SCRATCH, f"src_backfill-{_tag(spark, SF_DIR)}")
 
     def snap(skip_purchase):
         return {p: (os.path.getsize(p), os.path.getmtime(p))
@@ -1832,6 +1830,7 @@ def test_backfill_partition_touches_only_target_dir(spark):
     # must be bit-identical run to run (idempotent reprocessing)
     rows2 = ALL_SPECS["q_backfill_partition"].fn(spark, SF_DIR).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
+    out = last_output(spark, "q_backfill_partition", SF_DIR)
     # now replay ONLY the dynamic-overwrite leg against the laid-down
     # table and assert the non-target dirs are byte-identical (same
     # files, sizes, AND mtimes — untouched, not rewritten-equal),
@@ -2267,8 +2266,9 @@ def test_sink_pyds_stream_batches_survive_and_round_trip(spark):
         assert r["n_events"] == truth[r["event_type"]]["n"], r
         assert r["sum_micros"] == truth[r["event_type"]]["s"], r
     # inspect the sink directory the run materialized
-    from hippo_claim_crossover_spark.plans.sources import _SCRATCH, _tag
-    out = os.path.join(_SCRATCH, f"src_pydsws-{_tag(spark, SF_DIR)}")
+    from hippo_claim_crossover_spark.session import last_output
+    out = os.path.join(last_output(spark, "q_sink_pyds_stream", SF_DIR),
+                       "out")
     manifests = sorted(glob.glob(os.path.join(out, "_SUCCESS-*")))
     assert len(manifests) == 3, manifests
     named = set()

@@ -1,15 +1,22 @@
-"""Unit tests for the session-scoped scratch pruner.
+"""Unit tests for the session's scratch-path API and stale-scratch pruner.
 
 Pins the r9 ADVICE fix: pruning requires BOTH an old run tag and true
 mtime-idleness, so a live concurrent session (old tag, fresh writes) is
-never deleted even under bench.py's shorter 30-minute margin.
+never deleted even under bench.py's shorter 30-minute margin. Pins the
+scratch layout ``<root>/<applicationId>/<name>-<sf>[/r<n>]``: fixtures
+are written once, runs are fresh and reclaim their predecessors.
 """
 from __future__ import annotations
 
 import os
 import time
+from types import SimpleNamespace
+
+import pytest
 
 import hippo_claim_crossover_spark.session as sess
+
+_SPARK = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="local-7"))
 
 
 def _touch(path: str, mtime: float) -> None:
@@ -66,3 +73,49 @@ def test_prune_keeps_untagged_and_own_entries(tmp_path, monkeypatch):
     sess._prune_stale_scratch(f"local-{my_ms}", idle_secs=1800)
     assert mine.exists(), "current session's own scratch was deleted"
     assert shared.exists(), "untagged shared fixture was deleted"
+
+
+def test_fixture_dir_writes_once_and_rebuilds_a_crashed_write(
+        tmp_path, monkeypatch):
+    monkeypatch.setattr(sess, "_SCRATCH_ROOTS", (str(tmp_path),))
+    calls = []
+
+    def write(path):
+        calls.append(path)
+        _touch(os.path.join(path, "part-0"), time.time())
+
+    def crash(path):
+        _touch(os.path.join(path, "half"), time.time())
+        raise RuntimeError("write died")
+
+    with pytest.raises(RuntimeError):
+        sess.fixture_dir(_SPARK, "csv", "/data/sf0.01/", crash)
+    path = sess.fixture_dir(_SPARK, "csv", "/data/sf0.01/", write)
+    assert path == str(tmp_path / "local-7" / "csv-sf0.01")
+    assert sess.fixture_dir(_SPARK, "csv", "/data/sf0.01/", write) == path
+    assert calls == [path]
+    assert sorted(os.listdir(path)) == ["_complete", "part-0"]
+
+
+def test_run_dir_is_fresh_and_reclaims_earlier_runs(tmp_path, monkeypatch):
+    monkeypatch.setattr(sess, "_SCRATCH_ROOTS", (str(tmp_path),))
+    with pytest.raises(FileNotFoundError):
+        sess.last_output(_SPARK, "q_sink", "/data/sf0.01")
+    first = sess.run_dir(_SPARK, "q_sink", "/data/sf0.01")
+    _touch(os.path.join(first, "part-0"), time.time())
+    second = sess.run_dir(_SPARK, "q_sink", "/data/sf0.01")
+    assert second == str(tmp_path / "local-7" / "q_sink-sf0.01" / "r2")
+    assert os.listdir(second) == []
+    assert not os.path.exists(first)
+    assert sess.last_output(_SPARK, "q_sink", "/data/sf0.01") == second
+    # no sf: one level shorter; other (name, sf) keys are untouched
+    assert sess.run_dir(_SPARK, "q_stream_late") == str(
+        tmp_path / "local-7" / "q_stream_late" / "r1")
+    assert os.path.isdir(second)
+
+
+def test_scratch_root_is_read_at_call_time(tmp_path, monkeypatch):
+    monkeypatch.setattr(sess, "_SCRATCH_ROOTS", (str(tmp_path / "a"),))
+    assert sess.run_dir(_SPARK, "q").startswith(str(tmp_path / "a"))
+    monkeypatch.setattr(sess, "_SCRATCH_ROOTS", (str(tmp_path / "b"),))
+    assert sess.run_dir(_SPARK, "q").startswith(str(tmp_path / "b"))

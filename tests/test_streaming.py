@@ -429,7 +429,7 @@ def test_chained_stateful_operators_in_one_query(spark, stream_src):
     assert len(got) >= len(want) - 2
 
 
-def test_stream_resume_state_survives_restart(spark):
+def test_stream_resume_state_survives_restart(spark, tmp_path):
     """The q_stream_resume contract, asserted directly with the sink
     snapshotted BETWEEN the two runs: run 1 finalizes nothing (zero
     parquet data files in the sink after it stops), run 2 shares only
@@ -454,8 +454,8 @@ def test_stream_resume_state_survives_restart(spark):
              ev(3, 9, "view", 3.0), ev(4, 15, "click", 10.0)]]
     run2 = [[ev(5, 90, "click", 4.0)], [ev(6, 91, "view", 5.0)]]
 
-    src, _ = _write_stream_batches(spark, run1, "resume_test")
-    ckpt, out = f"{src}.ckpt", f"{src}.out"
+    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
+    _write_stream_batches(spark, run1, src)
     run_to_parquet(tumbling_agg(read_event_stream(
         spark, src, max_files_per_trigger=1)), out, ckpt)
     # run 1's watermark (9:45) finalizes no window: the sink commits
@@ -464,7 +464,7 @@ def test_stream_resume_state_survives_restart(spark):
     run1_files = set(glob.glob(f"{out}/part-*.parquet"))
     assert spark.read.parquet(out).count() == 0
 
-    _write_stream_batches(spark, run2, "resume_test", src_dir=src, start=1)
+    _write_stream_batches(spark, run2, src, start=1)
     run_to_parquet(tumbling_agg(read_event_stream(
         spark, src, max_files_per_trigger=1)), out, ckpt)
     run2_files = set(glob.glob(f"{out}/part-*.parquet")) - run1_files
@@ -480,7 +480,7 @@ def test_stream_resume_state_survives_restart(spark):
     assert spark.read.parquet(*sorted(run2_files)).count() == len(rows)
 
 
-def test_stream_drains_scope_shuffle_partitions(spark):
+def test_stream_drains_scope_shuffle_partitions(spark, tmp_path):
     """The drain helpers (r15) must plan the stream at the harness
     stream-partition count and RESTORE the session conf afterwards —
     a leaked value would silently re-plan every later batch query."""
@@ -497,8 +497,8 @@ def test_stream_drains_scope_shuffle_partitions(spark):
     base = dt.datetime(2024, 1, 1, 10, 0)
     batches = [[(1, base, 1, "click", 1.0, None),
                 (2, base + dt.timedelta(minutes=90), 1, "view", 2.0, None)]]
-    src, _ = _write_stream_batches(spark, batches, "scope_test")
-    ckpt, out = f"{src}.ckpt", f"{src}.out"
+    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
+    _write_stream_batches(spark, batches, src)
     ops.run_to_parquet(ops.tumbling_agg(ops.read_event_stream(spark, src)),
                        out, ckpt)
     assert spark.conf.get(key) == before, "session conf must be restored"

@@ -40,9 +40,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from stress_decade import TABLES_FOR, materialize  # noqa: E402
 
 from hippo_claim_crossover_spark.plans import ALL_SPECS  # noqa: E402
-from hippo_claim_crossover_spark.session import get_spark  # noqa: E402
+from hippo_claim_crossover_spark.session import (  # noqa: E402
+    _SCRATCH_ROOTS,
+    get_spark,
+)
 
-SCRATCH = "/root/repo/_scratch/century"
+SCRATCH = os.path.join(_SCRATCH_ROOTS[0], "century")
 DEFAULT_QUERIES = ["q_percentile", "q_join_setsim", "q_recommend"]
 
 

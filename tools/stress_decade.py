@@ -4,10 +4,10 @@ exponents (the r8 verdict's last open scale item: the 2×-of-baseline
 bench gate is only ever measured at sf0.1; this measures one more decade
 so SCALE.md can show the exponent, not extrapolate it).
 
-Method: each fixture table a target query reads is materialized to
-``_scratch`` twice — once as a single key-shifted replica (the 1× leg,
-so both legs share file layout and compression) and once as the union of
-10 key-shifted replicas (the sf1-like leg). Key columns shift by
+Method: each fixture table a target query reads is materialized under
+the session scratch root twice — once as a single key-shifted replica
+(the 1× leg, so both legs share file layout and compression) and once as
+the union of 10 key-shifted replicas (the sf1-like leg). Key columns shift by
 ``replica × 10_000_000`` per namespace so joins stay consistent inside a
 replica and never match across replicas (baskets, orders and customers
 grow 10× in COUNT, not 10× in size — the realistic growth direction).
@@ -42,9 +42,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from hippo_claim_crossover_spark.plans import ALL_SPECS  # noqa: E402
-from hippo_claim_crossover_spark.session import get_spark  # noqa: E402
+from hippo_claim_crossover_spark.session import (  # noqa: E402
+    _SCRATCH_ROOTS,
+    get_spark,
+)
 
-SCRATCH = "/root/repo/_scratch/decade"
+SCRATCH = os.path.join(_SCRATCH_ROOTS[0], "decade")
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 DEFAULT_QUERIES = [

@@ -25,9 +25,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from hippo_claim_crossover_spark.operators import dedup as ops  # noqa: E402
-from hippo_claim_crossover_spark.session import get_spark  # noqa: E402
+from hippo_claim_crossover_spark.session import (  # noqa: E402
+    _SCRATCH_ROOTS,
+    get_spark,
+)
 
-SCRATCH = "/root/repo/_scratch"
+SCRATCH = _SCRATCH_ROOTS[0]
 VOCAB = ("key agg row scan slow fast table value part hash merge batch "
          "spark line sort window customer query big small the a data column "
          "join order group stream").split()

@@ -25,10 +25,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from hippo_claim_crossover_spark.operators import similarity as ops  # noqa: E402
-from hippo_claim_crossover_spark.session import get_spark  # noqa: E402
+from hippo_claim_crossover_spark.session import (  # noqa: E402
+    _SCRATCH_ROOTS,
+    get_spark,
+)
 
 DIM = 64
-SCRATCH = "/root/repo/_scratch"
+SCRATCH = _SCRATCH_ROOTS[0]
 
 
 def make_table(path: str, n: int, seed: int = 42) -> None:
