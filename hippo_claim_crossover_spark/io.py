@@ -6,9 +6,11 @@ render (``:316``). Our engine's canonical storage is columnar Parquet
 (SURVEY.md §1.4): schema-carrying, splittable, predicate-pushdown-capable —
 the properties a 100 TB scan actually needs.
 
-Schemas are declared explicitly (never ``inferSchema`` on a production
-path, SURVEY.md §1.4) and asserted against what the files carry, so a
-fixture drift fails loudly instead of silently changing types.
+Schemas are declared explicitly (never inferred on a production path,
+SURVEY.md §1.4): every fixture read passes its ``SCHEMAS`` entry, so a load
+launches no Spark job. tests/test_io.py asserts each fixture's footer
+schema equals its entry, so a fixture drift fails a test instead of
+silently changing types.
 """
 
 from __future__ import annotations
@@ -129,68 +131,14 @@ def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table; Parquet carries the schema, Catalyst prunes
-    columns/pushes filters into the scan automatically."""
+    """Read one fixture table with its declared ``SCHEMAS`` entry. Passing
+    the schema skips parquet schema inference, which would otherwise run
+    a footer-reading Spark job on every load; Catalyst still prunes
+    columns and pushes filters into the scan. A file whose footer does not
+    match (e.g. a TIMESTAMP(NANOS) ``ts``) fails when the scan executes."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(SCHEMAS)}")
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Current fixtures store ``ts`` as plain TIMESTAMP(MICROS) (untagged,
-    so Spark resolves TIMESTAMP_NTZ — the same type ``o_orderdate`` /
-    ``l_shipdate`` carry, and what DuckDB's naive TIMESTAMP compares
-    against). Earlier fixture generations stored TIMESTAMP(NANOS), which
-    Spark's parquet schema converter rejects at read-resolution time; keep
-    that read path as a fallback so the loader works against either
-    generation of files.
-
-    In the fallback, ``ts div 1000`` is exact LONG integer division (a
-    double division would round at 2^53 and can flip the last
-    microsecond) — the same truncation DuckDB applies casting
-    TIMESTAMP_NS → TIMESTAMP; the ``timestamp_micros`` result (LTZ) is
-    cast to ``timestamp_ntz`` so both read paths emit the declared schema
-    type and downstream ts-derived columns cannot flip type with the
-    fixture generation.
-
-    The primary read passes the declared schema explicitly, so the ts
-    type does not silently depend on
-    ``spark.sql.parquet.inferTimestampNTZ.enabled``; only the nanos
-    schema-conversion failure falls through to the legacy path — any
-    other failure (missing file, corrupt footer) re-raises as itself.
-    The legacy conf is scoped to the read: the parquet relation captures
-    it at analysis time, so save/restore keeps the session's handling of
-    any other TIMESTAMP(NANOS) parquet unchanged."""
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        # Footer probe: schema inference is where a TIMESTAMP(NANOS)
-        # footer throws (an explicit-schema read would defer the failure
-        # to execution time, past this fallback).
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    except AnalysisException:  # legacy nanos footer: conversion throws
-        pass
-    else:
-        return spark.read.schema(SCHEMAS["events"]).parquet(
-            f"{sf_dir}/events.parquet")
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    return raw.select(
-        "event_id",
-        F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz")
-        .alias("ts"),
-        "user_id", "event_type", "value", "props",
-    )
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str,

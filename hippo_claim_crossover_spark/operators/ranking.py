@@ -26,27 +26,52 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
+def _ranged(df: DataFrame, keys: list[str],
+            n_partitions: int | None) -> DataFrame:
+    """``df`` range-partitioned on ``keys``, with its partition id as
+    ``_pid``. Every caller reads the result twice: the rows, and the
+    per-partition counts or totals that become prefix offsets. Range
+    bounds are sampled per exchange (Spark seeds the sample with the RDD
+    id), so the offsets are only right if both reads share ONE exchange
+    — q_curriculum ranked past its total at 4 partitions when they did
+    not. Spark reuses an exchange only if both reads take the same
+    columns from it, and column pruning would narrow the counts read to
+    the keys. So ``_pid`` references every column of ``df`` in a branch
+    that never runs (``spark_partition_id() >= 0`` always holds, but the
+    optimizer cannot fold it): no read prunes below the exchange, and
+    the second read reuses the first. Pass only the columns you need."""
+    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
+    pid = F.spark_partition_id()
+    every_col = F.length(F.to_json(F.struct(*df.columns)))
+    return (df.repartitionByRange(parts, *[F.col(c) for c in keys])
+            .withColumn("_pid", F.when(pid >= 0, pid).otherwise(every_col)))
+
+
 def global_rank(df: DataFrame, order_cols: list[str],
                 n_partitions: int | None = None,
-                out_col: str = "_rank") -> DataFrame:
+                out_col: str = "_rank",
+                total_col: str | None = None) -> DataFrame:
     """Append the exact 1-based global rank of each row under
     ``order_cols`` (ascending, unique key) with no single-partition
     stage: range-shuffle + per-partition window + broadcast prefix
-    offsets. Adds ``out_col``; drops nothing."""
-    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
-              .withColumn("_pid", F.spark_partition_id()))
+    offsets. Adds ``out_col`` (and the total row count as ``total_col``,
+    if given); drops nothing."""
     local_w = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = ranged.withColumn("_lrn", F.row_number().over(local_w))
+    local = _ranged(df, order_cols, n_partitions).withColumn(
+        "_lrn", F.row_number().over(local_w))
     counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    # Prefix offsets over the tiny per-partition counts table (≤ parts
-    # rows): a single-partition window HERE is over partition COUNTS,
+    # Prefix offsets over the tiny per-partition counts table (one row
+    # per partition): a single-partition window HERE is over COUNTS,
     # not data — broadcast-sized by construction.
-    off_w = (Window.orderBy("_pid")
-             .rowsBetween(Window.unboundedPreceding, -1))
+    pid_w = Window.orderBy("_pid")
+    off_w = pid_w.rowsBetween(Window.unboundedPreceding, -1)
+    extra = ([F.sum("_cnt").over(pid_w.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias(total_col)] if total_col else [])
     offsets = counts.select(
         "_pid",
-        F.coalesce(F.sum("_cnt").over(off_w), F.lit(0)).alias("_off"))
+        F.coalesce(F.sum("_cnt").over(off_w), F.lit(0)).alias("_off"),
+        *extra)
     return (local.join(F.broadcast(offsets), "_pid")
             .withColumn(out_col, F.col("_lrn") + F.col("_off"))
             .drop("_pid", "_lrn", "_off"))
@@ -87,12 +112,9 @@ def grouped_global_rank(df: DataFrame, group_cols: list[str],
     (_pid ++ group) instead (same plan, one more exchange over the
     already-aggregated counts table; never an OOM).
     """
-    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    keys = [F.col(c) for c in group_cols + order_cols]
-    ranged = (df.repartitionByRange(parts, *keys)
-              .withColumn("_pid", F.spark_partition_id()))
     local_w = Window.partitionBy("_pid", *group_cols).orderBy(*order_cols)
-    local = ranged.withColumn("_lrn", F.row_number().over(local_w))
+    local = _ranged(df, group_cols + order_cols, n_partitions).withColumn(
+        "_lrn", F.row_number().over(local_w))
     counts = (local.groupBy("_pid", *group_cols)
               .agg(F.count(F.lit(1)).alias("_cnt")))
     off_w = (Window.partitionBy(*group_cols).orderBy("_pid")
@@ -119,13 +141,10 @@ def grouped_histogram_cdf(hist: DataFrame, group_cols: list[str],
     :func:`grouped_global_rank`, but summing multiplicities instead of
     counting rows. Rows must be unique per (group, value); NULLs are
     the caller's problem."""
-    parts = n_partitions or hist.sparkSession.sparkContext.defaultParallelism
-    keys = [F.col(c) for c in group_cols + [value_col]]
-    ranged = (hist.repartitionByRange(parts, *keys)
-              .withColumn("_pid", F.spark_partition_id()))
     local_w = (Window.partitionBy("_pid", *group_cols).orderBy(value_col)
                .rowsBetween(Window.unboundedPreceding, 0))
-    local = ranged.withColumn("_lcum", F.sum(cnt_col).over(local_w))
+    local = _ranged(hist, group_cols + [value_col], n_partitions).withColumn(
+        "_lcum", F.sum(cnt_col).over(local_w))
     totals = (local.groupBy("_pid", *group_cols)
               .agg(F.sum(cnt_col).alias("_tot")))
     off_w = (Window.partitionBy(*group_cols).orderBy("_pid")
@@ -395,13 +414,11 @@ def distributed_ntile(df: DataFrame, n: int, order_cols: list[str],
                       n_partitions: int | None = None) -> DataFrame:
     """Exact ``ntile(n) OVER (ORDER BY order_cols)`` without the
     single-partition sort: :func:`global_rank` + the closed-form
-    :func:`ntile_bucket` (total row count rides a broadcast 1-row
-    aggregate). Results are bit-identical to the window ntile for a
+    :func:`ntile_bucket` (the total row count rides the broadcast
+    offsets table). Results are bit-identical to the window ntile for a
     unique order key — the declared query's DuckDB oracle stays the
     window formulation and hash-matches."""
-    ranked = global_rank(df, order_cols, n_partitions)
-    total = ranked.agg(F.count(F.lit(1)).alias("_total"))
-    return (ranked.join(F.broadcast(total))
+    return (global_rank(df, order_cols, n_partitions, total_col="_total")
             .withColumn(out_col,
                         ntile_bucket(F.col("_rank"), F.col("_total"), n))
             .drop("_rank", "_total"))
@@ -424,12 +441,9 @@ def global_cumsum(df: DataFrame, order_cols: list[str],
     what makes the prefix sums well-defined).  Sums must be integral
     (long) for the offsets to stay exact.
     """
-    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
-              .withColumn("_pid", F.spark_partition_id()))
     local_w = (Window.partitionBy("_pid").orderBy(*order_cols)
                .rowsBetween(Window.unboundedPreceding, 0))
-    local = ranged
+    local = _ranged(df, order_cols, n_partitions)
     for c in sum_cols:
         local = local.withColumn(f"_l{c}", F.sum(c).over(local_w))
     totals = local.groupBy("_pid").agg(

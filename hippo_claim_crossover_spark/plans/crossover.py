@@ -150,7 +150,7 @@ def q_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.count(F.lit(1)).alias("n_orders"))
     )
     agg.coalesce(1).write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return spark.read.schema(agg.schema).parquet(out)
 
 
 ORACLE_SINK = f"""

@@ -986,6 +986,12 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The DuckDB oracle replays all five stages as one WITH RECURSIVE
     chain, so a hash match proves the full composition end-to-end.
+
+    Counter convention: every stage counter is a BIGINT, never NULL. A
+    source with no survivors at some stage reports 0 there and at every
+    later stage (``coalesce(..., 0)`` on both engines), so a source whose
+    documents all fall below QUALITY_FLOOR still gets its row, with its
+    ``n_input`` and zeros (tests/test_queries.py).
     """
     from pyspark.sql.window import Window
 

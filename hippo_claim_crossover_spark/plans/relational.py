@@ -916,7 +916,7 @@ def q_histogram_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         distributed_ntile,
     )
 
-    o = t(spark, sf_dir, "orders")
+    o = t(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
     return (
         distributed_ntile(o, 10, ["o_totalprice", "o_orderkey"],
                           out_col="decile")

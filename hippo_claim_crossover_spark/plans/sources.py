@@ -401,11 +401,11 @@ def q_sink_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates; the oracle reproduces it from the raw table, proving the
     rewrite is lossless."""
     out = run_dir(spark, "q_sink_clustered", sf_dir)
-    (t(spark, sf_dir, "lineitem")
-     .repartitionByRange(8, F.col("l_shipdate"))
-     .sortWithinPartitions("l_shipdate")
-     .write.mode("overwrite").parquet(out))
-    li = spark.read.parquet(out)
+    clustered = (t(spark, sf_dir, "lineitem")
+                 .repartitionByRange(8, F.col("l_shipdate"))
+                 .sortWithinPartitions("l_shipdate"))
+    clustered.write.mode("overwrite").parquet(out)
+    li = spark.read.schema(clustered.schema).parquet(out)
     return (
         li.where((F.col("l_shipdate") >= "1995-01-01")
                  & (F.col("l_shipdate") < "1995-04-01"))
@@ -457,13 +457,13 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = z_value(
         minmax_norm(F.col("l_partkey"), F.col("plo"), F.col("phi")),
         minmax_norm(F.col("l_suppkey"), F.col("slo"), F.col("shi")))
-    (li.join(F.broadcast(mm))
-     .withColumn("_z", z)
-     .repartitionByRange(8, F.col("_z"))
-     .sortWithinPartitions("_z")
-     .drop("_z", "plo", "phi", "slo", "shi")
-     .write.mode("overwrite").parquet(out))
-    li = spark.read.parquet(out)
+    zordered = (li.join(F.broadcast(mm))
+                .withColumn("_z", z)
+                .repartitionByRange(8, F.col("_z"))
+                .sortWithinPartitions("_z")
+                .drop("_z", "plo", "phi", "slo", "shi"))
+    zordered.write.mode("overwrite").parquet(out)
+    li = spark.read.schema(zordered.schema).parquet(out)
     return (
         li.where((F.col("l_partkey") < 400)
                  & (F.col("l_suppkey") < 40))
@@ -576,7 +576,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_dir(spark, "q_compact_files", sf_dir)
     src.repartition(COMPACT_FRAG_FILES) \
         .write.mode("overwrite").parquet(f"{out}/frag")
-    spark.read.parquet(f"{out}/frag") \
+    spark.read.schema(src.schema).parquet(f"{out}/frag") \
         .repartition(COMPACT_TARGET_FILES) \
         .write.mode("overwrite").parquet(f"{out}/compact")
 
@@ -593,7 +593,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rows/checksum = exact sums of sums). The rewrite legs above
         # remain linear by definition — compaction physically moves
         # every byte — but the audit leg is now metadata-sized.
-        df = (spark.read.parquet(f"{out}/{leg}")
+        df = (spark.read.schema(src.schema).parquet(f"{out}/{leg}")
               .withColumn("_f", F.input_file_name()))
         h = hex2long(F.md5(F.concat_ws("#", *cols)))
         per_file = df.groupBy("_f").agg(

@@ -94,7 +94,8 @@ def stream_shuffle_scope(spark: SparkSession,
     finally:
         spark.conf.set(key, prev)
 
-# Schema of the *converted* event stream (µs timestamps — see io._load_events).
+# Schema of the event-stream parquet files: the ``events`` columns of
+# io.SCHEMAS (µs timestamps), with ``ts`` read as TIMESTAMP, not _NTZ.
 EVENT_STREAM_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.TimestampType()),

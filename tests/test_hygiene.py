@@ -23,7 +23,9 @@ quietly turns an operator into a driver loop fails the suite instead of a
 harness code and legitimately materialize results.)
 
 A second lint keeps every scratch path behind ``session.py``'s API: no
-other package module may spell a scratch root or checkout path.
+other package module may spell a scratch root or checkout path. A third
+keeps parquet reads on a declared schema (inference costs a Spark job per
+read).
 """
 
 from __future__ import annotations
@@ -208,3 +210,63 @@ def test_scratch_paths_come_only_from_the_session_api():
             hits += [f"{rel}:{line} {lit!r}" for line, text in texts
                      for lit in SCRATCH_LITERALS if lit in text]
     assert not hits, f"hard-coded scratch path(s) outside session.py: {hits}"
+
+
+# (relative path, top-level function) pairs whose parquet reads may infer
+# the schema — every other ``read.parquet(...)`` in the package declares it.
+INFERRED_READS = {
+    # the query under test IS footer reconciliation (mergeSchema)
+    ("plans/sources.py", "q_src_evolve"),
+    # streaming file-sink read-backs: the schema is the stream's output
+    ("plans/timeseries.py", "q_stream_resume"),
+    ("plans/timeseries.py", "q_stream_sink_audit"),
+    ("plans/timeseries.py", "q_stream_compact"),
+    ("plans/timeseries.py", "q_stream_foreach"),
+}
+
+
+def _parquet_reads() -> list[tuple[str, str, int, bool]]:
+    """Every ``<...>.read<...>.parquet(...)`` call in the package as
+    (relative path, enclosing top-level function, line, has ``.schema``
+    in the same call chain)."""
+    reads = []
+    for root, _dirs, files in os.walk(PKG):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, PKG)
+            with open(path) as f:
+                tree = ast.parse(f.read(), filename=rel)
+            for top in tree.body:
+                owner = getattr(top, "name", "<module>")
+                for node in ast.walk(top):
+                    if not (isinstance(node, ast.Call)
+                            and isinstance(node.func, ast.Attribute)
+                            and node.func.attr == "parquet"):
+                        continue
+                    chain, recv = [], node.func.value
+                    while isinstance(recv, (ast.Call, ast.Attribute)):
+                        if isinstance(recv, ast.Attribute):
+                            chain.append(recv.attr)
+                            recv = recv.value
+                        else:
+                            recv = recv.func
+                    if "read" in chain:
+                        reads.append((rel, owner, node.lineno,
+                                      "schema" in chain))
+    return reads
+
+
+def test_parquet_reads_declare_their_schema():
+    """A parquet read without ``.schema(...)`` makes Spark infer the
+    schema from the footers — one extra Spark job per read. Fixture
+    loads pass ``io.SCHEMAS`` and sink read-backs pass the written
+    frame's schema; only ``INFERRED_READS`` may infer."""
+    reads = _parquet_reads()
+    hits = [f"{rel}:{line} in {owner}" for rel, owner, line, declared
+            in reads if not declared and (rel, owner) not in INFERRED_READS]
+    assert not hits, f"parquet read(s) without a declared schema: {hits}"
+    stale = INFERRED_READS - {(rel, owner) for rel, owner, _, declared
+                              in reads if not declared}
+    assert not stale, f"INFERRED_READS entries no longer infer: {stale}"

@@ -304,3 +304,32 @@ def test_local_frame_stays_on_the_arrow_path(spark):
     plan2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan2 and "ExistingRDD" not in plan2
     assert df2.collect() == [(7, "z")]
+
+
+def test_fixture_footers_match_the_declared_schemas(spark, sf_dir):
+    """``load_table`` reads with ``SCHEMAS`` instead of inferring, so the
+    declared schema must be exactly what every fixture's footer carries
+    (types and nullability), at every scale present."""
+    from hippo_claim_crossover_spark.io import SCHEMAS, TABLES
+
+    # every scale-factor fixture directory beside the test fixture
+    dirs = glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*"))
+    assert sf_dir in dirs
+    footers = {f"{d}/{n}": (spark.read.parquet(f"{d}/{n}.parquet").schema,
+                            SCHEMAS[n]) for d in dirs for n in TABLES}
+    drift = {k: got for k, (got, want) in footers.items() if got != want}
+    assert not drift, drift
+
+
+def test_load_table_launches_no_spark_job(spark, sf_dir):
+    """A fixture load is planning only: no schema-inference job. The
+    inferring read beside it shows the job counter does move."""
+    from hippo_claim_crossover_spark.io import TABLES
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    for n in TABLES:
+        load_table(spark, sf_dir, n)
+    assert sched.nextJobId() - before == 0
+    spark.read.parquet(f"{sf_dir}/orders.parquet")
+    assert sched.nextJobId() - before >= 1

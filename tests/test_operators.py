@@ -776,3 +776,32 @@ def test_asof_nearest_matches_pandas_merge_asof(spark):
     want = {int(r.lid): (None if pd.isna(r.rid) else int(r.rid))
             for r in m.itertuples()}
     assert got == want
+
+
+def test_distributed_ntile_reads_one_range_exchange(spark):
+    """Range bounds are sampled per exchange, so the per-partition counts
+    must come from the same exchange as the rows they offset: with 4
+    partitions the executed plan has ONE range exchange on the order key
+    and the counts side reuses it — also when the caller prunes every
+    non-key column. The equal-count buckets pin the result."""
+    from pyspark.sql import functions as F
+
+    from hippo_claim_crossover_spark.operators.ranking import (
+        distributed_ntile,
+    )
+
+    df = (spark.range(2000).repartition(5)
+          .select("id", (F.col("id") * 7919 % 1000).alias("v"),
+                  F.col("id").cast("string").alias("pad")))
+    full = distributed_ntile(df, 4, ["v", "id"], n_partitions=4)
+    pruned = full.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
+    for out in (full, pruned):
+        rows = out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        # a planned exchange is a tree node "- Exchange ..."; a reuse
+        # prints as "ReusedExchange [...], Exchange ..."
+        assert final.count("- Exchange rangepartitioning(v") == 1, final
+        assert "ReusedExchange" in final, final
+    assert sorted((r["bucket"], r["n"]) for r in rows) == [
+        (1, 500), (2, 500), (3, 500), (4, 500)]

@@ -217,3 +217,49 @@ def test_ngram_lm_matches_pure_python(spark, sf_dir):
                    - sum(x < NGRAM_LM_TAU for x in xents)) <= 1
         assert abs(g["min_doc_bits"] - min(xents)) < 1e-3
         assert abs(g["max_doc_bits"] - max(xents)) < 1e-3
+
+
+def test_curation_pipeline_counters_are_zero_not_null(spark, tmp_path):
+    """A source whose documents all fall below QUALITY_FLOOR keeps its
+    row in q_curation_pipeline: n_input counts it and every later
+    counter is 0, never NULL — on Spark and in the DuckDB oracle."""
+    import random
+
+    from hippo_claim_crossover_spark.io import SCHEMAS
+    from hippo_claim_crossover_spark.plans.dedup import (
+        EVAL_SOURCE,
+        QUALITY_FLOOR,
+    )
+    from tools.check_oracle import compare
+
+    rng = random.Random(7)
+
+    def words(n):
+        return " ".join(f"w{rng.randrange(10**6)}" for _ in range(n))
+
+    rows = ([(i, words(90), "en", EVAL_SOURCE, 0) for i in range(4)]
+            + [(10 + i, words(90), "en", "good", 0) for i in range(6)]
+            + [(20 + i, "the a and of " * 5, "en", "junk", 0)
+               for i in range(3)])
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    # one parquet file, like the fixtures (DuckDB's view reads a file)
+    (spark.createDataFrame(rows, SCHEMAS["documents"]).toPandas()
+     .to_parquet(sf / "documents.parquet", index=False))
+
+    spec = ALL_SPECS["q_curation_pipeline"]
+    got = {r["source"]: r.asDict()
+           for r in spec.fn(spark, str(sf)).collect()}
+    assert QUALITY_FLOOR > 0
+    assert got["junk"] == {
+        "source": "junk", "n_input": 3, "n_quality": 0, "n_exact": 0,
+        "n_neardup": 0, "n_clean": 0, "n_tokens": 0, "n_bins": 0}
+    assert got["good"]["n_clean"] == 6
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{sf}/documents.parquet')")
+    problems = compare("q_curation_pipeline",
+                       spec.fn(spark, str(sf)).toPandas(),
+                       con.execute(spec.oracle).fetchdf())
+    assert not problems, problems
