@@ -15,9 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.operators.ranking import (
-    grouped_exact_percentiles,
     grouped_global_rank,
     grouped_histogram_cdf,
+    grouped_percentiles,
 )
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
@@ -31,6 +31,29 @@ from hippo_claim_crossover_spark.plans.base import (
     t_wide,
     within_rel_band,
 )
+
+
+def _exact_price_units_percentiles(li: DataFrame) -> DataFrame:
+    """Per return flag: exact p50/p95 of price and median of units. Both
+    value columns are stacked into one (flag, metric, value) stream, so
+    one percentile walk serves all three results."""
+    melted = li.select(
+        "l_returnflag",
+        F.expr("stack(2, 'price', l_extendedprice, 'units', l_quantity)"
+               " AS (_metric, _v)"))
+    res = grouped_percentiles(
+        melted, ["l_returnflag", "_metric"], "_v", [0.5, 0.95])
+    is_price = F.col("_metric") == "price"
+    p_idx = F.col("_p_idx")
+    return (
+        res.groupBy("l_returnflag")
+        .agg(F.max(F.when(is_price & (p_idx == 0), F.col("value")))
+             .alias("p50_price"),
+             F.max(F.when(is_price & (p_idx == 1), F.col("value")))
+             .alias("p95_price"),
+             F.max(F.when(~is_price & (p_idx == 0), F.col("value")))
+             .alias("median_units"))
+    )
 
 
 def q_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,24 +73,7 @@ def q_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the quantile_cont discipline, so the DuckDB oracle
     is unchanged. ``q_percentile_approx`` is the sketch sibling for when
     a bounded-memory single pass beats two shuffles."""
-    li = t(spark, sf_dir, "lineitem")
-    melted = li.select(
-        "l_returnflag",
-        F.expr("stack(2, 'price', l_extendedprice, 'units', l_quantity)"
-               " AS (_metric, _v)"))
-    res = grouped_exact_percentiles(
-        melted, ["l_returnflag", "_metric"], "_v", [0.5, 0.95])
-    is_price = F.col("_metric") == "price"
-    p_idx = F.col("_p_idx")
-    return (
-        res.groupBy("l_returnflag")
-        .agg(F.max(F.when(is_price & (p_idx == 0), F.col("value")))
-             .alias("p50_price"),
-             F.max(F.when(is_price & (p_idx == 1), F.col("value")))
-             .alias("p95_price"),
-             F.max(F.when(~is_price & (p_idx == 0), F.col("value")))
-             .alias("median_units"))
-    )
+    return _exact_price_units_percentiles(t(spark, sf_dir, "lineitem"))
 
 
 ORACLE_PERCENTILE = """
@@ -103,23 +109,7 @@ def q_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.percentile_approx("l_quantity", 0.5, 10000)
              .alias("_amed"))
     )
-    melted = li.select(
-        "l_returnflag",
-        F.expr("stack(2, 'price', l_extendedprice, 'units', l_quantity)"
-               " AS (_metric, _v)"))
-    res = grouped_exact_percentiles(
-        melted, ["l_returnflag", "_metric"], "_v", [0.5, 0.95])
-    is_price = F.col("_metric") == "price"
-    p_idx = F.col("_p_idx")
-    exact = (
-        res.groupBy("l_returnflag")
-        .agg(F.max(F.when(is_price & (p_idx == 0), F.col("value")))
-             .alias("p50_price"),
-             F.max(F.when(is_price & (p_idx == 1), F.col("value")))
-             .alias("p95_price"),
-             F.max(F.when(~is_price & (p_idx == 0), F.col("value")))
-             .alias("median_units"))
-    )
+    exact = _exact_price_units_percentiles(li)
 
     def _band(a, e):
         return within_rel_band(F.col(a), F.col(e), 0.05)
@@ -804,7 +794,7 @@ def q_percentile_highcard(spark: SparkSession, sf_dir: str) -> DataFrame:
     labor: the static plan must not bake in the broadcast."""
     li = t(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_extendedprice")
-    res = grouped_exact_percentiles(
+    res = grouped_percentiles(
         li, ["l_partkey"], "l_extendedprice", [0.5],
         broadcast_offsets=False)
     return (res.where(F.col("_p_idx") == 0)
@@ -1121,7 +1111,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         money_micros(F.col("l_quantity")).alias("w_u"))
     # three consumers read `hist` (range sampling, the CDF shuffle,
     # the totals agg) — same single-materialization rule as
-    # grouped_exact_percentiles' internal histogram
+    # grouped_percentiles' internal raw-row histogram
     hist = (li.groupBy("l_returnflag", "l_extendedprice")
             .agg(F.sum("w_u").alias("_w"))
             .localCheckpoint(eager=False))

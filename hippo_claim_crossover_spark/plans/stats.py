@@ -29,11 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hippo_claim_crossover_spark.operators.ranking import (
-    grouped_bounded_percentiles,
-    grouped_percentiles_from_bounded_hist,
-    grouped_percentiles_from_hist,
-)
+from hippo_claim_crossover_spark.operators.ranking import grouped_percentiles
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
     duck_round,
@@ -231,7 +227,7 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     few rows, replacing the second full scan + partial/final agg over
     the raw events the old two-sequential-percentile-calls form paid.
     r16: both walks use the BOUNDED-histogram path
-    (grouped_percentiles_from_bounded_hist) — ``value`` is a 2-decimal
+    (grouped_percentiles ``bounded=True``) — ``value`` is a 2-decimal
     bounded-domain grid, so |histogram rows per type| is capped by the
     VALUE DOMAIN (~1e5) independent of the row count, a static
     caller-declared bound that replaces the range-shuffle CDF machinery
@@ -245,8 +241,8 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = (vals.groupBy("event_type", "value")
             .agg(F.count(F.lit(1)).alias("_cnt"))
             .localCheckpoint(eager=False))
-    med = grouped_percentiles_from_bounded_hist(
-        hist, ["event_type"], "value", [0.5]).select(
+    med = grouped_percentiles(hist, ["event_type"], "value", [0.5],
+                              cnt_col="_cnt", bounded=True).select(
         "event_type", F.col("value").alias("med"))
     # single consumer now (the bounded walk) — no checkpoint needed
     adev_hist = (hist.join(F.broadcast(med), "event_type")
@@ -254,8 +250,8 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.abs(F.col("value") - F.col("med"))
                           .alias("adev"))
                  .agg(F.sum("_cnt").alias("_cnt")))
-    mad = grouped_percentiles_from_bounded_hist(
-        adev_hist, ["event_type"], "adev", [0.5]).select(
+    mad = grouped_percentiles(adev_hist, ["event_type"], "adev", [0.5],
+                              cnt_col="_cnt", bounded=True).select(
         "event_type", F.col("value").alias("mad"))
     scored = (vals.join(F.broadcast(med), "event_type")
               .join(F.broadcast(mad), "event_type")
@@ -335,8 +331,8 @@ def q_outlier_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     rhist = (resid.groupBy("event_type", "resid")
              .agg(F.count(F.lit(1)).alias("_cnt"))
              .localCheckpoint(eager=False))
-    med = grouped_percentiles_from_bounded_hist(
-        rhist, ["event_type"], "resid", [0.5]).select(
+    med = grouped_percentiles(rhist, ["event_type"], "resid", [0.5],
+                              cnt_col="_cnt", bounded=True).select(
         "event_type", F.col("value").alias("med"))
     # single consumer now (the bounded walk) — no checkpoint needed
     adev_hist = (rhist.join(F.broadcast(med), "event_type")
@@ -344,8 +340,8 @@ def q_outlier_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.abs(F.col("resid") - F.col("med"))
                           .alias("adev"))
                  .agg(F.sum("_cnt").alias("_cnt")))
-    mad = grouped_percentiles_from_bounded_hist(
-        adev_hist, ["event_type"], "adev", [0.5]).select(
+    mad = grouped_percentiles(adev_hist, ["event_type"], "adev", [0.5],
+                              cnt_col="_cnt", bounded=True).select(
         "event_type", F.col("value").alias("mad"))
     scored = (resid.join(F.broadcast(med), "event_type")
               .join(F.broadcast(mad), "event_type")
@@ -429,7 +425,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group, replicate) cells before the exchange), one partial/final
     agg to B·|groups| cells, and the interval over B values per group
     is a bounded-frame window interpolation
-    (grouped_bounded_percentiles — the cells are |groups|·B by
+    (grouped_percentiles ``bounded=True`` — the cells are |groups|·B by
     construction, so the histogram-CDF machinery and its plan-build
     checkpoint are pure overhead; r15, was 16.8s one-shot at sf0.1,
     dominated by the checkpoint materializing the fan-out in ONE task
@@ -476,9 +472,9 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
              .withColumn("mean_b",
                          F.col("_swx").cast("double")
                          / F.col("_sw").cast("double") / F.lit(1e6)))
-    ci = grouped_bounded_percentiles(
+    ci = grouped_percentiles(
         means.select("prio", "mean_b"), ["prio"], "mean_b",
-        [0.025, 0.975])
+        [0.025, 0.975], bounded=True)
     point = (o.groupBy("prio")
              .agg(F.count(F.lit(1)).alias("n"),
                   (F.sum("x_u").cast("double")
@@ -941,8 +937,9 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = (li.groupBy("l_returnflag", "l_extendedprice")
             .agg(F.count(F.lit(1)).alias("_cnt"))
             .localCheckpoint(eager=False))
-    pcts = (grouped_percentiles_from_hist(
-        hist, ["l_returnflag"], "l_extendedprice", [0.05, 0.95])
+    pcts = (grouped_percentiles(
+        hist, ["l_returnflag"], "l_extendedprice", [0.05, 0.95],
+        cnt_col="_cnt")
         .groupBy("l_returnflag")
         .agg(F.max(F.when(F.col("_p_idx") == 0, F.col("value")))
              .alias("p05"),

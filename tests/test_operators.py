@@ -356,7 +356,7 @@ def test_grouped_exact_percentiles_match_numpy(spark):
     import numpy as np
 
     from hippo_claim_crossover_spark.operators.ranking import (
-        grouped_exact_percentiles)
+        grouped_percentiles)
 
     rng = random.Random(7)
     rows = [("solo", 42.0)]                      # n=1 group
@@ -366,8 +366,8 @@ def test_grouped_exact_percentiles_match_numpy(spark):
     df = spark.createDataFrame(rows, "g string, v double").repartition(16)
     ps = [0.0, 0.25, 0.5, 0.95, 1.0]
     got = {(r["g"], r["_p_idx"]): r["value"]
-           for r in grouped_exact_percentiles(df, ["g"], "v", ps,
-                                              n_partitions=8).collect()}
+           for r in grouped_percentiles(df, ["g"], "v", ps,
+                                        n_partitions=8).collect()}
     by_g: dict[str, list[float]] = {}
     for g, v in rows:
         by_g.setdefault(g, []).append(v)
@@ -378,20 +378,18 @@ def test_grouped_exact_percentiles_match_numpy(spark):
 
 
 def test_bounded_hist_percentiles_match_machinery_and_numpy(spark):
-    """grouped_percentiles_from_bounded_hist (r16 — one hash-partition
-    window over a caller-declared-bounded histogram) must be
-    BIT-IDENTICAL to the scale-safe grouped_percentiles_from_hist walk
-    on the same histogram, and equal numpy's linear quantile — including
-    one-row groups, heavy ties, and exact-integral target ranks."""
+    """grouped_percentiles over (raw rows | histogram) × (bounded |
+    scale-safe walk): all four combinations on one input must be
+    BIT-IDENTICAL to each other, and equal numpy's linear quantile —
+    including one-row groups, heavy ties, and exact-integral target
+    ranks."""
     import random
 
     import numpy as np
     from pyspark.sql import functions as F
 
     from hippo_claim_crossover_spark.operators.ranking import (
-        grouped_percentiles_from_bounded_hist,
-        grouped_percentiles_from_hist,
-    )
+        grouped_percentiles)
 
     rng = random.Random(11)
     rows = [("solo", 42.0)]
@@ -401,13 +399,16 @@ def test_bounded_hist_percentiles_match_machinery_and_numpy(spark):
     df = spark.createDataFrame(rows, "g string, v double").repartition(16)
     hist = df.groupBy("g", "v").agg(F.count(F.lit(1)).alias("_cnt"))
     ps = [0.0, 0.05, 0.25, 0.5, 0.95, 1.0]
-    got = {(r["g"], r["_p_idx"]): r["value"]
-           for r in grouped_percentiles_from_bounded_hist(
-               hist, ["g"], "v", ps).collect()}
-    ref = {(r["g"], r["_p_idx"]): r["value"]
-           for r in grouped_percentiles_from_hist(
-               hist, ["g"], "v", ps).collect()}
-    assert got == ref  # bit-identical, not approximately equal
+    walks = {}
+    for src, cnt_col in ((df, None), (hist, "_cnt")):
+        for bounded in (True, False):
+            walks[(cnt_col, bounded)] = {
+                (r["g"], r["_p_idx"]): r["value"]
+                for r in grouped_percentiles(
+                    src, ["g"], "v", ps, cnt_col, bounded).collect()}
+    got = walks[(None, False)]
+    for key, walk in walks.items():
+        assert walk == got, key  # bit-identical, not approximately equal
     by_g: dict[str, list[float]] = {}
     for g, v in rows:
         by_g.setdefault(g, []).append(v)
@@ -415,6 +416,36 @@ def test_bounded_hist_percentiles_match_machinery_and_numpy(spark):
         for i, p in enumerate(ps):
             want = float(np.quantile(np.array(vs), p, method="linear"))
             assert abs(got[(g, i)] - want) < 1e-9, (g, p, got[(g, i)], want)
+
+
+def test_bounded_percentiles_plan_no_range_exchange(spark):
+    """What ``bounded`` promises: the bounded walk plans no range
+    exchange at all, while the default scale-safe walk executes exactly
+    one (its group-totals read may reuse it) — for raw rows and for a
+    histogram alike."""
+    from pyspark.sql import functions as F
+
+    from hippo_claim_crossover_spark.operators.ranking import (
+        grouped_percentiles)
+
+    df = (spark.range(600).repartition(3)
+          .select((F.col("id") % 3).cast("string").alias("g"),
+                  (F.col("id") * 7919 % 101).cast("double").alias("v")))
+    hist = df.groupBy("g", "v").agg(F.count(F.lit(1)).alias("_cnt"))
+    for src, cnt_col in ((df, None), (hist, "_cnt")):
+        for bounded in (True, False):
+            out = grouped_percentiles(src, ["g"], "v", [0.5, 0.9], cnt_col,
+                                      bounded, n_partitions=4)
+            assert len(out.collect()) == 6
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            if bounded:
+                assert "rangepartitioning" not in plan, (cnt_col, plan)
+                continue
+            final = plan.split("== Initial Plan ==")[0]
+            # a reuse prints as "ReusedExchange [...], Exchange ...", so
+            # only a planned exchange matches "- Exchange rangepart..."
+            assert final.count("- Exchange rangepartitioning(") == 1, (
+                cnt_col, final)
 
 
 def test_salted_join_bounds_reducer_skew_zipfian(spark):

@@ -1227,11 +1227,11 @@ def test_percentile_highcard_no_broadcast_hint(spark):
     assert "CartesianProduct" not in plan
     # results equal the broadcast-path machinery bit-for-bit
     from hippo_claim_crossover_spark.operators.ranking import (
-        grouped_exact_percentiles)
+        grouped_percentiles)
     from hippo_claim_crossover_spark.plans.base import t as _t
     li = _t(spark, SF_DIR, "lineitem").select(
         "l_partkey", "l_extendedprice")
-    bc = grouped_exact_percentiles(
+    bc = grouped_percentiles(
         li, ["l_partkey"], "l_extendedprice", [0.5],
         broadcast_offsets=True)
     got = {r["p_partkey"]: r["median_price"] for r in df.collect()}

@@ -239,19 +239,19 @@ def test_z_value_model_is_injective_and_bounded(x, y):
                        allow_nan=False, width=64),
              min_size=1, max_size=4, unique=True))
 def test_grouped_exact_percentiles_property(spark, rows, ps):
-    """grouped_exact_percentiles equals numpy's linear quantile on
+    """grouped_percentiles over raw rows equals numpy's linear quantile on
     arbitrary grouped float data and arbitrary percentile lists —
     including p=0/p=1 endpoints, negative values, duplicate values,
     and groups with a single element."""
     import numpy as np
 
     from hippo_claim_crossover_spark.operators.ranking import (
-        grouped_exact_percentiles)
+        grouped_percentiles)
 
     df = spark.createDataFrame(rows, "g string, v double")
     got = {(r["g"], r["_p_idx"]): r["value"]
-           for r in grouped_exact_percentiles(df, ["g"], "v", ps,
-                                              n_partitions=4).collect()}
+           for r in grouped_percentiles(df, ["g"], "v", ps,
+                                        n_partitions=4).collect()}
     by_g: dict[str, list[float]] = {}
     for g, v in rows:
         by_g.setdefault(g, []).append(v)
@@ -273,25 +273,23 @@ def test_grouped_exact_percentiles_property(spark, rows, ps):
                        allow_nan=False, width=64),
              min_size=1, max_size=4, unique=True))
 def test_grouped_bounded_percentiles_matches_exact_form(spark, rows, ps):
-    """grouped_bounded_percentiles (the r15 window form for
-    bounded-by-construction frames) must be BIT-IDENTICAL to
-    grouped_exact_percentiles on the same input — the swap-without-
-    moving-a-hash contract its docstring promises — and equal numpy's
-    linear quantile."""
+    """grouped_percentiles ``bounded=True`` (the r15 window walk for
+    bounded-by-construction frames) must be BIT-IDENTICAL to the
+    scale-safe walk on the same input — the swap-without-moving-a-hash
+    contract its docstring promises — and equal numpy's linear
+    quantile."""
     import numpy as np
 
     from hippo_claim_crossover_spark.operators.ranking import (
-        grouped_bounded_percentiles,
-        grouped_exact_percentiles,
-    )
+        grouped_percentiles)
 
     df = spark.createDataFrame(rows, "g string, v double")
     got = {(r["g"], r["_p_idx"]): r["value"]
-           for r in grouped_bounded_percentiles(df, ["g"], "v",
-                                                ps).collect()}
+           for r in grouped_percentiles(df, ["g"], "v", ps,
+                                        bounded=True).collect()}
     ref = {(r["g"], r["_p_idx"]): r["value"]
-           for r in grouped_exact_percentiles(df, ["g"], "v", ps,
-                                              n_partitions=4).collect()}
+           for r in grouped_percentiles(df, ["g"], "v", ps,
+                                        n_partitions=4).collect()}
     assert got == ref  # bit-identical, not approximately equal
     by_g: dict[str, list[float]] = {}
     for g, v in rows:
