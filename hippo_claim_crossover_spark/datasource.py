@@ -80,14 +80,14 @@ class _SynthDocsStreamReader(SimpleDataSourceStreamReader):
     def read(self, start: dict):
         lo = start["i"]
         hi = min(lo + self.step, self.n)
-        # Concrete list, not a generator: the engine pickles the batch
-        # into its prefetch/replay cache.
+        # An iterator, over a list rather than a generator: the engine
+        # next()s an empty batch to check that it is empty, and
+        # copy.copy()s a cached batch each time it plans one.
         rows = [(i, synth_token(i), TOKEN_LEN) for i in range(lo, hi)]
-        return rows, {"i": hi}
+        return iter(rows), {"i": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        # This path must hand back an ITERATOR (the engine next()s it on
-        # checkpoint-recovery replay), unlike read()'s picklable list.
+        # Checkpoint-recovery replay: the engine next()s this too.
         return iter([(i, synth_token(i), TOKEN_LEN)
                      for i in range(start["i"], end["i"])])
 

@@ -270,6 +270,29 @@ def test_pyds_stream_writer_batch_replay_is_idempotent(tmp_path):
     assert total == 2                                      # not doubled
 
 
+def test_pyds_stream_reader_polls_past_exhaustion():
+    """Driven through PySpark's prefetch wrapper (what the engine calls),
+    the stream source keeps answering once its rows run out: each poll
+    past the end returns an empty batch at the same offset, which is how
+    availableNow stops. The cached batches still replay every row, and
+    replay again, since the planner reads a copy of each."""
+    from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper
+
+    from hippo_claim_crossover_spark.datasource import (
+        TOKEN_LEN,
+        _SynthDocsStreamReader,
+        synth_token,
+    )
+
+    w = _SimpleStreamReaderWrapper(
+        _SynthDocsStreamReader({"n": "100", "step": "50"}))
+    ends = [w.latestOffset() for _ in range(4)]
+    assert ends == [{"i": 50}, {"i": 100}, {"i": 100}, {"i": 100}]
+    want = [(i, synth_token(i), TOKEN_LEN) for i in range(100)]
+    for _ in range(2):
+        assert list(w.getCache({"i": 0}, {"i": 100})) == want
+
+
 def test_local_frame_stays_on_the_arrow_path(spark):
     """io.local_frame exists to keep driver-side literals JVM-side: the
     list path (`createDataFrame(list)`) plans as a 32-slice Python RDD

@@ -4,11 +4,14 @@ stable schema; a fast subset is oracle-compared against DuckDB in-process
 
 from __future__ import annotations
 
+import json
+
 import duckdb
 import pytest
 
 from hippo_claim_crossover_spark.io import TABLES
 from hippo_claim_crossover_spark.plans import ALL_SPECS
+from tools.plan_ledger import LEDGER, REGENERATE, plan_shape
 
 # Cheap-but-representative subset for the in-test oracle compare.
 ORACLE_SUBSET = [
@@ -26,10 +29,24 @@ def duck(sf_dir):
     return con
 
 
+@pytest.fixture(scope="module")
+def ledger():
+    with open(LEDGER) as f:
+        return json.load(f)
+
+
+def test_ledger_rows_are_the_declared_queries(ledger):
+    """A stale, missing or out-of-order row fails here, without Spark."""
+    assert list(ledger) == sorted(ALL_SPECS)
+
+
 @pytest.mark.parametrize("name", sorted(ALL_SPECS))
-def test_query_runs(spark, sf_dir, name):
+def test_query_runs(spark, sf_dir, ledger, name):
     df = ALL_SPECS[name].fn(spark, sf_dir)
     assert df.columns, name
+    assert plan_shape(df) == ledger.get(name), (
+        f"{name}: plan shape differs from query_ledger.json; if the change "
+        f"is intended, regenerate with `{REGENERATE}` and review the diff")
     # q_join_anti legitimately returns 0 rows at tiny sf; everything else
     # must produce data.
     n = df.count()

@@ -1,7 +1,8 @@
-"""Subprocess-level tests for the repo tools: the r13 ADVICE argument-
-handling fixes (check_oracle --times-json, compare_bench empty-ratio
-guard), the freshness artifact writer, and the r14 stage-metrics audit
-(tools/stage_audit.py) end-to-end on two queries at sf0.001."""
+"""Tests for the repo tools: the r13 ADVICE argument-handling fixes
+(check_oracle --times-json, compare_bench empty-ratio guard), the
+freshness artifact writer, the r14 stage-metrics audit
+(tools/stage_audit.py) end-to-end on two queries at sf0.001, and the
+plan ledger's counting and all-or-nothing write (tools/plan_ledger.py)."""
 
 from __future__ import annotations
 
@@ -9,6 +10,8 @@ import json
 import os
 import subprocess
 import sys
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -131,3 +134,54 @@ def test_stage_audit_end_to_end_two_queries(tmp_path):
                   or d["queries"][n]["spill_disk_mb"] > 0
                   for n in ("q_crossover", "q_host_dedup"))
     assert r.returncode == (1 if spilled else 0)
+
+
+def test_plan_shape_counts_planner_choices(spark):
+    """plan_shape counts each planner decision once, on the plan before
+    execution: a broadcast join, a grouped aggregate's partial and final
+    halves, a global sort's range exchange and a localCheckpoint scan."""
+    from pyspark.sql import functions as F
+
+    from tools.plan_ledger import plan_shape
+
+    facts = spark.range(1000).withColumn("k", F.col("id") % 10)
+    dim = spark.range(10).withColumnRenamed("id", "k")
+    assert plan_shape(facts.join(F.broadcast(dim), "k")) == {
+        "BroadcastExchange": 1, "BroadcastHashJoin": 1, "Range": 2}
+    assert plan_shape(facts.groupBy("k").count()) == {
+        "Exchange hashpartitioning": 1, "HashAggregate": 2, "Range": 1}
+    assert plan_shape(facts.orderBy("k")) == {
+        "Exchange rangepartitioning": 1, "Range": 1}
+    assert plan_shape(facts.localCheckpoint().where("k > 1")) == {
+        "Scan ExistingRDD": 1}
+
+
+def test_plan_ledger_writes_nothing_unless_every_query_builds(
+        spark, monkeypatch, tmp_path):
+    """One failing query fails the run, names itself and leaves no
+    ledger behind; a clean run writes one sorted line per query."""
+    from types import SimpleNamespace
+
+    from tools import plan_ledger
+
+    def broken(spark, sf_dir):
+        raise ValueError("fixture missing")
+
+    specs = {"q_b": SimpleNamespace(fn=lambda s, d: s.range(3)),
+             "q_c": SimpleNamespace(fn=broken)}
+    monkeypatch.setattr(plan_ledger, "ALL_SPECS", specs)
+    out = tmp_path / "ledger.json"
+    with pytest.raises(ValueError) as e:
+        plan_ledger.main([str(tmp_path), str(out)])
+    assert "q_c" in " ".join(e.value.__notes__)
+    assert not out.exists()
+
+    specs["q_c"] = SimpleNamespace(fn=lambda s, d: s.range(3).repartition(2))
+    specs["q_a"] = specs.pop("q_b")
+    plan_ledger.main([str(tmp_path), str(out)])
+    assert out.read_text().splitlines() == [
+        "{",
+        '"q_a": {"Range": 1},',
+        '"q_c": {"Exchange RoundRobinPartitioning": 1, "Range": 1}',
+        "}"]
+    assert os.listdir(tmp_path) == ["ledger.json"]
