@@ -1294,8 +1294,9 @@ def q_join_setsim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Verification is per-candidate row-local.  At 100 TB the source
     partition bounds the self-join domain the way LSH bands bound
-    theirs; the filters' measured candidate reduction is pinned in
-    tests/test_plans.py and tools/stress_dedup.py.
+    theirs; that the filters prune candidates losslessly is pinned in
+    tests/test_plans.py (their 10x reduction is in SCALE.md), and
+    tools/scale_probe.py times this query on a K-times corpus.
     """
     d = (t_wide(spark, sf_dir, "documents")
          .where(F.col("source") == "src0")

@@ -15,8 +15,6 @@ just the API call.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -334,7 +332,7 @@ def q_sink_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("o_orderkey", T.LongType()),
         T.StructField("o_orderpriority", T.StringType()),
         T.StructField("o_totalprice", T.DoubleType()),
-    ])).json(os.path.join(out, "part-*.json"))
+    ])).option("pathGlobFilter", "part-*.json").json(out)
     return (
         back.groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(F.count(F.lit(1)).alias("n_orders"),
@@ -757,7 +755,7 @@ def q_sink_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("user_id", T.LongType()),
         T.StructField("event_type", T.StringType()),
         T.StructField("value", T.DoubleType()),
-    ])).json(os.path.join(out, "batch-*.json"))
+    ])).option("pathGlobFilter", "batch-*.json").json(out)
     return (back.groupBy("event_type")
             .agg(F.count_distinct(F.col("event_id") % 3)
                  .alias("n_batches"),

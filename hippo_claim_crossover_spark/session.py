@@ -69,8 +69,9 @@ def _prune_stale_scratch(app_id: str,
     sweep): its scratch keeps fresh mtimes as it writes, so even
     bench.py's shorter 30-min margin never deletes live state — the tag
     age alone could not guarantee that for a session >idle_secs old.
-    Entries without a run tag (e.g. the stress corpora) are shared
-    across sessions and kept."""
+    Every scratch writer, tools included, nests its output under its
+    application id; an entry without a run tag is not one of theirs and
+    is left alone."""
     import time
 
     m = _RUN_TAG.search(app_id)

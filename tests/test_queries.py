@@ -17,6 +17,7 @@ from tools.plan_ledger import LEDGER, REGENERATE, plan_shape
 ORACLE_SUBSET = [
     "q_crossover", "q_agg_multi", "q_join_left", "q_win_frame",
     "q_stream_session", "q_text_quality", "q_dedup_minhash", "q_sim_topk",
+    "q_embed_gram",
 ]
 
 
