@@ -67,8 +67,9 @@ class _SynthDocsStreamReader(SimpleDataSourceStreamReader):
     micro-batch (rate limiting lives in the source, like
     maxFilesPerTrigger); ``readBetweenOffsets`` re-produces a committed
     range verbatim for checkpoint recovery. An exhausted source returns
-    an empty batch at the same offset, which lets availableNow drain and
-    stop."""
+    an empty batch at the same offset, which is how
+    ``processAllAvailable`` sees it drained (``availableNow`` is not
+    supported for Python stream sources: it commits one batch only)."""
 
     def __init__(self, options: dict):
         self.n = int(options.get("n", 100))

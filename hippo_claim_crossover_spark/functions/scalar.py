@@ -143,3 +143,21 @@ def coalesce_pair(*qual_value_pairs: tuple[Column, Column]) -> Column:
     return expr.otherwise(
         F.struct(F.lit(None).cast("string").alias("qualifier"),
                  F.lit(None).cast("string").alias("number")))
+
+
+def duck_round(col: Column, scale: int) -> Column:
+    """Spark expression reproducing DuckDB's ``round(double, s)`` bit-for-bit
+    on non-negative inputs: scale the raw double, round half away from zero,
+    unscale — ``floor(x*10^s + 0.5) / 10^s``.
+
+    Needed wherever the true value can land exactly halfway at the output
+    scale (quotients like ``sum/count``): Spark's own ``round`` reconstructs
+    the shortest decimal repr and applies HALF_UP, which rounds ``6.30615``
+    up even though the double is ``6.30614999…``, while DuckDB scales the
+    raw double and rounds down. Both engines see the same IEEE double, so
+    computing DuckDB's formula inside Spark matches it exactly. On negative
+    exact halves (cosines) the formula differs from either engine's builtin
+    round, so oracles that compare such values spell the same formula.
+    """
+    p = F.lit(float(10 ** scale))
+    return (F.floor(col * p + F.lit(0.5))).cast("double") / p

@@ -27,17 +27,19 @@ is the standard large-corpus factoring:
    argmax is engine-deterministic). The merged vocab for the next round
    is a crossJoin with that broadcast row — no driver collect anywhere.
 
-Each round's best-pair row is lazily ``localCheckpoint``-ed: round k's
-vocab lineage references rounds 1..k-1, and the final rule union reads
-every round again — without the checkpoint the pair-count job for round
-1 would re-run O(rounds²) times (the q_dedup_ngram lesson applied to an
-iterative op; same fault-tolerance trade as operators/graph.py).
+Each round's best-pair row is materialized: round k's vocab lineage
+references rounds 1..k-1, and the final rule union reads every round
+again — without the checkpoint the pair-count job for round 1 would
+re-run O(rounds²) times (the q_dedup_ngram lesson applied to an
+iterative op).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hippo_claim_crossover_spark.session import materialize
 
 # Pairs ride as a single `l|r` string ('|' can never occur inside a
 # symbol: symbols are built from [a-z] only), so the deterministic
@@ -74,20 +76,19 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
 
 
 def _best(pair_counts: DataFrame) -> DataFrame:
-    return (
+    return materialize(
         pair_counts.orderBy(F.col("pf").desc(), "pair").limit(1)
         .select(F.substring_index("pair", "|", 1).alias("l"),
                 F.substring_index("pair", "|", -1).alias("r"),
-                F.col("pf"))
-        .localCheckpoint(eager=False)
-    )
+                F.col("pf")),
+        "bpe_best_pair")
 
 
 def bpe_merge_rules(docs: DataFrame, n_rounds: int = 3,
                     text_col: str = "text") -> DataFrame:
     """Learn ``n_rounds`` BPE merge rules; returns one row per round:
     (round, left, right, merged, support)."""
-    vocab = word_vocab(docs, text_col).localCheckpoint(eager=False)
+    vocab = materialize(word_vocab(docs, text_col), "bpe_vocab")
     rules = []
     for rnd in range(1, n_rounds + 1):
         best = _best(_pair_counts(vocab))
@@ -116,7 +117,7 @@ def bpe_encoded_vocab(docs: DataFrame, n_rounds: int = 3,
     double-space-delimited token sequence. The full corpus is never
     re-tokenized row by row; consumers weight per-word token counts by
     corpus (or per-group) word frequencies instead."""
-    vocab = word_vocab(docs, text_col).localCheckpoint(eager=False)
+    vocab = materialize(word_vocab(docs, text_col), "bpe_vocab")
     for _ in range(n_rounds):
         best = _best(_pair_counts(vocab))
         vocab = vocab.crossJoin(F.broadcast(best)).select(
@@ -125,7 +126,7 @@ def bpe_encoded_vocab(docs: DataFrame, n_rounds: int = 3,
                 F.col("seq"),
                 F.concat(F.lit(" "), "l", F.lit("  "), "r", F.lit(" ")),
                 F.concat(F.lit(" "), "l", "r", F.lit(" "))).alias("seq"))
-        vocab = vocab.localCheckpoint(eager=False)
+        vocab = materialize(vocab, "bpe_round")
     return vocab
 
 

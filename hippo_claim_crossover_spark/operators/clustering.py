@@ -27,7 +27,7 @@ Scale shape, per Lloyd iteration:
 Centroids stay lazy DataFrames (fixed small iteration count ⇒ bounded plan
 depth). A production long-running fit would collect the C×D centroid table
 (KBs, independent of N) to the driver per round — the canonical k-means
-shape — or ``localCheckpoint`` it; see operators/graph.py for the same
+shape — or materialize it; see operators/graph.py for the same
 lineage-control trade in the components loop.
 
 The reference has no clustering (319-line field-mapper,
@@ -39,8 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.functions.scalar import duck_round
 from hippo_claim_crossover_spark.operators.similarity import (
-    _duck_round,
     dot,
     ivf_centroids,
     l2_norm,
@@ -74,7 +74,7 @@ def kmeans_assign(df: DataFrame, cents: DataFrame, id_col: str = "vec_id",
     best = F.array_min(F.transform(
         F.col("cents"),
         lambda c: F.struct(
-            (-_duck_round(dot(F.col(vec_col), c["cv"]) / (nrm * c["cnrm"]),
+            (-duck_round(dot(F.col(vec_col), c["cv"]) / (nrm * c["cnrm"]),
                           6)).alias("ncos"),
             c["cent_id"].alias("cid"))))
     return (

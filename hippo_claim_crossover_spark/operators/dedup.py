@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.session import materialize
+
 NGRAM = 4
 
 # Affine MinHash family over one md5-derived 28-bit base hash:
@@ -97,19 +99,14 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     """Near-dup pairs by n-gram Jaccard ≥ threshold via the shingle
     inverted-index self-join — cost follows posting-list sizes, not n².
 
-    The shingle table is materialized once via ``localCheckpoint`` (lazy,
-    so no extra job at plan-build): the self-join would otherwise evaluate
-    the shingle pipeline (split → transform → array_join → array_distinct
-    → hash) once per side, and InferFiltersFromGenerate pushes
-    size/notnull predicates that re-evaluate it again inside the scan —
-    4-6 evaluations measured vs 1 here (2.6s → 0.7s on sf0.1).  Jaccard
-    denominators ride along as the carried n_sh column, so no separate
-    size table or extra joins. Fault-tolerance trade at 100 TB: checkpoint
-    blocks are non-replicated executor state (same trade as
-    operators/graph.py documents) — an executor loss fails the job instead
-    of recomputing lineage; swap for ``persist(MEMORY_AND_DISK)`` +
-    reliable checkpoint dir when running on preemptible fleets."""
-    sh = shingle_table(df, id_col, text_col, n).localCheckpoint(eager=False)
+    The shingle table is materialized once: the self-join would otherwise
+    evaluate the shingle pipeline (split → transform → array_join →
+    array_distinct → hash) once per side, and InferFiltersFromGenerate
+    pushes size/notnull predicates that re-evaluate it again inside the
+    scan — 4-6 evaluations measured vs 1 here (2.6s → 0.7s on sf0.1).
+    Jaccard denominators ride along as the carried n_sh column, so no
+    separate size table or extra joins."""
+    sh = materialize(shingle_table(df, id_col, text_col, n), "shingles")
     a, b = sh.alias("a"), sh.alias("b")
     pairs = (
         a.join(b, (F.col("a.sh") == F.col("b.sh"))
@@ -194,7 +191,7 @@ def simhash_hamming_pairs(signatures: DataFrame, id_col: str = "doc_id",
     exact distance. This is Manku et al.'s simhash-dedup table scheme
     (WWW'07, public) expressed as one self-join.
 
-    The signature table is lazily checkpointed: the self-join would
+    The signature table is materialized: the self-join would
     otherwise re-run the whole simhash pipeline (token explode + 32-bit
     vote aggregation) once per side. First-colliding-chunk rule keeps the
     chunk outputs disjoint, so no distinct shuffle — same device as
@@ -207,7 +204,7 @@ def simhash_hamming_pairs(signatures: DataFrame, id_col: str = "doc_id",
         width = cb if c < n_chunks - 1 else bits - cb * (n_chunks - 1)
         return F.shiftright(col, c * cb).bitwiseAND(F.lit((1 << width) - 1))
 
-    sig = signatures.localCheckpoint(eager=False)
+    sig = materialize(signatures, "simhash_sigs")
     keyed = sig.select(
         id_col, "simhash",
         F.posexplode(F.array(*[chunk(F.col("simhash"), c)

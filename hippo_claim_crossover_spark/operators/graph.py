@@ -12,24 +12,18 @@ groupBy-shuffles over the edge list, and the edge set contracts toward a
 forest of stars in O(log n) rounds even for path-shaped graphs — unlike
 naive min-label propagation whose round count is the component *diameter*
 (adversarial near-dup chains of template documents can be arbitrarily
-long). Each round materializes via ``localCheckpoint`` so the iterative
-lineage never stacks up, and convergence is detected with an
-order-insensitive edge-set fingerprint (count + sum of pair hashes), one
-tiny action per round.
-
-Fault-tolerance tradeoff: ``localCheckpoint`` stores blocks on executors
-only — losing an executor mid-run loses its blocks and fails the job
-(lineage was truncated, so Spark cannot recompute them). That is the
-right trade locally and for short jobs; a production 100 TB run over many
-rounds should swap in reliable ``checkpoint()`` against the cluster
-checkpoint dir (or write each round's edge set to object storage), which
-survives executor loss at the cost of a round-trip to storage per round.
+long). Each round materializes (``session.materialize``, which states
+the fault-tolerance trade) so the iterative lineage never stacks up, and
+convergence is detected with an order-insensitive edge-set fingerprint
+(count + sum of pair hashes), one tiny action per round.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hippo_claim_crossover_spark.session import materialize
 
 
 def _canon(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -74,13 +68,12 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def _round(e: DataFrame) -> DataFrame:
     """One large-star + small-star contraction. The large-star output is
-    lazily checkpointed: small-star references its input three times
+    materialized: small-star references its input three times
     (min-aggregation, relink join, root links), so without a
     materialization the whole large-star join+agg subtree is re-planned
     per reference — 11 live exchanges per round measured vs 7 with the
-    checkpoint. Lazy (eager=False) so the blocks materialize inside the
-    round's own first job rather than as an extra blocking action."""
-    return _small_star(_large_star(e).localCheckpoint(eager=False))
+    checkpoint."""
+    return _small_star(materialize(_large_star(e), "cc_large_star"))
 
 
 def _fingerprint(e: DataFrame) -> tuple[int, int]:
@@ -103,15 +96,14 @@ def connected_components(edges: DataFrame, src: str = "src",
     ``stats`` to receive ``{"rounds": k}`` — the O(log n) round bound is
     pinned by a test (tests/test_dedup.py) so a semantics change that
     silently degrades to diameter-bound propagation fails CI."""
-    # Checkpoints are LAZY: the fingerprint action that immediately
-    # follows each one is what materializes the blocks, so every round
-    # runs ONE job, not an eager-checkpoint job plus the fingerprint
-    # job (r15 — halves the per-round fixed cost of the loop).
-    e = _canon(edges, src, dst).localCheckpoint(eager=False)
+    # The fingerprint action that follows each materialization writes its
+    # blocks, so every round runs ONE job (r15 — halves the per-round
+    # fixed cost of the loop).
+    e = materialize(_canon(edges, src, dst), "cc_edges")
     fp = _fingerprint(e)
     rounds = 0
     for _ in range(max_iter):
-        e2 = _round(e).localCheckpoint(eager=False)
+        e2 = materialize(_round(e), "cc_round")
         fp2 = _fingerprint(e2)
         e = e2
         rounds += 1
@@ -203,7 +195,7 @@ def triangle_stats(pairs: DataFrame) -> DataFrame:
     no dedup and no all-pairs stage. Wedges are the exact integer fold
     Σ deg·(deg−1)/2 (the product is always even, so the /2 is exact);
     clustering = 3·T/W through the engine-portable floor rounding. The
-    caller should materialize ``pairs`` once (localCheckpoint) — it has
+    caller should materialize ``pairs`` once — it has
     four consumers here. 100 TB hardening: orient by (degree, id)
     instead of id so hub nodes never fan out on the e1.u side."""
     s4 = F.lit(1e4)

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.session import materialize
+
 
 def sorted_neighborhood_pairs(df: DataFrame, id_col: str,
                               key_cols: list[str],
@@ -35,12 +37,11 @@ def sorted_neighborhood_pairs(df: DataFrame, id_col: str,
     from hippo_claim_crossover_spark.operators.ranking import global_rank
 
     assert window >= 2, window
-    # One materialization for both join sides (lazy localCheckpoint —
-    # the self-join reuse rule in SCALE.md): global_rank is itself a
-    # shuffle + window + offsets join, too expensive to re-derive per
-    # side.
-    ranked = global_rank(df, key_cols, out_col="_rk").localCheckpoint(
-        eager=False)
+    # One materialization for both join sides (the self-join reuse rule
+    # in SCALE.md): global_rank is itself a shuffle + window + offsets
+    # join, too expensive to re-derive per side.
+    ranked = materialize(global_rank(df, key_cols, out_col="_rk"),
+                         "neighborhood_rank")
     a = ranked.select(
         F.col("_rk"),
         F.explode(F.sequence(F.lit(1), F.lit(window - 1))).alias("_d"),

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hippo_claim_crossover_spark.session import materialize
+
 
 def _ranged(df: DataFrame, keys: list[str],
             n_partitions: int | None) -> DataFrame:
@@ -237,13 +239,11 @@ def grouped_percentiles(df: DataFrame, group_cols: list[str],
             # Three consumers read the histogram: the range-partitioner's
             # sampling pass, the CDF shuffle itself, and the group-totals
             # aggregate. Materializing the tie-compressed histogram once
-            # (lazy localCheckpoint) replaces three full upstream scans —
-            # the write-the-projection-once discipline for multi-consumer
-            # frames, and the checkpoint is histogram-sized, not
-            # row-sized.
-            df = (df.groupBy(*group_cols, value_col)
-                  .agg(F.count(F.lit(1)).alias(cnt_col))
-                  .localCheckpoint(eager=False))
+            # replaces three full upstream scans, and the checkpoint is
+            # histogram-sized, not row-sized.
+            df = materialize(df.groupBy(*group_cols, value_col)
+                             .agg(F.count(F.lit(1)).alias(cnt_col)),
+                             "percentile_hist")
     hist = df.where(not_null)
     targets_per_p = F.array(*[
         F.struct(F.lit(i).alias("_p_idx"),

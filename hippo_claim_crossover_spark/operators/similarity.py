@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from hippo_claim_crossover_spark.functions.scalar import duck_round
+from hippo_claim_crossover_spark.session import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     """JVM-side dot product via higher-order functions (no UDF)."""
@@ -82,19 +85,8 @@ def srp_bucket(v: Column, planes: list[list[float]]) -> Column:
     return acc.cast("long")
 
 
-def _duck_round(c: Column, nd: int) -> Column:
-    """Engine-portable round-half-up at ``nd`` digits — same formula as
-    plans/base duck_round (floor(x·10^nd + 0.5)/10^nd), inlined here so
-    operators stay below the plans layer. Used for every emitted cosine:
-    builtin round()'s half-away-from-zero differs from this on exact
-    negative halfway values, so both sides of the oracle compare use the
-    identical floor formula instead."""
-    s = F.lit(float(10 ** nd))
-    return (F.floor(c * s + F.lit(0.5))).cast("double") / s
-
-
 def _round6(c: Column) -> Column:
-    return _duck_round(c, 6)
+    return duck_round(c, 6)
 
 
 def pair_cosine_arrow(pairs: DataFrame, nd: int = 4,
@@ -118,7 +110,7 @@ def pair_cosine_arrow(pairs: DataFrame, nd: int = 4,
     ``aggregate(zip_with(a,b,(x,y)->x*y), 0.0, +)`` — and of DuckDB's
     sequential ``list_dot_product`` — on identical IEEE doubles, then
     applies the same ``floor(x*10^nd + 0.5)/10^nd`` rounding as
-    :func:`_duck_round`. A BLAS dot (``np.einsum``/``A@B``) would pairwise-
+    :func:`duck_round`. A BLAS dot (``np.einsum``/``A@B``) would pairwise-
     sum in a different order and flip rare last-ulp roundings.
 
     Vectors must be non-null and fixed-length within a batch (true for any
@@ -287,7 +279,7 @@ def ivf_probe_topk(df: DataFrame, cents: DataFrame, assign: DataFrame,
         .join(F.broadcast(probed), "cell", "left_semi")
     )
     nrm = l2_norm(F.col(vec_col))
-    cos = _duck_round(dot(F.col(vec_col), F.col("qv")) / (nrm * F.col("qnrm")), 4)
+    cos = duck_round(dot(F.col(vec_col), F.col("qv")) / (nrm * F.col("qnrm")), 4)
     return (
         cand.join(F.broadcast(query))
         .select(id_col, "cell", cos.alias("cosine"))
@@ -395,7 +387,7 @@ def cosine_topk(df: DataFrame, query: DataFrame, k: int,
     exact-scoring baseline. Scores rounded to 4dp with id tiebreak for
     cross-engine determinism."""
     nrm = l2_norm(F.col(vec_col))
-    cos = _duck_round(dot(F.col(vec_col), F.col("qv")) / (nrm * F.col("qnrm")), 4)
+    cos = duck_round(dot(F.col(vec_col), F.col("qv")) / (nrm * F.col("qnrm")), 4)
     return (
         df.join(F.broadcast(query))
         .select(id_col, cos.alias("cosine"))
@@ -420,18 +412,17 @@ def embed_near_pairs(df: DataFrame, dim: int, threshold: float = 0.25,
     without count stats (JDBC, unbounded views); pass it explicitly there,
     exactly like knn_blocked's escape hatch. Pair scoring goes through the
     :func:`pair_cosine_arrow` numpy kernel (same fold order + floor
-    rounding as the HOF/_duck_round path it replaced), so emitted cosines
+    rounding as the HOF/duck_round path it replaced), so emitted cosines
     use the engine-portable floor formula everywhere."""
     if n_planes is None:
         n_planes = planes_for(df.count(), target_bucket_size,
                               max_planes=max_planes)
     planes = srp_family(0, n_planes, dim)
-    # One materialization for both self-join sides (lazy localCheckpoint
-    # — see knn_blocked / operators/dedup.py:100-111 for the trade).
-    n = (srp_keys_arrow(df, [planes], id_col, vec_col)
-         .select(id_col, F.col("_vn").alias("vn"),
-                 F.col("_bs")[0].alias("bucket"))
-         .localCheckpoint(eager=False))
+    # One materialization for both self-join sides (see knn_blocked).
+    n = materialize(srp_keys_arrow(df, [planes], id_col, vec_col)
+                    .select(id_col, F.col("_vn").alias("vn"),
+                            F.col("_bs")[0].alias("bucket")),
+                    "srp_keys")
     a, b = n.alias("a"), n.alias("b")
     raw = (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket"))
@@ -477,15 +468,13 @@ def knn_blocked(df: DataFrame, dim: int, k: int = 3,
     # (the declarative srp_bucket expression at adaptive plane counts is a
     # multi-second Janino compile plus interpreted HOF folds — see the
     # kernel docstring); the explode stays JVM-side.
-    # Materialized once (lazy localCheckpoint, same trade the ngram
-    # shingle table documents in operators/dedup.py:100-111): the
-    # self-join would otherwise run the scan + Arrow key kernel once per
-    # side — two Python stages where one suffices (measured ~2× on the
-    # cold run at sf0.1).
-    keyed = (srp_keys_arrow(df, fams, id_col, vec_col)
-             .select(id_col, "_vn", "_bs",
-                     F.posexplode("_bs").alias("_fam", "_bk"))
-             .localCheckpoint(eager=False))
+    # Materialized once: the self-join would otherwise run the scan +
+    # Arrow key kernel once per side — two Python stages where one
+    # suffices (measured ~2× on the cold run at sf0.1).
+    keyed = materialize(srp_keys_arrow(df, fams, id_col, vec_col)
+                        .select(id_col, "_vn", "_bs",
+                                F.posexplode("_bs").alias("_fam", "_bk")),
+                        "srp_band_keys")
     a, b = keyed.alias("a"), keyed.alias("b")
     # First-colliding-family rule: family f emits a pair only when no
     # earlier family already bucketed it together — the family outputs are

@@ -11,18 +11,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.functions.scalar import duck_round
+
 DEFAULT_STOPWORDS = ("the", "a", "and", "of")
 
 # BPE-ish pre-tokenizer: letter runs / digit runs / single punctuation.
 BPE_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
-
-
-def _duck_round(c: Column, nd: int) -> Column:
-    """Engine-portable round-half-up — same floor formula as
-    plans/base.duck_round, inlined so operators stay below the plans
-    layer (same convention as operators/similarity._duck_round)."""
-    s = F.lit(float(10 ** nd))
-    return (F.floor(c * s + F.lit(0.5))).cast("double") / s
 
 
 def tokenize(text: Column) -> Column:
@@ -60,8 +54,8 @@ def quality_metrics(df: DataFrame, text_col: str = "text",
         # decimal repr can print as .xxx5 while the raw double sits just
         # below it — Spark round()'s HALF_UP on the repr would then round
         # up where every scaled-double engine rounds down.
-        "stopword_ratio": _duck_round(n_stop.cast("double") / n_toks, 4),
-        "quality_score": _duck_round(
+        "stopword_ratio": duck_round(n_stop.cast("double") / n_toks, 4),
+        "quality_score": duck_round(
             F.least(F.lit(1.0), n_toks.cast("double") / float(target_tokens))
             * (1 - n_stop.cast("double") / n_toks), 4),
     })

@@ -27,6 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.functions.scalar import duck_round  # noqa: F401
 from hippo_claim_crossover_spark.io import load_table
 from hippo_claim_crossover_spark.operators.hashing import hex2long  # noqa: F401
 
@@ -135,22 +136,6 @@ def aes_key(id_col: Column, weight: Column) -> Column:
     h = hex2long(F.md5(id_col.cast("string"))).cast("double")
     u = (h + F.lit(1.0)) / F.lit(float(1 << 60))
     return F.pow(u, F.lit(1.0) / weight)
-
-
-def duck_round(col: Column, scale: int) -> Column:
-    """Spark expression reproducing DuckDB's ``round(double, s)`` bit-for-bit
-    on non-negative inputs: scale the raw double, round half away from zero,
-    unscale — ``floor(x*10^s + 0.5) / 10^s``.
-
-    Needed wherever the true value can land exactly halfway at the output
-    scale (quotients like ``sum/count``): Spark's own ``round`` reconstructs
-    the shortest decimal repr and applies HALF_UP, which rounds ``6.30615``
-    up even though the double is ``6.30614999…``, while DuckDB scales the
-    raw double and rounds down. Both engines see the same IEEE double, so
-    computing DuckDB's formula inside Spark matches it exactly.
-    """
-    p = F.lit(float(10 ** scale))
-    return (F.floor(col * p + F.lit(0.5))).cast("double") / p
 
 
 def within_rel_band(approx: Column, exact: Column, rel: float) -> Column:

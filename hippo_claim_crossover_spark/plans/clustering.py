@@ -19,10 +19,12 @@ from hippo_claim_crossover_spark.operators import clustering as ops_km
 from hippo_claim_crossover_spark.operators.similarity import dot, l2_norm
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
+    duck_round,
     hex2long,
     sql_hex2long,
     t_wide,
 )
+from hippo_claim_crossover_spark.session import materialize
 
 N_CELLS = 8
 ITERS = 2
@@ -47,7 +49,7 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = assign.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vecs"))
     norms = cents.select(
         F.col("cent_id"),
-        ops_km._duck_round(l2_norm(F.col("cv")), 4).alias("centroid_norm"))
+        duck_round(l2_norm(F.col("cv")), 4).alias("centroid_norm"))
     return (
         sizes.join(F.broadcast(norms), sizes.cell == norms.cent_id)
         .select("cell", "n_vecs", "centroid_norm")
@@ -191,14 +193,15 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         if p_sub else F.lit(0).cast("long"))
     # one materialization for the three consumers (pair sides + counts);
     # the kmeans lineage above it is 2 Lloyd rounds deep
-    m = (m0.join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
-         .select("vec_id", "cell", sub.alias("sub"), "vn",
-                 ops_km._duck_round(
-                     dot(F.col("vn"), F.col("cv")) / l2_norm(F.col("cv")),
-                     6).alias("ccos"))
-         .localCheckpoint(eager=False))
+    m = materialize(
+        m0.join(F.broadcast(cents), F.col("cell") == F.col("cent_id"))
+        .select("vec_id", "cell", sub.alias("sub"), "vn",
+                duck_round(
+                    dot(F.col("vn"), F.col("cv")) / l2_norm(F.col("cv")),
+                    6).alias("ccos")),
+        "cell_members")
     a, b = m.alias("a"), m.alias("b")
-    cos4 = ops_km._duck_round(dot(F.col("a.vn"), F.col("b.vn")), 4)
+    cos4 = duck_round(dot(F.col("a.vn"), F.col("b.vn")), 4)
     loser = F.when(
         (F.col("a.ccos") > F.col("b.ccos"))
         | ((F.col("a.ccos") == F.col("b.ccos"))

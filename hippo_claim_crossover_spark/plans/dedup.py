@@ -40,6 +40,7 @@ from hippo_claim_crossover_spark.plans.base import (
     t,
     t_wide,
 )
+from hippo_claim_crossover_spark.session import materialize
 
 N_MINHASH = 8
 SIMHASH_BITS = 32
@@ -96,7 +97,7 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting-list sizes, not n²."""
     d = t_wide(spark, sf_dir, "documents")
     # Implementation notes (xxhash64 join keys, posexplode plan shape,
-    # carried n_sh column, lazy localCheckpoint of the shingle table so
+    # carried n_sh column, one materialization of the shingle table so
     # the self-join reads one materialization instead of re-deriving the
     # shingle pipeline per side) live on
     # operators.dedup.ngram_jaccard_pairs / shingle_table.
@@ -151,8 +152,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra shuffles. Rounding rides the floor-formula (≡ DuckDB round on
     non-negative quotients)."""
     d = t_wide(spark, sf_dir, "documents")
-    sh = ops_dedup.shingle_table(d, "doc_id", "text", NGRAM) \
-        .localCheckpoint(eager=False)
+    sh = materialize(ops_dedup.shingle_table(d, "doc_id", "text", NGRAM),
+                     "shingles")
     a, b = sh.alias("a"), sh.alias("b")
     pairs = (
         a.join(b, (F.col("a.sh") == F.col("b.sh"))
@@ -231,15 +232,16 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (t_wide(spark, sf_dir, "documents")
          .select("doc_id", "source", F.split("text", " ").alias("tk"))
          .withColumn("n_tok", F.size("tk")))
-    wins = (d.where(F.col("n_tok") >= SPAN_W)
-            .select("doc_id",
-                    F.posexplode(F.expr(
-                        f"transform(sequence(1, n_tok - {SPAN_W} + 1), "
-                        f"i -> array_join(slice(tk, i, {SPAN_W}), ' '))"))
-                    .alias("pos0", "win"))
-            .select("doc_id", (F.col("pos0") + 1).alias("pos"),
-                    F.xxhash64("win").alias("wh"))
-            .localCheckpoint(eager=False))
+    wins = materialize(
+        d.where(F.col("n_tok") >= SPAN_W)
+        .select("doc_id",
+                F.posexplode(F.expr(
+                    f"transform(sequence(1, n_tok - {SPAN_W} + 1), "
+                    f"i -> array_join(slice(tk, i, {SPAN_W}), ' '))"))
+                .alias("pos0", "win"))
+        .select("doc_id", (F.col("pos0") + 1).alias("pos"),
+                F.xxhash64("win").alias("wh")),
+        "span_windows")
     dup = (wins.groupBy("wh").agg(F.count(F.lit(1)).alias("_c"))
            .where(F.col("_c") >= 2).select("wh"))
     lag_w = Window.partitionBy("doc_id").orderBy("pos")
@@ -365,14 +367,13 @@ def band_pairs_for(docs: DataFrame) -> DataFrame:
     the pipeline composite runs it on its quality/exact-dedup survivors
     rather than the raw table.
 
-    The band-key table is materialized once (lazy localCheckpoint, the
-    operators/dedup.py:100-111 trade): the self-join references it on
+    The band-key table is materialized once: the self-join references it on
     BOTH sides and the sides end up with different exchange types
     (hash vs broadcast), so nothing is reused — the r15 plan dumps show
     the full shingle→md5→8-way-min minhash pipeline duplicated under
     each side (r16 fix; the checkpoint is band-key-table-sized, 4 rows
     per doc)."""
-    keyed = band_key_table(docs).localCheckpoint(eager=False)
+    keyed = materialize(band_key_table(docs), "band_keys")
     a, b = keyed.alias("a"), keyed.alias("b")
     return (
         a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
@@ -569,20 +570,19 @@ def q_split_leakproof(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    pairs = _band_pairs(spark, sf_dir).localCheckpoint(eager=False)
+    pairs = materialize(_band_pairs(spark, sf_dir), "band_pairs")
     comp = connected_components(pairs, src="doc_a", dst="doc_b")
     d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     bucket = hex2long(F.md5(F.concat(
         F.col("cluster_id").cast("string"), F.lit(":lsplit")))) % 10
-    assigned = (
+    assigned = materialize(
         d.join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
         .select("doc_id", "n_chars",
                 F.coalesce(F.col("comp"), F.col("doc_id"))
                 .alias("cluster_id"))
         .withColumn("split", F.when(bucket == 0, "test")
-                    .when(bucket == 1, "val").otherwise("train"))
-        .localCheckpoint(eager=False)
-    )
+                    .when(bucket == 1, "val").otherwise("train")),
+        "split_assignment")
     sp = assigned.select("doc_id", "split")
     cross = (
         pairs
@@ -858,18 +858,17 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = d.where(F.col("source") == EVAL_SOURCE)
     tr = d.where(F.col("source") != EVAL_SOURCE)
     # The eval shingle table feeds BOTH the semi-join probe and the
-    # per-doc denominator scan; materialize it once (lazy localCheckpoint
-    # — the operators/dedup.py:100-111 trade) instead of re-running the
-    # scan + shingle pipeline per consumer.
-    ev_sh = (ops_dedup.shingle_table(ev, "doc_id", "text", NGRAM)
-             .localCheckpoint(eager=False))
-    # The train side ALSO checkpoints before its distinct: the semi
+    # per-doc denominator scan; materialize it once instead of re-running
+    # the scan + shingle pipeline per consumer.
+    ev_sh = materialize(ops_dedup.shingle_table(ev, "doc_id", "text", NGRAM),
+                        "eval_shingles")
+    # The train side ALSO materializes before its distinct: the semi
     # join's pushed-down sh predicates otherwise re-evaluate the
     # shingle generate pipeline inside the scan (the ngram pathology,
-    # operators/dedup.py:100-111) — measured 4.4s → 2.3s cold and far
-    # tighter run-to-run variance at sf0.1.
-    tr_sh = (ops_dedup.shingle_table(tr, "doc_id", "text", NGRAM)
-             .select("sh").localCheckpoint(eager=False).distinct())
+    # operators/dedup.ngram_jaccard_pairs) — measured 4.4s → 2.3s cold
+    # and far tighter run-to-run variance at sf0.1.
+    tr_sh = materialize(ops_dedup.shingle_table(tr, "doc_id", "text", NGRAM)
+                        .select("sh"), "train_shingles").distinct()
     n_cont = F.count("_e")
     return (
         ev_sh.join(tr_sh.withColumn("_e", F.lit(1)), "sh", "left")
@@ -973,9 +972,9 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per source with every stage's surviving count, the
     final token total, and the packed bin count — the curation report a
     100 TB run would emit. Each multi-consumer stage's survivor set is
-    lazily localCheckpoint-ed: without the checkpoints the shingle/
-    signature pipelines would re-derive once per consumer (the measured
-    family-wide pathology, operators/dedup.py:100-111). r16 counter
+    materialized: without the checkpoints the shingle/signature pipelines
+    would re-derive once per consumer (the measured family-wide
+    pathology, operators/dedup.ngram_jaccard_pairs). r16 counter
     fusion: the scored frame (scan + quality regexes, map-only) is
     checkpointed once and the n_input/n_quality counters are ONE
     aggregate over it (count + count_if ≡ the two separate stage
@@ -1003,31 +1002,31 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t_wide(spark, sf_dir, "documents")
     train = (d.where(F.col("source") != EVAL_SOURCE)
              .select("doc_id", "source", "text"))
-    scored = quality_metrics(
+    scored = materialize(quality_metrics(
         train, stopwords=("the", "a", "and", "of"), target_tokens=80,
     ).select("doc_id", "source", "text",
              F.col("n_tokens").cast("long").alias("n_tokens"),
-             "quality_score").localCheckpoint(eager=False)
+             "quality_score"), "quality_scored")
     q1 = scored.where(F.col("quality_score") >= QUALITY_FLOOR)
     wdup = Window.partitionBy(F.md5("text"))
-    q2 = (q1.withColumn("_keep", F.min("doc_id").over(wdup))
-          .where(F.col("_keep") == F.col("doc_id")).drop("_keep")
-          .localCheckpoint(eager=False))
+    q2 = materialize(q1.withColumn("_keep", F.min("doc_id").over(wdup))
+                     .where(F.col("_keep") == F.col("doc_id")).drop("_keep"),
+                     "exact_survivors")
     comp = connected_components(band_pairs_for(q2),
                                 src="doc_a", dst="doc_b")
     wc = Window.partitionBy("cluster_id").orderBy(
         F.desc("quality_score"), F.asc("doc_id"))
-    q3 = (q2.join(comp.withColumnRenamed("node", "doc_id"),
-                  "doc_id", "left")
-          .withColumn("cluster_id",
-                      F.coalesce(F.col("comp"), F.col("doc_id")))
-          .withColumn("rk", F.row_number().over(wc))
-          .where(F.col("rk") == 1).drop("comp", "rk", "cluster_id")
-          .localCheckpoint(eager=False))
+    q3 = materialize(q2.join(comp.withColumnRenamed("node", "doc_id"),
+                             "doc_id", "left")
+                     .withColumn("cluster_id",
+                                 F.coalesce(F.col("comp"), F.col("doc_id")))
+                     .withColumn("rk", F.row_number().over(wc))
+                     .where(F.col("rk") == 1).drop("comp", "rk", "cluster_id"),
+                     "neardup_survivors")
     ev_sh = (ops_dedup.shingle_table(d.where(F.col("source")
                                              == EVAL_SOURCE))
              .select("sh").distinct())
-    tr_sh = ops_dedup.shingle_table(q3).localCheckpoint(eager=False)
+    tr_sh = materialize(ops_dedup.shingle_table(q3), "train_shingles")
     # Deliberately the SEMI-join shape, not a left-join+count fusion
     # (r16: measured — the semi join drops >90% of shingle rows before
     # the doc aggregate, so fusing hits and n_sh into one aggregate
@@ -1040,8 +1039,8 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("hits").cast("double") / F.col("n_sh") > CONTAM_MAX)
         .select("doc_id")
     )
-    q4 = (q3.join(contaminated, "doc_id", "left_anti")
-          .localCheckpoint(eager=False))
+    q4 = materialize(q3.join(contaminated, "doc_id", "left_anti"),
+                     "decontam_survivors")
     wp = Window.partitionBy("source").orderBy("doc_id")
     packed = q4.withColumn(
         "start_tok", F.sum("n_tokens").over(wp) - F.col("n_tokens"))
@@ -1180,11 +1179,11 @@ def q_fuzzy_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs with the JVM levenshtein.  Output: near pairs (distance ≤ 3,
     not equal) with their part counts — the merge-candidate worklist.
     """
-    names = (t(spark, sf_dir, "part")
-             .groupBy("p_name")
-             .agg(F.count(F.lit(1)).alias("n_parts"))
-             .withColumn("blk", F.split(F.col("p_name"), " ")[0])
-             .localCheckpoint(eager=False))
+    names = materialize(t(spark, sf_dir, "part")
+                        .groupBy("p_name")
+                        .agg(F.count(F.lit(1)).alias("n_parts"))
+                        .withColumn("blk", F.split(F.col("p_name"), " ")[0]),
+                        "name_blocks")
     a = names.select(F.col("p_name").alias("name_a"),
                      F.col("n_parts").alias("n_a"), "blk")
     b = names.select(F.col("p_name").alias("name_b"),
@@ -1298,12 +1297,12 @@ def q_join_setsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py (their 10x reduction is in SCALE.md), and
     tools/scale_probe.py times this query on a K-times corpus.
     """
-    d = (t_wide(spark, sf_dir, "documents")
-         .where(F.col("source") == "src0")
-         .select("doc_id",
-                 F.array_distinct(F.split(F.col("text"), " "))
-                 .alias("toks"))
-         .localCheckpoint(eager=False))
+    d = materialize(t_wide(spark, sf_dir, "documents")
+                    .where(F.col("source") == "src0")
+                    .select("doc_id",
+                            F.array_distinct(F.split(F.col("text"), " "))
+                            .alias("toks")),
+                    "token_sets")
     cand = setsim_candidates(d)
     ta = d.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
     tb = d.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))

@@ -31,6 +31,7 @@ from hippo_claim_crossover_spark.plans.base import (
     t_wide,
     within_rel_band,
 )
+from hippo_claim_crossover_spark.session import materialize
 
 
 def _exact_price_units_percentiles(li: DataFrame) -> DataFrame:
@@ -627,10 +628,10 @@ def q_sample_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     # One aggregate scan serves both weight inputs: the corpus totals
     # derive from the tiny per-lang frame, not a third corpus read.
-    lang_n = (t(spark, sf_dir, "documents")
-              .groupBy(F.col("lang").alias("_lang"))
-              .agg(F.count(F.lit(1)).alias("n_lang"))
-              .localCheckpoint(eager=False))
+    lang_n = materialize(t(spark, sf_dir, "documents")
+                         .groupBy(F.col("lang").alias("_lang"))
+                         .agg(F.count(F.lit(1)).alias("n_lang")),
+                         "lang_counts")
     tot = lang_n.agg(F.sum("n_lang").alias("n_tot"),
                      F.count(F.lit(1)).alias("k_lang"))
     from hippo_claim_crossover_spark.plans.base import aes_key
@@ -715,8 +716,9 @@ def q_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select("text")
     toks = (docs.select(F.explode(F.split("text", " ")).alias("tok"))
             .where(F.col("tok") != ""))
-    counts = (toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-              .localCheckpoint(eager=False))
+    counts = materialize(toks.groupBy("tok")
+                         .agg(F.count(F.lit(1)).alias("cnt")),
+                         "token_counts")
     seeds = spark.range(CMS_DEPTH).select(F.col("id").alias("seed"))
     cells = (counts.crossJoin(F.broadcast(seeds))
              .select("seed",
@@ -850,8 +852,9 @@ def q_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .cast("string"))
                   .alias("k"))
               .distinct())
-    hashed = (scoped.select("event_type", hex2long(F.md5("k")).alias("h"))
-              .localCheckpoint(eager=False))
+    hashed = materialize(
+        scoped.select("event_type", hex2long(F.md5("k")).alias("h")),
+        "user_day_hashes")
     exact = (hashed.groupBy("event_type")
              .agg(F.count(F.lit(1)).alias("exact_distinct")))
     w = Window.partitionBy("event_type").orderBy("h")
@@ -958,8 +961,9 @@ def q_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .alias("k"))
               .distinct())
     # consumers: sketch build + exact self-join (×2) + per-type counts
-    hashed = (scoped.select("_t", hex2long(F.md5("k")).alias("h"))
-              .localCheckpoint(eager=False))
+    hashed = materialize(
+        scoped.select("_t", hex2long(F.md5("k")).alias("h")),
+        "user_day_hashes")
     n_t = hashed.groupBy("_t").agg(F.count(F.lit(1)).alias("_n"))
     w = Window.partitionBy("_t").orderBy("h")
     sk = (hashed.withColumn("_rn", F.row_number().over(w))
@@ -1112,9 +1116,9 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three consumers read `hist` (range sampling, the CDF shuffle,
     # the totals agg) — same single-materialization rule as
     # grouped_percentiles' internal raw-row histogram
-    hist = (li.groupBy("l_returnflag", "l_extendedprice")
-            .agg(F.sum("w_u").alias("_w"))
-            .localCheckpoint(eager=False))
+    hist = materialize(li.groupBy("l_returnflag", "l_extendedprice")
+                       .agg(F.sum("w_u").alias("_w")),
+                       "weight_hist")
     cdf = grouped_histogram_cdf(hist, ["l_returnflag"],
                                 "l_extendedprice", "_w")
     totals = hist.groupBy("l_returnflag").agg(F.sum("_w").alias("_tw"))
@@ -1480,7 +1484,7 @@ def q_dataset_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares = F.broadcast(local_frame(
         spark, MIX_SHARES, "source string, share bigint"))
     docs = t(spark, sf_dir, "documents").select("doc_id", "source")
-    tagged = docs.join(shares, "source").localCheckpoint(eager=False)
+    tagged = materialize(docs.join(shares, "source"), "mix_tagged")
     avail = (tagged.groupBy("source", "share")
              .agg(F.count(F.lit(1)).alias("n_avail")))
     cap = avail.agg(F.min(F.expr(

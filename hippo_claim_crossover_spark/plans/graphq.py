@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec, duck_round, hex2long, money_micros, t)
+from hippo_claim_crossover_spark.session import materialize
 
 DAMPING = 0.85
 ITERS = 2
@@ -67,12 +68,12 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The edge build's ``distinct()`` and the plan-build ``count()`` follow
     the documented pattern (metadata-only for Parquet; the oracle needs
-    the identical N). The edge list is materialized once via lazy
-    ``localCheckpoint`` — it has 3+ consumers (deg + each round's join)
-    and would otherwise re-run the basket self-join per consumer, the
-    exact recompute pathology operators/dedup.py documents; at 100 TB
-    the analogue is writing the edge list out once before iterating."""
-    e = _edges(spark, sf_dir).localCheckpoint(eager=False)
+    the identical N). The edge list is materialized once — it has 3+
+    consumers (deg + each round's join) and would otherwise re-run the
+    basket self-join per consumer, the exact recompute pathology
+    operators/dedup.py documents; at 100 TB the analogue is writing the
+    edge list out once before iterating."""
+    e = materialize(_edges(spark, sf_dir), "copurchase_edges")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()
     base = (1.0 - DAMPING) / n  # identical IEEE double inlined both sides
@@ -151,15 +152,14 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⋈ e3(u,w) — two equi-joins, no candidate dedup, never all-pairs.
     Wedges (length-2 paths) come from the exact integer fold
     Σ deg·(deg−1)/2; clustering = 3·T / W rides duck_round. The
-    canonical pair list is materialized once (lazy localCheckpoint) for
-    its four consumers. At 100 TB the standard hardening is
-    degree-ordering instead of id-ordering (orient each edge from the
-    lower-degree endpoint, breaking ties by id) so hub nodes never fan
-    out as e1.u — same plan shape, one extra deg join to orient."""
+    canonical pair list is materialized once for its four consumers. At
+    100 TB the standard hardening is degree-ordering instead of
+    id-ordering (orient each edge from the lower-degree endpoint, breaking
+    ties by id) so hub nodes never fan out as e1.u — same plan shape, one
+    extra deg join to orient."""
     from hippo_claim_crossover_spark.operators.graph import triangle_stats
 
-    return triangle_stats(
-        _pairs(spark, sf_dir).localCheckpoint(eager=False))
+    return triangle_stats(materialize(_pairs(spark, sf_dir), "canon_pairs"))
 
 
 ORACLE_GRAPH_TRIANGLES = f"""
@@ -209,7 +209,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE (UNION-dedup per (node, depth), so it terminates on cycles) —
     two independent traversal algorithms agreeing.
     """
-    edges = _edges(spark, sf_dir).localCheckpoint(eager=False)
+    edges = materialize(_edges(spark, sf_dir), "copurchase_edges")
     dist = (edges.select(F.col("src").alias("node")).distinct()
             .withColumn("hops", F.when(F.col("node") % 17 == 0, 0)
                         .cast("int")))
@@ -218,13 +218,11 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
                            edges.src == F.col("node"))
                 .groupBy(F.col("dst").alias("node2"))
                 .agg((F.min("hops") + 1).cast("int").alias("nd")))
-        dist = (dist.join(cand, dist.node == cand.node2, "left")
-                .select("node",
-                        F.least("hops", "nd").alias("_m"),
-                        "hops", "nd")
-                .select("node",
-                        F.coalesce("_m", "hops", "nd").alias("hops"))
-                .localCheckpoint(eager=False))
+        dist = materialize(
+            dist.join(cand, dist.node == cand.node2, "left")
+            .select("node", F.least("hops", "nd").alias("_m"), "hops", "nd")
+            .select("node", F.coalesce("_m", "hops", "nd").alias("hops")),
+            "bfs_round")
     return (dist.where(F.col("hops").isNotNull())
             .select(F.col("node").alias("part_id"), "hops"))
 
@@ -276,14 +274,13 @@ def q_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (t(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_partkey").distinct())
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    owned = (
+    owned = materialize(
         li.join(o, li.l_orderkey == o.o_orderkey)
         .where(F.col("o_custkey") % 50 == 0)
         .select(F.col("o_custkey").alias("cust"),
                 F.col("l_partkey").alias("part"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+        .distinct(),
+        "owned_parts")
     from hippo_claim_crossover_spark.operators.graph import basket_pairs
 
     pairs = (basket_pairs(t(spark, sf_dir, "lineitem")
@@ -468,23 +465,23 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     label at max). Label tables never exceed |nodes| rows; the edge
     list is materialized once. Never all-pairs, no Pregel-style
     mutable state needed — each round is a plain dataflow."""
-    e = _edges(spark, sf_dir).localCheckpoint(eager=False)
-    labels = (e.select(F.col("src").alias("node"))
-              .distinct()
-              .select("node", F.col("node").alias("label"))
-              .localCheckpoint(eager=False))
+    e = materialize(_edges(spark, sf_dir), "copurchase_edges")
+    labels = materialize(e.select(F.col("src").alias("node"))
+                         .distinct()
+                         .select("node", F.col("node").alias("label")),
+                         "lpa_labels")
     for _ in range(LPA_ROUNDS):
         nbr = (e.join(labels, e.dst == labels.node)
                .select("src", "label"))
         counts = (nbr.groupBy("src", "label")
                   .agg(F.count(F.lit(1)).alias("c")))
         mx = counts.groupBy("src").agg(F.max("c").alias("mc"))
-        labels = (counts.join(mx, "src")
-                  .where(F.col("c") == F.col("mc"))
-                  .groupBy("src")
-                  .agg(F.min("label").alias("label"))
-                  .select(F.col("src").alias("node"), "label")
-                  .localCheckpoint(eager=False))
+        labels = materialize(counts.join(mx, "src")
+                             .where(F.col("c") == F.col("mc"))
+                             .groupBy("src")
+                             .agg(F.min("label").alias("label"))
+                             .select(F.col("src").alias("node"), "label"),
+                             "lpa_labels")
     return (labels.groupBy(F.col("label").alias("community"))
             .agg(F.count(F.lit(1)).alias("n_members"),
                  F.min("node").alias("min_member"),

@@ -15,7 +15,7 @@ from hippo_claim_crossover_spark.multimodal import (
     sample_frames,
 )
 from hippo_claim_crossover_spark.plans.base import QuerySpec, t
-from hippo_claim_crossover_spark.session import fixture_dir
+from hippo_claim_crossover_spark.session import fixture_dir, materialize
 
 
 def q_mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -328,7 +328,7 @@ def q_mm_pairfilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup stage blocks on adaptive SRP buckets (planes from the FULL
     table count, so the oracle recomputes the same plane count from its
     own COUNT(*)); no stage is all-pairs. The kept set feeds three
-    consumers, so it is localCheckpoint'd once."""
+    consumers, so it is materialized once."""
     from hippo_claim_crossover_spark.operators import similarity as ops_sim
     from hippo_claim_crossover_spark.plans.base import (
         duck_round,
@@ -361,8 +361,8 @@ def q_mm_pairfilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cent), "label")
         .select("vec_id", "label", "v",
                 duck_round(cos_raw, 4).alias("cos4")))
-    kept = (scored.where(F.col("cos4") >= MM_COHERENCE)
-            .localCheckpoint(eager=False))
+    kept = materialize(scored.where(F.col("cos4") >= MM_COHERENCE),
+                       "coherent_pairs")
     # metadata-only parquet footer count (t_wide's repartition would
     # force a full scan+shuffle just to learn the row count)
     n_total = t(spark, sf_dir, "embeddings").count()

@@ -36,7 +36,7 @@ NULL_RANK_SENTINEL = TOP_K + 1
 _PLANES = [ops_sim.srp_hyperplane(p, DIM) for p in range(N_PLANES)]
 
 
-# floor(x*10^nd + 0.5)/10^nd mirrors operators.similarity._duck_round
+# floor(x*10^nd + 0.5)/10^nd mirrors functions.scalar.duck_round
 # exactly (same association order) — NOT DuckDB round(), whose
 # half-away-from-zero differs from the floor formula on negative halfway
 # cosines. Used for every cosine the oracles emit or rank on.
@@ -399,15 +399,15 @@ def q_sim_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical top-k."""
     from pyspark.sql import types as T
 
-    from hippo_claim_crossover_spark.session import fixture_dir
+    from hippo_claim_crossover_spark.session import fixture_dir, materialize
 
     e = _vectors(spark, sf_dir)
     q = _query_vec(e)
     s = e.where(F.col("vec_id") != QUERY_VEC_ID)
 
     def write_index(out: str) -> None:
-        cents_b = ops_sim.ivf_centroids(s, N_CELLS).localCheckpoint(
-            eager=False)
+        cents_b = materialize(ops_sim.ivf_centroids(s, N_CELLS),
+                              "ivf_centroids")
         cents_b.write.mode("overwrite").parquet(f"{out}/centroids")
         (ops_sim.ivf_assign(s, cents_b)
          .write.mode("overwrite").partitionBy("cell")

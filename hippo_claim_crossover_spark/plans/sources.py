@@ -356,10 +356,10 @@ def q_src_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-produces committed ranges via readBetweenOffsets. The drained
     memory-sink table must equal the batch face of the same source —
     proven here by the identical DuckDB oracle replaying the generator.
-    Drain-by-poll: the source is finite, so the query stops once every
-    offset is committed (bounded wait)."""
-    import time
-
+    ``processAllAvailable`` drains it: the source is finite, so the wait
+    ends once every offset is committed, and a failing stream raises at
+    once. (``availableNow`` would commit only the first rate-limited
+    batch: PySpark's Python stream source does not support it.)"""
     from hippo_claim_crossover_spark import datasource
 
     datasource.register(spark)
@@ -370,10 +370,7 @@ def q_src_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (s.writeStream.format("memory").queryName(name)
          .outputMode("append").start())
     try:
-        deadline = time.time() + 120
-        while (spark.table(name).count() < PYDS_N
-               and time.time() < deadline):
-            time.sleep(0.2)
+        q.processAllAvailable()
     finally:
         q.stop()
     return spark.table(name)

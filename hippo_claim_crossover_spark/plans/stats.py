@@ -38,6 +38,7 @@ from hippo_claim_crossover_spark.plans.base import (
     sql_hex2long,
     t,
 )
+from hippo_claim_crossover_spark.session import materialize
 
 _D38 = "decimal(38,0)"
 
@@ -238,9 +239,9 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-phase-safe row_number window, tie-broken by event_id."""
     e = t(spark, sf_dir, "events")
     vals = e.select("event_id", "event_type", "value")
-    hist = (vals.groupBy("event_type", "value")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .localCheckpoint(eager=False))
+    hist = materialize(vals.groupBy("event_type", "value")
+                       .agg(F.count(F.lit(1)).alias("_cnt")),
+                       "value_hist")
     med = grouped_percentiles(hist, ["event_type"], "value", [0.5],
                               cnt_col="_cnt", bounded=True).select(
         "event_type", F.col("value").alias("med"))
@@ -328,9 +329,9 @@ def q_outlier_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded-histogram path — residuals live on the 2-decimal value
     # grid shifted by ≤ |type|×24 profile means, so |rows per type| is
     # capped by the value DOMAIN × 24, independent of the row count.
-    rhist = (resid.groupBy("event_type", "resid")
-             .agg(F.count(F.lit(1)).alias("_cnt"))
-             .localCheckpoint(eager=False))
+    rhist = materialize(resid.groupBy("event_type", "resid")
+                        .agg(F.count(F.lit(1)).alias("_cnt")),
+                        "residual_hist")
     med = grouped_percentiles(rhist, ["event_type"], "resid", [0.5],
                               cnt_col="_cnt", bounded=True).select(
         "event_type", F.col("value").alias("med"))
@@ -934,9 +935,9 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = t(spark, sf_dir, "lineitem").select("l_returnflag",
                                              "l_extendedprice")
-    hist = (li.groupBy("l_returnflag", "l_extendedprice")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .localCheckpoint(eager=False))
+    hist = materialize(li.groupBy("l_returnflag", "l_extendedprice")
+                       .agg(F.count(F.lit(1)).alias("_cnt")),
+                       "price_hist")
     pcts = (grouped_percentiles(
         hist, ["l_returnflag"], "l_extendedprice", [0.05, 0.95],
         cnt_col="_cnt")
@@ -1108,9 +1109,9 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write-the-projection-once rule; measured 0.97s → 0.27s warm
     # best-of-3 at sf0.1 (the window otherwise recomputes per branch,
     # ReusedExchange only dedups the exchange below it).
-    ranked = grouped_global_rank(rev, ["c_mktsegment"],
-                                 ["rev_u", "o_custkey"]) \
-        .localCheckpoint(eager=False)
+    ranked = materialize(grouped_global_rank(rev, ["c_mktsegment"],
+                                             ["rev_u", "o_custkey"]),
+                         "segment_rank")
     totals = (ranked.groupBy("c_mktsegment")
               .agg(F.count(F.lit(1)).alias("n"),
                    _dsum(F.col("rev_u")).alias("sum_x"),
@@ -1282,10 +1283,11 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here n·C stays < 9e18 at the gated fixtures; the product is
     computed in DECIMAL(38,0) regardless so no bound is load-bearing).
     """
-    e = (t(spark, sf_dir, "events")
-         .select("event_type", "event_id", "ts",
-                 money_micros(F.col("value")).alias("v_u"))
-         .localCheckpoint(eager=False))  # 2 consumers: totals + prefix
+    # 2 consumers: totals + prefix
+    e = materialize(t(spark, sf_dir, "events")
+                    .select("event_type", "event_id", "ts",
+                            money_micros(F.col("value")).alias("v_u")),
+                    "event_values")
     w = (Window.partitionBy("event_type").orderBy("event_id")
          .rowsBetween(Window.unboundedPreceding, 0))
     totals = (e.groupBy("event_type")
@@ -1298,8 +1300,8 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                "ns_u",
                F.col("n").cast(_D38) * F.col("c_u").cast(_D38)
                - F.col("t_idx").cast(_D38) * F.col("tot_u").cast(_D38)))
-    dev = dev.withColumn("absdev", F.abs(F.col("ns_u"))) \
-             .localCheckpoint(eager=False)
+    dev = materialize(dev.withColumn("absdev", F.abs(F.col("ns_u"))),
+                      "cusum_dev")
     # deterministic argmax without engine-specific struct-ordered
     # arg_max: max |n·S_t| per type (broadcast back, exact integer
     # equality), ties to the earliest event via min/min_by
@@ -1394,11 +1396,11 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean = F.col("s1") / F.col("nd")
     var = ((F.col("s2") - F.col("s1") * F.col("s1") / F.col("nd"))
            / (F.col("nd") - F.lit(1.0)))
-    # two consumers (treatment/control splits) — checkpoint or the
+    # two consumers (treatment/control splits) — materialize or the
     # whole join+aggregate recomputes per side
-    arms = (agg.select("c_mktsegment", "arm", "nd",
-                       mean.alias("m"), var.alias("v"))
-            .localCheckpoint(eager=False))
+    arms = materialize(agg.select("c_mktsegment", "arm", "nd",
+                                  mean.alias("m"), var.alias("v")),
+                       "ab_arms")
     a = arms.where(F.col("arm") == "a").select(
         "c_mktsegment", F.col("nd").alias("na"), F.col("m").alias("ma"),
         F.col("v").alias("va"))
@@ -1477,9 +1479,9 @@ def q_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (group, value) pairs once and ≤|groups| rows after."""
     li = t(spark, sf_dir, "lineitem").select(
         "l_returnflag", F.col("l_quantity").cast("long").alias("qty"))
-    counts = (li.groupBy("l_returnflag", "qty")
-              .agg(F.count(F.lit(1)).alias("c"))
-              .localCheckpoint(eager=False))
+    counts = materialize(li.groupBy("l_returnflag", "qty")
+                         .agg(F.count(F.lit(1)).alias("c")),
+                         "quantity_counts")
     mx = counts.groupBy("l_returnflag").agg(
         F.max("c").alias("mc"),
         F.count(F.lit(1)).alias("n_distinct_values"))

@@ -41,6 +41,7 @@ from hippo_claim_crossover_spark.plans.base import (
     money_sum_sql,
     t,
 )
+from hippo_claim_crossover_spark.session import materialize
 
 
 def q_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,10 +277,10 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))))
     # Two consumers (the max scalar and the final filter) — materialize
     # the small per-supplier aggregate once so lineitem is scanned once.
-    per_supp = (li.join(o, li.l_orderkey == o.o_orderkey)
-                .groupBy("l_suppkey")
-                .agg(rev_micros.alias("rev_u"))
-                .localCheckpoint(eager=False))
+    per_supp = materialize(li.join(o, li.l_orderkey == o.o_orderkey)
+                           .groupBy("l_suppkey")
+                           .agg(rev_micros.alias("rev_u")),
+                           "supplier_revenue")
     mx = per_supp.agg(F.max("rev_u").alias("max_u"))
     s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (per_supp.join(F.broadcast(mx), F.col("rev_u") == F.col("max_u"))
@@ -640,11 +641,11 @@ def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select("s_suppkey"))
     li = t(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice")
-    per_part = (li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-                .groupBy("l_partkey")
-                .agg(F.sum(money_micros(F.col("l_extendedprice")))
-                     .alias("value_u"))
-                .localCheckpoint(eager=False))
+    per_part = materialize(
+        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .groupBy("l_partkey")
+        .agg(F.sum(money_micros(F.col("l_extendedprice"))).alias("value_u")),
+        "part_value")
     mean_row = per_part.agg(
         (F.sum("value_u").cast("double") / F.count(F.lit(1)))
         .alias("_mean_u"))
@@ -697,10 +698,11 @@ def q_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
          .where(F.col("p_type") == "PROMO").select("p_partkey"))
     li = t(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity")
-    qty = (li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-           .groupBy("l_partkey", "l_suppkey")
-           .agg(F.sum(F.col("l_quantity").cast("long")).alias("qty"))
-           .localCheckpoint(eager=False))
+    qty = materialize(
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .groupBy("l_partkey", "l_suppkey")
+        .agg(F.sum(F.col("l_quantity").cast("long")).alias("qty")),
+        "promo_quantity")
     totals = (qty.groupBy("l_partkey")
               .agg(F.sum("qty").alias("total_qty"),
                    F.count(F.lit(1)).alias("n_supp")))

@@ -21,6 +21,7 @@ from hippo_claim_crossover_spark.plans.base import (
     t,
     t_wide,
 )
+from hippo_claim_crossover_spark.session import materialize
 
 _STOPWORDS = ("the", "a", "and", "of")
 
@@ -1392,13 +1393,13 @@ def q_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = 100
     d = t_wide(spark, sf_dir, "documents")
     n, mean_len, distinct_ratio = _gopher_metrics()
-    survivors = (d
-                 .withColumn("n_tokens", n)
-                 .where((F.col("n_tokens") >= 50)
-                        & (F.col("n_tokens") <= 100000)
-                        & (mean_len >= 3.0) & (mean_len <= 10.0)
-                        & (distinct_ratio >= 0.2))
-                 .localCheckpoint(eager=False))
+    survivors = materialize(d
+                            .withColumn("n_tokens", n)
+                            .where((F.col("n_tokens") >= 50)
+                                   & (F.col("n_tokens") <= 100000)
+                                   & (mean_len >= 3.0) & (mean_len <= 10.0)
+                                   & (distinct_ratio >= 0.2)),
+                            "export_survivors")
     lang_n = (survivors.groupBy(F.col("lang").alias("_lang"))
               .agg(F.count(F.lit(1)).alias("n_lang")))
     tot = lang_n.agg(F.sum("n_lang").alias("n_tot"),
@@ -1767,15 +1768,16 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (t_wide(spark, sf_dir, "documents")
          .select("doc_id", "source", F.split("text", " ").alias("tk"))
          .withColumn("n_tok", F.size("tk")))
-    kg = (d.where(F.col("n_tok") >= WINNOW_K)
-          .select("doc_id", "source",
-                  F.posexplode(F.expr(
-                      f"transform(sequence(1, n_tok - {WINNOW_K} + 1), "
-                      f"i -> array_join(slice(tk, i, {WINNOW_K}), ' '))"))
-                  .alias("pos0", "kgram"))
-          .select("doc_id", "source", (F.col("pos0") + 1).alias("pos"),
-                  hex2long(F.md5("kgram")).alias("h"))
-          .localCheckpoint(eager=False))
+    kg = materialize(
+        d.where(F.col("n_tok") >= WINNOW_K)
+        .select("doc_id", "source",
+                F.posexplode(F.expr(
+                    f"transform(sequence(1, n_tok - {WINNOW_K} + 1), "
+                    f"i -> array_join(slice(tk, i, {WINNOW_K}), ' '))"))
+                .alias("pos0", "kgram"))
+        .select("doc_id", "source", (F.col("pos0") + 1).alias("pos"),
+                hex2long(F.md5("kgram")).alias("h")),
+        "kgram_hashes")
     # Canonical winnowing selects each window's ARGMIN position
     # (leftmost on hash ties). Encoding (h, pos) as one fixed-width
     # zero-padded string makes "min of the struct" a plain window MIN
@@ -1786,12 +1788,12 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.lpad(F.col("pos").cast("string"), 7, "0"))
     win = (Window.partitionBy("doc_id").orderBy("pos")
            .rowsBetween(-(WINNOW_W - 1), 0))
-    sel = (kg.withColumn("_k", key)
-           .withColumn("_mk", F.min("_k").over(win))
-           .where(F.col("pos") >= WINNOW_W)
-           .select("doc_id", "source", "_mk").distinct()
-           .withColumn("h", F.substring("_mk", 1, 19).cast("long"))
-           .localCheckpoint(eager=False))
+    sel = materialize(kg.withColumn("_k", key)
+                      .withColumn("_mk", F.min("_k").over(win))
+                      .where(F.col("pos") >= WINNOW_W)
+                      .select("doc_id", "source", "_mk").distinct()
+                      .withColumn("h", F.substring("_mk", 1, 19).cast("long")),
+                      "winnow_selected")
     fp = sel.select("doc_id", "source", "h").distinct()
     shared = (fp.groupBy("h").agg(F.count(F.lit(1)).alias("_nd"))
               .where(F.col("_nd") >= 2).select("h"))
@@ -1997,10 +1999,10 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
                     - _log_u(F.col("n_t") + DSIR_BUCKETS)
                     - _log_u(F.col("c_r") + 1)
                     + _log_u(F.col("n_r") + DSIR_BUCKETS)).alias("lam_u")))
-    per_doc = (toks.join(F.broadcast(lam), "b")
-               .groupBy("doc_id", "source")
-               .agg(F.sum("lam_u").alias("w_u"))
-               .localCheckpoint(eager=False))  # two consumers below
+    per_doc = materialize(toks.join(F.broadcast(lam), "b")  # 2 consumers
+                          .groupBy("doc_id", "source")
+                          .agg(F.sum("lam_u").alias("w_u")),
+                          "dsir_weights")
     sel = (per_doc.orderBy(F.col("w_u").desc(), "doc_id")
            .limit(DSIR_K).select("doc_id", F.lit(1).alias("_sel")))
     return (per_doc.join(F.broadcast(sel), "doc_id", "left")

@@ -24,7 +24,11 @@ from hippo_claim_crossover_spark.plans.base import (
     money_sum_sql,
     t,
 )
-from hippo_claim_crossover_spark.session import fixture_dir, run_dir
+from hippo_claim_crossover_spark.session import (
+    fixture_dir,
+    materialize,
+    run_dir,
+)
 
 # DuckDB: naive timestamp from epoch seconds (events.ts is micro-precision;
 # bucket starts are whole seconds so BIGINT arithmetic is exact).
@@ -1173,7 +1177,7 @@ def q_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.col("ts").cast("date"),
                    F.to_date(F.lit("1970-01-01"))).cast("long")
         .alias("day"))
-    ud = e.distinct().localCheckpoint(eager=False)
+    ud = materialize(e.distinct(), "user_days")
     days = ud.select("day").distinct()
     dau = ud.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
 
@@ -1251,8 +1255,8 @@ def q_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
                 / F.lit(3600000000.0)).cast("long").alias("hour_id"),
         money_micros(F.col("value")).alias("v_u"))
-    hourly = (e.groupBy("hour_id").agg(F.sum("v_u").alias("v_u"))
-              .localCheckpoint(eager=False))
+    hourly = materialize(e.groupBy("hour_id").agg(F.sum("v_u").alias("v_u")),
+                         "hourly_totals")
     w = Window.orderBy("hour_id").rowsBetween(-SEASONAL_HALF,
                                               SEASONAL_HALF)
     trended = (hourly
@@ -1508,6 +1512,7 @@ def q_stream_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (spark.read.parquet(out)
               .groupBy(_basename(F.input_file_name()).alias("fname"))
               .agg(F.count(F.lit(1)).alias("n")))
+    # glob bypasses the sink log on purpose; its hasMetadata WARN is expected
     disk = (spark.read.format("binaryFile").load(f"{out}/part-*")
             .select(_basename(F.col("path")).alias("fname"),
                     F.lit(True).alias("on_disk")))
@@ -1594,26 +1599,17 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     run = run_dir(spark, "q_stream_compact")
     ckpt, out = f"{run}/ckpt", f"{run}/out"
     # compactInterval pinned for the run (default 10 would never compact
-    # a 7-batch run); shuffle partitions shrunk for the run only — the
-    # 7 micro-batches each pay per-partition state-store/task overhead
-    # for a single-digit-row state, and nothing here pins file counts.
-    # Both restored in `finally`; queries execute sequentially.
-    tuned = {"spark.sql.streaming.fileSink.log.compactInterval": "4",
-             "spark.sql.shuffle.partitions": "4"}
-    prev: dict[str, str | None] = {}
-    for k, v in tuned.items():
-        try:
-            prev[k] = spark.conf.get(k)
-        except Exception:
-            prev[k] = None
-        spark.conf.set(k, v)
+    # a 7-batch run), restored in `finally`; queries execute sequentially.
+    # run_to_parquet scopes the shuffle partitions itself.
+    key = "spark.sql.streaming.fileSink.log.compactInterval"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
     try:
         run_to_parquet(tumbling_agg(read_event_stream(
             spark, src, max_files_per_trigger=1),
             watermark="5 minutes"), out, ckpt)
     finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
+        spark.conf.set(key, prev)
 
     def _basename(col):
         return F.element_at(F.split(col, "/"), -1)
@@ -1624,7 +1620,7 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(_basename(F.col("lpath")).alias("fname"),
                         "content"))
 
-    logs = _listing(f"{out}/_spark_metadata/*").localCheckpoint(eager=False)
+    logs = materialize(_listing(f"{out}/_spark_metadata/*"), "sink_logs")
     numeric = (logs.where(F.col("fname").rlike("^[0-9]+$"))
                .withColumn("batch_id", F.col("fname").cast("long")))
     compact = (logs.where(F.col("fname").rlike("^[0-9]+\\.compact$"))
@@ -1640,16 +1636,17 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .getField("path")).alias("part")))
 
     cid = compact.agg(F.max("batch_id").alias("cid"))
-    n_adds = _adds(numeric).localCheckpoint(eager=False)
-    c_adds = _adds(compact).localCheckpoint(eager=False)
+    n_adds = materialize(_adds(numeric), "manifest_adds")
+    c_adds = materialize(_adds(compact), "compact_adds")
     pre = (n_adds.crossJoin(F.broadcast(cid))
            .where(F.col("batch_id") < F.col("cid")).select("part"))
     post = (n_adds.crossJoin(F.broadcast(cid))
             .where(F.col("batch_id") > F.col("cid")).select("part"))
     live = c_adds.select("part").unionByName(post)
-    disk = (spark.read.format("binaryFile").load(f"{out}/part-*")
-            .select(_basename(F.col("path")).alias("part"))
-            .localCheckpoint(eager=False))
+    # glob bypasses the sink log on purpose; its hasMetadata WARN is expected
+    disk = materialize(spark.read.format("binaryFile").load(f"{out}/part-*")
+                       .select(_basename(F.col("path")).alias("part")),
+                       "disk_listing")
 
     m_counts = (numeric.agg(F.count(F.lit(1)).alias("n_numeric_manifests"))
                 .crossJoin(F.broadcast(compact.agg(

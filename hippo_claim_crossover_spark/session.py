@@ -15,7 +15,7 @@ import os
 import re
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Every scratch path the package writes goes through ``fixture_dir`` /
 # ``run_dir`` below: ``<root>/<applicationId>/<name>-<sf>[/r<n>]``. The
@@ -171,6 +171,32 @@ def last_output(spark: SparkSession, name: str,
         raise FileNotFoundError(f"no run of {name!r} under {base}")
     return os.path.join(base, f"r{runs[-1]}")
 
+
+
+def materialize(df: DataFrame, why: str) -> DataFrame:
+    """``df`` cut from its lineage as executor-local blocks: the one way
+    the package materializes an intermediate that has several consumers
+    or ends a round of an iterative loop. ``why`` is a short slug naming
+    the reason; every Spark job run beneath this call carries the job tag
+    ``ckpt:<why>``.
+
+    The checkpoint is lazy: the blocks are written by the consumer's
+    first job, not by an extra blocking action. Building the checkpointed
+    RDD still plans ``df``, and AQE runs the shuffle stages beneath it
+    here, at plan-build time; those are the jobs the tag names.
+
+    Executor-local blocks trade away fault tolerance: the lineage is cut,
+    so losing an executor loses its blocks and fails the job. That is the
+    right trade locally and for short jobs; a long many-round cluster run
+    should use reliable ``checkpoint()`` against the cluster checkpoint
+    dir instead, at the cost of a round-trip to storage per call."""
+    sc = df.sparkSession.sparkContext
+    tag = f"ckpt:{why}"
+    sc.addJobTag(tag)
+    try:
+        return df.localCheckpoint(eager=False)
+    finally:
+        sc.removeJobTag(tag)
 
 # Defaults tuned for the local[32] test harness. On a 1000-executor cluster
 # the operative settings (shuffle partitions ~= 2-3x total cores, AQE

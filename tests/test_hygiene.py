@@ -25,7 +25,7 @@ harness code and legitimately materialize results.)
 A second lint keeps every scratch path behind ``session.py``'s API: no
 other package module may spell a scratch root or checkout path. A third
 keeps parquet reads on a declared schema (inference costs a Spark job per
-read).
+read). A fourth keeps every checkpoint behind ``session.materialize``.
 """
 
 from __future__ import annotations
@@ -270,3 +270,35 @@ def test_parquet_reads_declare_their_schema():
     stale = INFERRED_READS - {(rel, owner) for rel, owner, _, declared
                               in reads if not declared}
     assert not stale, f"INFERRED_READS entries no longer infer: {stale}"
+
+
+CHECKPOINTS = {"localCheckpoint", "checkpoint"}
+
+
+def test_checkpoints_go_through_session_materialize():
+    """``session.materialize`` is the one way the package materializes an
+    intermediate: it tags the checkpoint's jobs ``ckpt:<why>`` and holds
+    the lazy / fault-tolerance policy. A ``.localCheckpoint(`` or
+    ``.checkpoint(`` call anywhere else in the package fails here."""
+    hits, owners = [], []
+    for root, _dirs, files in os.walk(PKG):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, PKG)
+            with open(path) as f:
+                tree = ast.parse(f.read(), filename=rel)
+            for top in tree.body:
+                owner = getattr(top, "name", "<module>")
+                for node in ast.walk(top):
+                    if (isinstance(node, ast.Call)
+                            and isinstance(node.func, ast.Attribute)
+                            and node.func.attr in CHECKPOINTS):
+                        if (rel, owner) == ("session.py", "materialize"):
+                            owners.append(owner)
+                        else:
+                            hits.append(f"{rel}:{node.lineno} in {owner}")
+    assert not hits, f"checkpoint(s) outside session.materialize: {hits}"
+    assert owners == ["materialize"], "session.materialize lost its call"
+

@@ -274,8 +274,9 @@ def test_pyds_stream_reader_polls_past_exhaustion():
     """Driven through PySpark's prefetch wrapper (what the engine calls),
     the stream source keeps answering once its rows run out: each poll
     past the end returns an empty batch at the same offset, which is how
-    availableNow stops. The cached batches still replay every row, and
-    replay again, since the planner reads a copy of each."""
+    processAllAvailable sees the source drained. The cached batches still
+    replay every row, and replay again, since the planner reads a copy of
+    each."""
     from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper
 
     from hippo_claim_crossover_spark.datasource import (

@@ -119,3 +119,24 @@ def test_scratch_root_is_read_at_call_time(tmp_path, monkeypatch):
     assert sess.run_dir(_SPARK, "q").startswith(str(tmp_path / "a"))
     monkeypatch.setattr(sess, "_SCRATCH_ROOTS", (str(tmp_path / "b"),))
     assert sess.run_dir(_SPARK, "q").startswith(str(tmp_path / "b"))
+
+
+def test_materialize_tags_its_build_jobs_and_keeps_the_rows(spark):
+    """The shuffle stage beneath a checkpointed group-by runs while the
+    plan is built, as a job tagged ``ckpt:<why>``; the tag is gone once
+    ``materialize`` returns, and the result holds the input's rows."""
+    from pyspark.sql import functions as F
+
+    df = (spark.range(1000).groupBy((F.col("id") % 7).alias("k"))
+          .agg(F.count(F.lit(1)).alias("n")))
+    sc = spark.sparkContext
+    out = sess.materialize(df, "test_groupby")
+    assert "ckpt:test_groupby" not in sc.getJobTags()
+    assert sorted(out.collect()) == sorted(df.collect())
+    tracker = sc._jsc.sc().statusTracker()
+    deadline = time.time() + 30  # the status store is updated async
+    while (not len(tracker.getJobIdsForTag("ckpt:test_groupby"))
+           and time.time() < deadline):
+        time.sleep(0.1)
+    assert len(tracker.getJobIdsForTag("ckpt:test_groupby")) >= 1
+

@@ -223,7 +223,7 @@ def test_arrow_kernels_bit_match_hof_expressions(spark):
     from pyspark.sql import types as T
 
     from hippo_claim_crossover_spark.operators.similarity import (
-        _duck_round,
+        duck_round,
         dot,
         pair_cosine_arrow,
         srp_bucket,
@@ -261,7 +261,7 @@ def test_arrow_kernels_bit_match_hof_expressions(spark):
                      F.col("a._vn").alias("va"), F.col("b._vn").alias("vb")))
     want = {(r["id_a"], r["id_b"]): r["c"] for r in pairs.select(
         "id_a", "id_b",
-        _duck_round(dot(F.col("va"), F.col("vb")), 4).alias("c")).collect()}
+        duck_round(dot(F.col("va"), F.col("vb")), 4).alias("c")).collect()}
     got = {(r["id_a"], r["id_b"]): r["cosine"]
            for r in pair_cosine_arrow(pairs, nd=4).collect()}
     assert want == got
