@@ -399,7 +399,7 @@ def main() -> None:
     # scaling ratios (c8 vs c32) are computable from committed artifacts
     # — a genuinely serial query (driver-loop rounds) is then
     # distinguishable from the suite's per-job latency floor.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or "32")
+    cpus = spark.sparkContext.defaultParallelism
     detail = {
         "metric": "headline_queries_total_sec",
         "value": total,

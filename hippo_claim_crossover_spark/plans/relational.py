@@ -1585,39 +1585,31 @@ def q_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     on an empty table would skip the loop silently) and the final
     SELECT emits only ``WHERE total > 0`` — so an empty lineitem
     yields ZERO rows from script and oracle alike, not a sentinel
-    (thr=-1, total=NULL) row only one engine produces. The scripting
-    conf is restored after the run."""
+    (thr=-1, total=NULL) row only one engine produces."""
     ev = t(spark, sf_dir, "lineitem").select("l_discount", "l_extendedprice")
     ev.createOrReplaceTempView("script_li")
-    before = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        out = spark.sql("""
-        BEGIN
-          DECLARE total BIGINT DEFAULT 0;
-          DECLARE cum BIGINT DEFAULT 0;
-          DECLARE thr INT DEFAULT -1;
-          SET total = (
-            SELECT coalesce(sum(
-              CAST(floor(l_extendedprice * 1e6 + 0.5) AS BIGINT)), 0)
-            FROM script_li);
-          WHILE total > 0 AND 2 * cum < total DO
-            SET thr = thr + 1;
-            SET cum = (
-              SELECT coalesce(sum(
-                CAST(floor(l_extendedprice * 1e6 + 0.5) AS BIGINT)), 0)
-              FROM script_li
-              WHERE CAST(floor(l_discount * 100 + 0.5) AS INT) <= thr);
-          END WHILE;
-          SELECT thr AS thr_pct, cum AS cum_micros, total AS total_micros
-          WHERE total > 0;
-        END
-        """)
-    finally:
-        # the script body (DECLAREs, SETs, the loop) executed eagerly
-        # inside spark.sql(); only the final variable SELECT remains as
-        # the returned (conf-independent) one-row frame
-        spark.conf.set("spark.sql.scripting.enabled", before)
+    # SQL scripting is on by default in Spark 4.1
+    out = spark.sql("""
+    BEGIN
+      DECLARE total BIGINT DEFAULT 0;
+      DECLARE cum BIGINT DEFAULT 0;
+      DECLARE thr INT DEFAULT -1;
+      SET total = (
+        SELECT coalesce(sum(
+          CAST(floor(l_extendedprice * 1e6 + 0.5) AS BIGINT)), 0)
+        FROM script_li);
+      WHILE total > 0 AND 2 * cum < total DO
+        SET thr = thr + 1;
+        SET cum = (
+          SELECT coalesce(sum(
+            CAST(floor(l_extendedprice * 1e6 + 0.5) AS BIGINT)), 0)
+          FROM script_li
+          WHERE CAST(floor(l_discount * 100 + 0.5) AS INT) <= thr);
+      END WHILE;
+      SELECT thr AS thr_pct, cum AS cum_micros, total AS total_micros
+      WHERE total > 0;
+    END
+    """)
     return out.select(
         F.col("thr_pct").cast("int"),
         F.col("cum_micros").cast("long"),

@@ -25,6 +25,7 @@ from hippo_claim_crossover_spark.plans.base import (
     t,
 )
 from hippo_claim_crossover_spark.session import (
+    conf_scope,
     fixture_dir,
     materialize,
     run_dir,
@@ -1424,6 +1425,32 @@ def q_stream_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out)
 
 
+def _basename(col):
+    return F.element_at(F.split(col, "/"), -1)
+
+
+def _sink_log(spark: SparkSession, glob_path: str) -> DataFrame:
+    """``(fname, content)`` of every file matching ``glob_path``, read
+    with ``wholeTextFiles``: the only Spark source that lists inside a
+    ``_``-prefixed directory (``_spark_metadata``, checkpoint logs), and
+    those logs hold one metadata-sized file per batch."""
+    rdd = spark.sparkContext.wholeTextFiles(glob_path)
+    return (spark.createDataFrame(rdd, "lpath string, content string")
+            .select(_basename(F.col("lpath")).alias("fname"), "content"))
+
+
+def _sink_log_adds(log: DataFrame) -> DataFrame:
+    """``(batch_id, fname)`` of every file entry in sink-log files given
+    as ``(batch_id, content)``: each entry is one JSON line after the
+    version header."""
+    return (log.select("batch_id",
+                       F.explode(F.split("content", "\n")).alias("v"))
+            .where(F.col("v").startswith("{"))
+            .select("batch_id", _basename(F.from_json(
+                "v", "path string, size bigint, action string")
+                .getField("path")).alias("fname")))
+
+
 def q_stream_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY-ONCE SINK AUDIT — the operational reconciliation a
     production stream runs against its own transaction logs (the
@@ -1480,35 +1507,20 @@ def q_stream_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_to_parquet(tumbling_agg(read_event_stream(
         spark, src, max_files_per_trigger=1)), out, ckpt)
 
-    def _basename(col):
-        return F.element_at(F.split(col, "/"), -1)
-
     def _log_files(glob_path):
-        # wholeTextFiles: the only Spark source that can list inside a
-        # _-prefixed directory (see docstring); one tiny file per batch
-        rdd = spark.sparkContext.wholeTextFiles(glob_path)
         # metadata-log COMPACTION files ('9.compact', written every
         # compactInterval batches on longer runs) match the [0-9]* glob
         # but are rollups, not batches — casting them would yield a
         # NULL batch_id row, so admit fully-numeric basenames only
-        return (spark.createDataFrame(rdd, "lpath string, content string")
-                .withColumn("_base", _basename(F.col("lpath")))
-                .where(F.col("_base").rlike("^[0-9]+$"))
-                .select(F.col("_base").cast("long").alias("batch_id"),
+        return (_sink_log(spark, glob_path)
+                .where(F.col("fname").rlike("^[0-9]+$"))
+                .select(F.col("fname").cast("long").alias("batch_id"),
                         "content"))
 
     def _log_batches(glob_path):
         return _log_files(glob_path).select("batch_id").distinct()
 
-    manifest = (
-        _log_files(f"{out}/_spark_metadata/[0-9]*")
-        .select("batch_id", F.explode(F.split("content", "\n"))
-                .alias("value"))
-        .where(F.col("value").startswith("{"))
-        .select("batch_id",
-                _basename(F.from_json(
-                    "value", "path string, size bigint, action string")
-                    .getField("path")).alias("fname")))
+    manifest = _sink_log_adds(_log_files(f"{out}/_spark_metadata/[0-9]*"))
     counts = (spark.read.parquet(out)
               .groupBy(_basename(F.input_file_name()).alias("fname"))
               .agg(F.count(F.lit(1)).alias("n")))
@@ -1598,54 +1610,32 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ckpt/out stay PER-RUN: only the input dir is shared
     run = run_dir(spark, "q_stream_compact")
     ckpt, out = f"{run}/ckpt", f"{run}/out"
-    # compactInterval pinned for the run (default 10 would never compact
-    # a 7-batch run), restored in `finally`; queries execute sequentially.
-    # run_to_parquet scopes the shuffle partitions itself.
-    key = "spark.sql.streaming.fileSink.log.compactInterval"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "4")
-    try:
+    # the default compactInterval of 10 would never compact a 7-batch run
+    with conf_scope(spark, {
+            "spark.sql.streaming.fileSink.log.compactInterval": "4"}):
         run_to_parquet(tumbling_agg(read_event_stream(
             spark, src, max_files_per_trigger=1),
             watermark="5 minutes"), out, ckpt)
-    finally:
-        spark.conf.set(key, prev)
 
-    def _basename(col):
-        return F.element_at(F.split(col, "/"), -1)
-
-    def _listing(glob_path):
-        rdd = spark.sparkContext.wholeTextFiles(glob_path)
-        return (spark.createDataFrame(rdd, "lpath string, content string")
-                .select(_basename(F.col("lpath")).alias("fname"),
-                        "content"))
-
-    logs = materialize(_listing(f"{out}/_spark_metadata/*"), "sink_logs")
+    logs = materialize(_sink_log(spark, f"{out}/_spark_metadata/*"),
+                       "sink_logs")
     numeric = (logs.where(F.col("fname").rlike("^[0-9]+$"))
                .withColumn("batch_id", F.col("fname").cast("long")))
     compact = (logs.where(F.col("fname").rlike("^[0-9]+\\.compact$"))
                .withColumn("batch_id", F.regexp_extract(
                    "fname", "^([0-9]+)", 1).cast("long")))
 
-    def _adds(df):
-        return (df.select("batch_id",
-                          F.explode(F.split("content", "\n")).alias("v"))
-                .where(F.col("v").startswith("{"))
-                .select("batch_id", _basename(F.from_json(
-                    "v", "path string, size bigint, action string")
-                    .getField("path")).alias("part")))
-
     cid = compact.agg(F.max("batch_id").alias("cid"))
-    n_adds = materialize(_adds(numeric), "manifest_adds")
-    c_adds = materialize(_adds(compact), "compact_adds")
+    n_adds = materialize(_sink_log_adds(numeric), "manifest_adds")
+    c_adds = materialize(_sink_log_adds(compact), "compact_adds")
     pre = (n_adds.crossJoin(F.broadcast(cid))
-           .where(F.col("batch_id") < F.col("cid")).select("part"))
+           .where(F.col("batch_id") < F.col("cid")).select("fname"))
     post = (n_adds.crossJoin(F.broadcast(cid))
-            .where(F.col("batch_id") > F.col("cid")).select("part"))
-    live = c_adds.select("part").unionByName(post)
+            .where(F.col("batch_id") > F.col("cid")).select("fname"))
+    live = c_adds.select("fname").unionByName(post)
     # glob bypasses the sink log on purpose; its hasMetadata WARN is expected
     disk = materialize(spark.read.format("binaryFile").load(f"{out}/part-*")
-                       .select(_basename(F.col("path")).alias("part")),
+                       .select(_basename(F.col("path")).alias("fname")),
                        "disk_listing")
 
     m_counts = (numeric.agg(F.count(F.lit(1)).alias("n_numeric_manifests"))
@@ -1656,23 +1646,23 @@ def q_stream_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first 4 batches committed) — row-based, so shuffle-layout-immune
     per_file = (spark.read.parquet(out)
                 .withColumn("_f", F.input_file_name())
-                .groupBy(_basename(F.col("_f")).alias("part"))
+                .groupBy(_basename(F.col("_f")).alias("fname"))
                 .agg(F.count(F.lit(1)).alias("n")))
-    c_rows = (c_adds.join(per_file, "part", "left")
+    c_rows = (c_adds.join(per_file, "fname", "left")
               .agg(F.sum(F.coalesce(F.col("n"), F.lit(0)))
                    .alias("n_rows_precompact")))
-    commits_hi = (_listing(f"{ckpt}/commits/*")
+    commits_hi = (_sink_log(spark, f"{ckpt}/commits/*")
                   .where(F.col("fname").rlike("^[0-9]+$"))
                   .agg(F.max(F.col("fname").cast("long"))
                        .alias("max_commit_batch")))
     sink = spark.read.parquet(out).agg(
         F.count(F.lit(1)).alias("n_rows_sink"),
         F.round(F.sum("sum_value"), 2).alias("sum_value_sink"))
-    uncovered = (pre.join(c_adds, "part", "left_anti")
+    uncovered = (pre.join(c_adds, "fname", "left_anti")
                  .agg(F.count(F.lit(1)).alias("_n_uncovered")))
-    orphans = (disk.join(live, "part", "left_anti")
+    orphans = (disk.join(live, "fname", "left_anti")
                .agg(F.count(F.lit(1)).alias("_n_orphans")))
-    missing = (live.join(disk, "part", "left_anti")
+    missing = (live.join(disk, "fname", "left_anti")
                .agg(F.count(F.lit(1)).alias("_n_missing")))
     return (m_counts
             .crossJoin(F.broadcast(c_rows))
@@ -2234,15 +2224,11 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "ts", "user_id", "event_type", "value", "props")
     src = ensure_event_batches(spark, ev, sf_dir)
     run = run_dir(spark, "q_stream_rocksdb", sf_dir)
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
     out_name = f"rocks_out_{os.path.basename(run)}"
-    try:
+    with conf_scope(spark, {
+            "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"}):
         stream = read_event_stream(spark, src, max_files_per_trigger=1)
         agg = (stream
                .groupBy(F.window("ts", "10 minutes"), "event_type")
@@ -2258,9 +2244,6 @@ def q_stream_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory(agg, out_name, output_mode="complete",
                       checkpoint=f"{run}/ckpt",
                       partitions=sized_stream_partitions(src))
-    finally:
-        spark.conf.set(key, prev) if prev is not None \
-            else spark.conf.unset(key)
     return spark.table(out_name)
 
 

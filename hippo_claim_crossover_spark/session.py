@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -198,10 +199,35 @@ def materialize(df: DataFrame, why: str) -> DataFrame:
     finally:
         sc.removeJobTag(tag)
 
-# Defaults tuned for the local[32] test harness. On a 1000-executor cluster
-# the operative settings (shuffle partitions ~= 2-3x total cores, AQE
-# coalescing on) come from the submit conf; AQE then re-sizes partitions at
-# runtime so the static number only matters as an upper bound.
+
+@contextmanager
+def conf_scope(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the body of the ``with``: the one
+    way the package changes a session conf. On exit, even when the body
+    raises, each key is put back as it was found: a key that was set
+    gets its old value back, a key that was not set is unset again
+    rather than pinned to its default. A harness plans one query at a
+    time per session, so the scoped value cannot leak into another
+    query's plan."""
+    before = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# Engine defaults. The local master takes the host's usable cores
+# (``SPARK_GRAFT_CPUS`` overrides); the shuffle-partition count stays at
+# 32, the value perfbench is measured at. On a cluster the operative
+# settings (shuffle partitions ~= 2-3x total cores, AQE coalescing on)
+# come from the submit conf; AQE then re-sizes partitions at runtime so
+# the static number only matters as an upper bound.
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -212,7 +238,7 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.session.timeZone": "UTC",
-    # Local mode runs driver + all 32 executor threads in ONE JVM, so this
+    # Local mode runs driver + all executor threads in ONE JVM, so this
     # is the whole engine heap. 8g was measurably too small for the bench
     # session: ~40 queries of accumulated shuffle/broadcast state pushed
     # late queries into full-GC territory (q_sim_knn_blocked 19.7s at 8g
@@ -224,12 +250,11 @@ _DEFAULTS = {
 
 
 def get_spark(app_name: str = "hippo_claim_crossover_spark",
-              master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app_name)
-    builder = builder.master(master or f"local[{cpus}]")
+    cpus = (os.environ.get("SPARK_GRAFT_CPUS")
+            or len(os.sched_getaffinity(0)))
+    builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)

@@ -15,43 +15,27 @@ parquet/kafka writeStream; tests use the memory sink with availableNow.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Default shuffle/state partition count for the pinned streaming-harness
-# drains (r15). The stateful operators instantiate ONE state store per
-# shuffle partition PER MICRO-BATCH (load, update, snapshot, commit), so
-# a drain of K tiny fixture batches pays K × partitions state-store
-# commits; at the session default of 32 that fixed cost dwarfs the
-# handcrafted 3-6-row batches every pinned-fixture stream query
-# processes — and the fixture size is pinned by the query semantics,
-# NOT by the scale factor, so a small count is right at any sf.
-# Production streams size this to their real state volume: override via
-# SPARK_GRAFT_STREAM_SHUFFLE (read PER DRAIN, not at import — r16), or
-# pass an explicit ``partitions`` (the real-table streams derive theirs
-# from input bytes, :func:`sized_stream_partitions`). Declared outputs
-# are partition-count-independent by design (row counts per batch are
-# the pinned invariant; file counts are deliberately never emitted).
+from hippo_claim_crossover_spark.session import conf_scope
+
+# Shuffle/state partition count of the pinned streaming-harness drains.
+# The stateful operators instantiate ONE state store per shuffle
+# partition PER MICRO-BATCH (load, update, snapshot, commit), so a drain
+# of K tiny fixture batches pays K × partitions state-store commits; at
+# the session default of 32 that fixed cost dwarfs the handcrafted
+# 3-6-row batches every pinned-fixture stream query processes — and the
+# fixture size is pinned by the query semantics, NOT by the scale
+# factor, so a small count is right at any sf. Streams over real tables
+# pass an explicit ``partitions`` derived from input bytes
+# (:func:`sized_stream_partitions`). Each drain scopes the count to its
+# run through ``session.conf_scope``. Declared outputs are
+# partition-count-independent by design (row counts per batch are the
+# pinned invariant; file counts are deliberately never emitted).
 STREAM_SHUFFLE_DEFAULT = 4
-
-
-def stream_shuffle_partitions() -> int:
-    """The drain partition count: ``SPARK_GRAFT_STREAM_SHUFFLE`` when
-    set (validated here so a bad override fails at the drain that uses
-    it, with the variable named), else :data:`STREAM_SHUFFLE_DEFAULT`.
-    Read at call time — a same-process override after import works."""
-    raw = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-    if raw is None:
-        return STREAM_SHUFFLE_DEFAULT
-    try:
-        return int(raw)
-    except ValueError:
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_SHUFFLE must be an integer shuffle/state "
-            f"partition count, got {raw!r}") from None
 
 
 def sized_stream_partitions(src_dir: str,
@@ -62,10 +46,7 @@ def sized_stream_partitions(src_dir: str,
     their batches — at 100 TB a constant 4 state partitions is a wall.
     Derives ``ceil(total source bytes / target_bytes)`` from local file
     metadata (no job), floored at the fixture default so tiny inputs
-    keep the cheap drain; an explicit SPARK_GRAFT_STREAM_SHUFFLE still
-    wins (the production override path)."""
-    if os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE") is not None:
-        return stream_shuffle_partitions()
+    keep the cheap drain."""
     total = 0
     for root, _dirs, files in os.walk(src_dir):
         for name in files:
@@ -77,22 +58,6 @@ def sized_stream_partitions(src_dir: str,
     return max(STREAM_SHUFFLE_DEFAULT,
                -(-total // target_bytes))  # ceil div
 
-
-@contextmanager
-def stream_shuffle_scope(spark: SparkSession,
-                         partitions: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` to the stream drain (set
-    before ``start()``, restored after ``awaitTermination()``). The
-    harness is single-threaded per session, so the temporary session
-    conf cannot leak into a concurrently-planned batch query."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    n = partitions if partitions is not None else stream_shuffle_partitions()
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 # Schema of the event-stream parquet files: the ``events`` columns of
 # io.SCHEMAS (µs timestamps), with ``ts`` read as TIMESTAMP, not _NTZ.
@@ -248,7 +213,9 @@ def write_foreach_batch(result: DataFrame, out_dir: str,
         (batch_df.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    with stream_shuffle_scope(result.sparkSession, partitions):
+    with conf_scope(result.sparkSession, {
+            "spark.sql.shuffle.partitions":
+            str(partitions or STREAM_SHUFFLE_DEFAULT)}):
         q = (result.writeStream.foreachBatch(_write)
              .option("checkpointLocation", checkpoint_dir)
              .outputMode("append").trigger(availableNow=True).start())
@@ -262,7 +229,9 @@ def run_to_parquet(result: DataFrame, out_dir: str,
     fault-tolerant sink whose commit log makes checkpoint RESTARTS
     exactly-once (the memory sink refuses to recover); q_stream_resume
     runs two of these against one checkpoint to pin the contract."""
-    with stream_shuffle_scope(result.sparkSession, partitions):
+    with conf_scope(result.sparkSession, {
+            "spark.sql.shuffle.partitions":
+            str(partitions or STREAM_SHUFFLE_DEFAULT)}):
         q = (result.writeStream.format("parquet")
              .option("path", out_dir)
              .option("checkpointLocation", checkpoint)
@@ -284,7 +253,9 @@ def run_to_memory(result: DataFrame, name: str,
          .outputMode(output_mode).trigger(availableNow=True))
     if checkpoint is not None:
         w = w.option("checkpointLocation", checkpoint)
-    with stream_shuffle_scope(result.sparkSession, partitions):
+    with conf_scope(result.sparkSession, {
+            "spark.sql.shuffle.partitions":
+            str(partitions or STREAM_SHUFFLE_DEFAULT)}):
         q = w.start()
         q.awaitTermination()
 

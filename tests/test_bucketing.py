@@ -15,6 +15,7 @@ from hippo_claim_crossover_spark.operators.bucketing import (
     bucketed_join,
     write_bucketed,
 )
+from hippo_claim_crossover_spark.session import conf_scope
 
 
 @pytest.fixture(scope="module")
@@ -38,17 +39,13 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     # at 100 TB neither fact table is broadcastable). Force the shuffle
     # join strategies for the assertion.
     lt, rt = bucketed_tables
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_scope(spark, {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1"}):
         df = bucketed_join(spark, lt, rt, "l_orderkey")
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
 def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed_tables):

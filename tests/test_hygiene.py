@@ -25,13 +25,16 @@ harness code and legitimately materialize results.)
 A second lint keeps every scratch path behind ``session.py``'s API: no
 other package module may spell a scratch root or checkout path. A third
 keeps parquet reads on a declared schema (inference costs a Spark job per
-read). A fourth keeps every checkpoint behind ``session.materialize``.
+read). A fourth keeps every checkpoint behind ``session.materialize``
+and every session conf change behind ``session.conf_scope``.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+
+import pytest
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "hippo_claim_crossover_spark")
@@ -272,14 +275,34 @@ def test_parquet_reads_declare_their_schema():
     assert not stale, f"INFERRED_READS entries no longer infer: {stale}"
 
 
-CHECKPOINTS = {"localCheckpoint", "checkpoint"}
+# (calls, owner): each call may appear in the package only inside
+# ``session.<owner>``. A call is named by its method, or by
+# ``<receiver attribute>.<method>`` (``spark.conf.set`` -> ``conf.set``).
+SESSION_OWNED = [
+    # materialize tags the checkpoint's jobs ``ckpt:<why>`` and holds the
+    # lazy / fault-tolerance policy
+    pytest.param({"localCheckpoint", "checkpoint"}, "materialize",
+                 id="checkpoint"),
+    # conf_scope puts every key back as it found it, set or unset
+    pytest.param({"conf.set", "conf.unset"}, "conf_scope", id="conf"),
+]
 
 
-def test_checkpoints_go_through_session_materialize():
+def _call_names(func: ast.expr) -> set[str]:
+    if not isinstance(func, ast.Attribute):
+        return set()
+    names = {func.attr}
+    if isinstance(func.value, ast.Attribute):
+        names.add(f"{func.value.attr}.{func.attr}")
+    return names
+
+
+@pytest.mark.parametrize("calls, owner", SESSION_OWNED)
+def test_session_primitives_own_their_calls(calls, owner):
     """``session.materialize`` is the one way the package materializes an
-    intermediate: it tags the checkpoint's jobs ``ckpt:<why>`` and holds
-    the lazy / fault-tolerance policy. A ``.localCheckpoint(`` or
-    ``.checkpoint(`` call anywhere else in the package fails here."""
+    intermediate, and ``session.conf_scope`` the one way it changes a
+    session conf. Any of ``calls`` anywhere else in the package fails
+    here."""
     hits, owners = [], []
     for root, _dirs, files in os.walk(PKG):
         for fname in files:
@@ -290,15 +313,13 @@ def test_checkpoints_go_through_session_materialize():
             with open(path) as f:
                 tree = ast.parse(f.read(), filename=rel)
             for top in tree.body:
-                owner = getattr(top, "name", "<module>")
+                top_owner = getattr(top, "name", "<module>")
                 for node in ast.walk(top):
                     if (isinstance(node, ast.Call)
-                            and isinstance(node.func, ast.Attribute)
-                            and node.func.attr in CHECKPOINTS):
-                        if (rel, owner) == ("session.py", "materialize"):
-                            owners.append(owner)
+                            and _call_names(node.func) & calls):
+                        if (rel, top_owner) == ("session.py", owner):
+                            owners.append(top_owner)
                         else:
-                            hits.append(f"{rel}:{node.lineno} in {owner}")
-    assert not hits, f"checkpoint(s) outside session.materialize: {hits}"
-    assert owners == ["materialize"], "session.materialize lost its call"
-
+                            hits.append(f"{rel}:{node.lineno} in {top_owner}")
+    assert not hits, f"{sorted(calls)} outside session.{owner}: {hits}"
+    assert owners, f"session.{owner} lost its call"

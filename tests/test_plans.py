@@ -2050,13 +2050,11 @@ def test_stream_compact_rollover_covers_live_log(spark):
     and the session confs touched for the run must be restored."""
     before = (spark.conf.get("spark.sql.shuffle.partitions"),
               spark.conf.get(
-                  "spark.sql.streaming.fileSink.log.compactInterval",
-                  "__unset__"))
+                  "spark.sql.streaming.fileSink.log.compactInterval", None))
     [r] = ALL_SPECS["q_stream_compact"].fn(spark, SF_DIR).collect()
     after = (spark.conf.get("spark.sql.shuffle.partitions"),
              spark.conf.get(
-                 "spark.sql.streaming.fileSink.log.compactInterval",
-                 "__unset__"))
+                 "spark.sql.streaming.fileSink.log.compactInterval", None))
     assert before == after, (before, after)
     assert r["n_numeric_manifests"] == 6
     assert r["n_compact_manifests"] == 1
@@ -2284,14 +2282,14 @@ def test_sink_pyds_stream_batches_survive_and_round_trip(spark):
 def test_sql_script_loop_matches_declarative_answer(spark):
     """q_sql_script: the WHILE-loop threshold must equal the
     declarative min-crossing computed independently, the session conf
-    must be restored, and the stop rule must actually hold (2·cum >=
+    must be left as it was, and the stop rule must actually hold (2·cum >=
     total while the previous threshold fails it)."""
     from pyspark.sql import functions as F
 
     from hippo_claim_crossover_spark.plans.base import t
-    before = spark.conf.get("spark.sql.scripting.enabled", "false")
+    before = spark.conf.get("spark.sql.scripting.enabled", None)
     [r] = ALL_SPECS["q_sql_script"].fn(spark, SF_DIR).collect()
-    assert spark.conf.get("spark.sql.scripting.enabled", "false") == before
+    assert spark.conf.get("spark.sql.scripting.enabled", None) == before
     assert 2 * r["cum_micros"] >= r["total_micros"]
     li = t(spark, SF_DIR, "lineitem")
     micros = F.floor(F.col("l_extendedprice") * 1e6 + 0.5).cast("long")
@@ -2480,12 +2478,12 @@ def test_stream_rocksdb_matches_batch_and_restores_conf(spark):
 
     from hippo_claim_crossover_spark.plans.base import money_micros, t
     key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(key, "unset")
+    before = spark.conf.get(key, None)
     got = {(r["window_start"], r["event_type"]):
            (r["n_events"], r["sum_micros"])
            for r in ALL_SPECS["q_stream_rocksdb"].fn(spark, SF_DIR)
            .collect()}
-    assert spark.conf.get(key, "unset") == before
+    assert spark.conf.get(key, None) == before
     ev = t(spark, SF_DIR, "events")
     want = {(r["ws"], r["event_type"]): (r["n"], r["s"])
             for r in ev.groupBy(

@@ -140,3 +140,25 @@ def test_materialize_tags_its_build_jobs_and_keeps_the_rows(spark):
         time.sleep(0.1)
     assert len(tracker.getJobIdsForTag("ckpt:test_groupby")) >= 1
 
+
+
+def test_conf_scope_restores_set_and_unset_keys(spark):
+    """Inside the scope the session reads the scoped values; on exit,
+    normal or by an exception, a key that was set has its old value back
+    and a key that was never set is unset again, not pinned to its
+    default."""
+    set_key = "spark.sql.shuffle.partitions"  # set by the session builder
+    unset_key = "spark.sql.streaming.fileSink.log.compactInterval"
+    before = spark.conf.get(set_key)
+    assert spark.conf.get(unset_key, None) is None
+    with sess.conf_scope(spark, {set_key: "3", unset_key: "4"}):
+        assert spark.conf.get(set_key) == "3"
+        assert spark.conf.get(unset_key) == "4"
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError, match="body failed"):
+        with sess.conf_scope(spark, {set_key: "5", unset_key: "6"}):
+            assert spark.conf.get(unset_key) == "6"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None

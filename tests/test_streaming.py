@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.io import load_table
+from hippo_claim_crossover_spark.session import conf_scope
 from hippo_claim_crossover_spark.streaming import (
     read_event_stream,
     run_to_memory,
@@ -17,6 +18,9 @@ from hippo_claim_crossover_spark.streaming import (
 
 EVENT_SCHEMA = ("event_id long, ts timestamp, user_id long, "
                 "event_type string, value double, props string")
+ROCKSDB = {"spark.sql.streaming.stateStore.providerClass":
+           "org.apache.spark.sql.execution.streaming.state."
+           "RocksDBStateStoreProvider"}
 
 
 @pytest.fixture(scope="module")
@@ -190,15 +194,9 @@ def test_transform_with_state_profile_topk(spark, sf_dir, stream_src):
     provider (the HDFS-backed default does not support TWS)."""
     from hippo_claim_crossover_spark.streaming import profile_with_topk
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
-    try:
+    with conf_scope(spark, ROCKSDB):
         stream = read_event_stream(spark, stream_src, max_files_per_trigger=1)
         run_to_memory(profile_with_topk(stream), "tws_out", "update")
-    finally:
-        spark.conf.unset(key) if prev is None else spark.conf.set(key, prev)
     out = spark.table("tws_out").collect()
     got = {}
     for r in out:
@@ -346,18 +344,9 @@ def test_tumbling_agg_with_rocksdb_state_store(spark, sf_dir, stream_src):
     results. Unlike transformWithStateInPandas (protobuf-gated in this
     container), plain stateful aggs exercise RocksDB with no extra
     dependency, so this pins the provider actually working here."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider")
-    try:
+    with conf_scope(spark, ROCKSDB):
         stream = read_event_stream(spark, stream_src)
         run_to_memory(tumbling_agg(stream), "tumble_rocks_out", "complete")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
     got = {(r["window_start"], r["event_type"]): (r["n_events"],
                                                   r["sum_value"])
            for r in spark.table("tumble_rocks_out").collect()}
@@ -492,7 +481,7 @@ def test_stream_drains_scope_shuffle_partitions(spark, tmp_path):
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    assert before != str(ops.stream_shuffle_partitions()), \
+    assert before != str(ops.STREAM_SHUFFLE_DEFAULT), \
         "fixture session must differ from the stream count for this test"
     base = dt.datetime(2024, 1, 1, 10, 0)
     batches = [[(1, base, 1, "click", 1.0, None),
@@ -507,33 +496,20 @@ def test_stream_drains_scope_shuffle_partitions(spark, tmp_path):
     state_parts = _g.glob(f"{ckpt}/state/0/*")
     n_state = len([p for p in state_parts
                    if p.rsplit("/", 1)[-1].isdigit()])
-    assert n_state == ops.stream_shuffle_partitions(), state_parts
+    assert n_state == ops.STREAM_SHUFFLE_DEFAULT, state_parts
 
 
-def test_stream_shuffle_partitions_env(monkeypatch, tmp_path):
-    """r16: the env override is read at CALL time (not import), a
-    non-numeric value fails with the variable named, and the real-table
-    sizing helper scales with input bytes, floors at the fixture
-    default, and defers to an explicit env override."""
-    import pytest
-
+def test_sized_stream_partitions_scale_with_input_bytes(tmp_path):
+    """The real-table sizing helper scales with input bytes, skips
+    ``_``/``.``-prefixed metadata files and floors at the fixture
+    default."""
     from hippo_claim_crossover_spark.streaming import ops
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
-    assert ops.stream_shuffle_partitions() == ops.STREAM_SHUFFLE_DEFAULT
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "12")
-    assert ops.stream_shuffle_partitions() == 12      # post-import override
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "banana")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_SHUFFLE"):
-        ops.stream_shuffle_partitions()
 
     src = tmp_path / "src"
     src.mkdir()
     (src / "batch-0.parquet").write_bytes(b"x" * 1024)
     (src / "_complete").write_bytes(b"ok")            # metadata: ignored
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "7")
-    assert ops.sized_stream_partitions(str(src)) == 7  # env wins
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE")
+    (src / ".batch-0.parquet.crc").write_bytes(b"x" * 1024)  # ignored
     assert ops.sized_stream_partitions(str(src)) == ops.STREAM_SHUFFLE_DEFAULT
     assert ops.sized_stream_partitions(str(src), target_bytes=256) == 4
     assert ops.sized_stream_partitions(str(src), target_bytes=128) == 8
