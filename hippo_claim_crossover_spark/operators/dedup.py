@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.operators.hashing import md5_long
 from hippo_claim_crossover_spark.session import materialize
 
 NGRAM = 4
@@ -140,11 +141,9 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
     sh = (
         df.where(F.size(toks) >= n)
         .select(id_col, F.explode(shingles(toks, n)).alias("sh"))
-        # 7 hex chars → h < 2^28, so a_i*h + b_i < 2^59 never overflows
-        # a long (ANSI mode would raise).
-        .select(id_col,
-                F.conv(F.substring(F.md5("sh"), 1, 7), 16, 10)
-                .cast("long").alias("h"))
+        # top 28 bits of the key (= its 7-hex prefix) → h < 2^28, so
+        # a_i*h + b_i < 2^59 never overflows a long (ANSI mode would raise).
+        .select(id_col, F.shiftright(md5_long("sh"), 32).alias("h"))
     )
     aggs = [
         F.min((F.col("h") * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i]))
@@ -237,8 +236,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id",
     tok = (
         df.select(id_col,
                   F.explode(F.split(F.col(text_col), " ")).alias("tk"))
-        .withColumn("h", F.conv(F.substring(F.md5("tk"), 1, 15), 16, 10)
-                    .cast("long"))
+        .withColumn("h", md5_long("tk"))
     )
     votes = [
         F.sum(F.when(F.col("h").bitwiseAND(F.lit(1 << j)) != 0, 1)

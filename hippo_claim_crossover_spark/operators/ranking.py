@@ -371,9 +371,9 @@ def grouped_quantile_summary(df: DataFrame, group_cols: list[str],
     task (the adaptive-bucket rule). Post-build windows touch only the
     ≤ n_buckets·(keep+1) summary rows per group. ``id_col`` must be
     unique per row; ``value_col`` non-null."""
-    from hippo_claim_crossover_spark.operators.hashing import hex2long
+    from hippo_claim_crossover_spark.operators.hashing import md5_long
 
-    b = hex2long(F.md5(F.col(id_col).cast("string"))) % n_buckets
+    b = md5_long(F.col(id_col).cast("string")) % n_buckets
     shard = df.select(*group_cols, value_col,
                       F.col(id_col).alias("_id"), b.alias("_b"))
     wb = Window.partitionBy(*group_cols, "_b")

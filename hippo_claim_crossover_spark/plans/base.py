@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.functions.scalar import duck_round  # noqa: F401
 from hippo_claim_crossover_spark.io import load_table
-from hippo_claim_crossover_spark.operators.hashing import hex2long  # noqa: F401
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -116,26 +117,36 @@ def money_sum_sql(term_sql: str, out_scale: int = 6) -> str:
             f"AS BIGINT)) AS DOUBLE) / 1e6, {out_scale})")
 
 
-# hex2long is single-sourced in operators/hashing.py (operators sit below
-# plans, and the quantile-summary operator shards on it); re-exported here
-# so plan code keeps importing it from base alongside sql_hex2long.
+# floor(x*10^nd + 0.5)/10^nd spells duck_round in the oracle SQL exactly
+# (same association order) — NOT DuckDB round(), whose half-away-from-zero
+# differs from the floor formula on negative halfway cosines. Used for
+# every cosine the oracles emit or rank on.
+def r4_sql(expr: str) -> str:
+    return f"floor(({expr}) * 1e4 + 0.5) / 1e4"
 
 
-def sql_hex2long(expr: str) -> str:
-    """DuckDB SQL mirroring :func:`hex2long` exactly."""
-    return f"CAST(('0x' || substr({expr}, 1, 15)) AS BIGINT)"
+def r6_sql(expr: str) -> str:
+    return f"floor(({expr}) * 1e6 + 0.5) / 1e6"
 
 
 def aes_key(id_col: Column, weight: Column) -> Column:
     """Efraimidis–Spirakis A-ES sampling key ``u^(1/w)`` with a
-    CONTENT-ADDRESSED uniform ``u = (md5_prefix + 1) / 16^15`` — the
+    CONTENT-ADDRESSED uniform ``u = (md5_long + 1) / 2^60`` — the
     deterministic weighted-draw primitive shared by the weighted /
     balanced samplers and the export composite.  Rank descending and
     take K for a without-replacement weighted sample whose membership
-    depends only on the key, never on partitioning, run, or engine."""
-    h = hex2long(F.md5(id_col.cast("string"))).cast("double")
+    depends only on the key, never on partitioning, run, or engine.
+    DuckDB mirror: :func:`sql_aes_key`."""
+    h = md5_long(id_col.cast("string")).cast("double")
     u = (h + F.lit(1.0)) / F.lit(float(1 << 60))
     return F.pow(u, F.lit(1.0) / weight)
+
+
+def sql_aes_key(id_sql: str, weight_sql: str) -> str:
+    """DuckDB SQL mirroring :func:`aes_key` exactly."""
+    h = sql_md5_long(f"CAST({id_sql} AS VARCHAR)")
+    return (f"pow((CAST({h} AS DOUBLE) + 1.0) / {float(1 << 60)!r}, "
+            f"1.0 / ({weight_sql}))")
 
 
 def within_rel_band(approx: Column, exact: Column, rel: float) -> Column:

@@ -16,26 +16,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.operators import clustering as ops_km
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
 from hippo_claim_crossover_spark.operators.similarity import dot, l2_norm
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
     duck_round,
-    hex2long,
-    sql_hex2long,
+    r4_sql,
+    r6_sql,
     t_wide,
 )
 from hippo_claim_crossover_spark.session import materialize
 
 N_CELLS = 8
 ITERS = 2
-
-
-def _r4(expr: str) -> str:
-    return f"floor(({expr}) * 1e4 + 0.5) / 1e4"
-
-
-def _r6(expr: str) -> str:
-    return f"floor(({expr}) * 1e6 + 0.5) / 1e6"
 
 
 def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,8 +54,8 @@ def _assign_cte(name: str, cents: str) -> str:
     """One cosine-argmax assignment round: rounded cosine DESC with
     cent_id tiebreak — mirrors kmeans_assign's array_min(struct(-cos, id))
     bit-for-bit."""
-    cos = _r6(f"list_dot_product(e.v, c.cv) / (e.nrm * "
-              f"sqrt(list_dot_product(c.cv, c.cv)))")
+    cos = r6_sql(f"list_dot_product(e.v, c.cv) / (e.nrm * "
+                 f"sqrt(list_dot_product(c.cv, c.cv)))")
     return f"""{name} AS (
   SELECT vec_id, v, cent_id AS cell FROM (
     SELECT e.vec_id, e.v, c.cent_id, row_number() OVER (
@@ -101,7 +95,7 @@ WITH e AS (
 {_assign_cte("a1", "c1")}, {_update_cte("u2", "c2", "a1")},
 {_assign_cte("a2", "c2")}
 SELECT s.cell, s.n_vecs,
-       {_r4("sqrt(list_dot_product(c.cv, c.cv))")} AS centroid_norm
+       {r4_sql("sqrt(list_dot_product(c.cv, c.cv))")} AS centroid_norm
 FROM (SELECT cell, count(*) AS n_vecs FROM a2 GROUP BY cell) s
 JOIN c2 c ON s.cell = c.cent_id
 """
@@ -213,7 +207,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                .where(cos4 >= F.lit(SEM_TAU))
                .select(F.col("a.cell").alias("cell"), loser.alias("rid"))
                .distinct())
-    h = hex2long(F.md5(F.col("rid").cast("string")))
+    h = md5_long(F.col("rid").cast("string"))
     rem = removed.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_removed"),
         F.pmod(F.sum(h.cast("decimal(38,0)")),
@@ -234,9 +228,9 @@ def _oracle_semdedup() -> str:
     from hippo_claim_crossover_spark.operators import similarity as ops_sim
     from hippo_claim_crossover_spark.plans.similarity import _sql_plane
 
-    pair_cos = _r4("list_dot_product(a.vn, b.vn)")
-    ccos = _r6("list_dot_product(m0.vn, c2.cv) / "
-               "sqrt(list_dot_product(c2.cv, c2.cv))")
+    pair_cos = r4_sql("list_dot_product(a.vn, b.vn)")
+    ccos = r6_sql("list_dot_product(m0.vn, c2.cv) / "
+                  "sqrt(list_dot_product(c2.cv, c2.cv))")
     # family-0 SRP sub-bucket, every potential plane baked in and gated
     # on the runtime sub-plane count np_sub — mirrors
     # _sem_subplanes_for() + srp_bucket() exactly
@@ -287,7 +281,7 @@ m AS (
   WHERE {pair_cos} >= {SEM_TAU}
 ), rem AS (
   SELECT cell, CAST(count(*) AS BIGINT) AS n_removed,
-         CAST(sum(CAST({sql_hex2long("md5(CAST(rid AS VARCHAR))")}
+         CAST(sum(CAST({sql_md5_long("CAST(rid AS VARCHAR)")}
                        AS HUGEINT)) % {_CKSUM_MOD} AS BIGINT)
            AS removed_cksum
   FROM removed GROUP BY cell

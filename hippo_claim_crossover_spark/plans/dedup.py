@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.operators import dedup as ops_dedup
@@ -32,11 +32,12 @@ from hippo_claim_crossover_spark.operators.dedup import (
     MINHASH_MOD as _MH_MOD,
     shingles as _shingles,
 )
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
     duck_round,
-    hex2long,
-    sql_hex2long,
+    r4_sql,
     t,
     t_wide,
 )
@@ -48,24 +49,15 @@ NGRAM = 4
 JACCARD_THRESHOLD = 0.2
 
 
-def _hex2long(hexstr: Column) -> Column:
-    """First 15 hex chars of an md5 → non-negative BIGINT (< 2^60).
-    DuckDB mirror: CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT).
-    Delegates to the shared primitive in plans/base."""
-    from hippo_claim_crossover_spark.plans.base import hex2long
-    return hex2long(hexstr)
-
-
-def _sql_hex2long(expr: str) -> str:
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
 # DuckDB: tk[i:i+n-1] is 1-based inclusive slicing; range() is end-exclusive.
 _SQL_SHINGLES = (
     "list_distinct(list_transform(range(1, len(string_split(text,' ')) - "
     f"{NGRAM - 2}), i -> array_to_string(string_split(text,' ')"
     f"[i:i+{NGRAM - 1}], ' ')))"
 )
+# Per-shingle 28-bit MinHash base hash — the DuckDB mirror of
+# operators.dedup.minhash_signatures' ``md5_long(sh) >> 32``.
+_SQL_MH_BASE = f"({sql_md5_long(f'unnest({_SQL_SHINGLES})')} >> 32)"
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -327,7 +319,7 @@ _MH_COLS = ",\n       ".join(
 ORACLE_DEDUP_MINHASH = f"""
 WITH sh AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(unnest({_SQL_SHINGLES})), 1, 7)) AS BIGINT) AS h
+         {_SQL_MH_BASE} AS h
   FROM documents WHERE len(string_split(text, ' ')) >= {NGRAM}
 )
 SELECT doc_id,
@@ -425,7 +417,7 @@ _BAND_KEYS = ", ".join(
 ORACLE_DEDUP_LSHBAND = f"""
 WITH sh AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(unnest({_SQL_SHINGLES})), 1, 7)) AS BIGINT) AS h
+         {_SQL_MH_BASE} AS h
   FROM documents WHERE len(string_split(text, ' ')) >= {NGRAM}
 ), sigs AS (
   SELECT doc_id,
@@ -445,7 +437,7 @@ FROM keyed a JOIN keyed b
 _CLUSTER_CTES = f"""
 WITH RECURSIVE sh AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(unnest({_SQL_SHINGLES})), 1, 7)) AS BIGINT) AS h
+         {_SQL_MH_BASE} AS h
   FROM documents WHERE len(string_split(text, ' ')) >= {NGRAM}
 ), sigs AS (
   SELECT doc_id,
@@ -573,8 +565,8 @@ def q_split_leakproof(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = materialize(_band_pairs(spark, sf_dir), "band_pairs")
     comp = connected_components(pairs, src="doc_a", dst="doc_b")
     d = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    bucket = hex2long(F.md5(F.concat(
-        F.col("cluster_id").cast("string"), F.lit(":lsplit")))) % 10
+    bucket = md5_long(F.concat(
+        F.col("cluster_id").cast("string"), F.lit(":lsplit"))) % 10
     assigned = materialize(
         d.join(comp.withColumnRenamed("node", "doc_id"), "doc_id", "left")
         .select("doc_id", "n_chars",
@@ -607,8 +599,8 @@ m AS (
   FROM documents d LEFT JOIN comp c USING (doc_id)
 ), assigned AS (
   SELECT doc_id, n_chars, cluster_id,
-         CASE {sql_hex2long(
-             "md5(CAST(cluster_id AS VARCHAR) || ':lsplit')")} % 10
+         CASE {sql_md5_long("CAST(cluster_id AS VARCHAR) || ':lsplit'")}
+              % 10
               WHEN 0 THEN 'test' WHEN 1 THEN 'val'
               ELSE 'train' END AS split
   FROM m
@@ -648,7 +640,7 @@ _BIT_SUM = " + ".join(
     for j in range(SIMHASH_BITS))
 ORACLE_DEDUP_SIMHASH = f"""
 WITH tok AS (
-  SELECT doc_id, {_sql_hex2long("unnest(string_split(text, ' '))")} AS h
+  SELECT doc_id, {sql_md5_long("unnest(string_split(text, ' '))")} AS h
   FROM documents
 ), voted AS (
   SELECT doc_id,
@@ -688,7 +680,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a consistency check.
 ORACLE_DEDUP_SIMHASH_PAIRS = f"""
 WITH tok AS (
-  SELECT doc_id, {_sql_hex2long("unnest(string_split(text, ' '))")} AS h
+  SELECT doc_id, {sql_md5_long("unnest(string_split(text, ' '))")} AS h
   FROM documents
 ), voted AS (
   SELECT doc_id,
@@ -721,17 +713,16 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_dedup_embed() -> str:
-    # _r4 = floor(x*1e4 + 0.5)/1e4 — the same engine-portable rounding the
-    # pair_cosine_arrow kernel applies on the Spark side (NOT DuckDB
+    # r4_sql = floor(x*1e4 + 0.5)/1e4 — the same engine-portable rounding
+    # the pair_cosine_arrow kernel applies on the Spark side (NOT DuckDB
     # round(), whose shortest-repr-independent scaling already matches the
     # formula, but keeping literally the same expression on both sides
     # leaves nothing to diverge).
     from hippo_claim_crossover_spark.plans.similarity import (
         NP_T_SQL,
         _bucket_sql_gated,
-        _r4,
     )
-    cos = _r4('list_dot_product(a.vn, b.vn)')
+    cos = r4_sql('list_dot_product(a.vn, b.vn)')
     return f"""
 WITH {NP_T_SQL}, n AS (
   SELECT vec_id,
@@ -1089,7 +1080,7 @@ WITH RECURSIVE train AS (
   QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) = 1
 ), sh2 AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(unnest({_SQL_SHINGLES})), 1, 7)) AS BIGINT) AS h
+         {_SQL_MH_BASE} AS h
   FROM q2 WHERE len(string_split(text, ' ')) >= {NGRAM}
 ), sigs AS (
   SELECT doc_id,
@@ -1418,7 +1409,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DEDUP_INCREMENTAL = f"""
 WITH sh AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(unnest({_SQL_SHINGLES})), 1, 7)) AS BIGINT) AS h
+         {_SQL_MH_BASE} AS h
   FROM documents WHERE len(string_split(text, ' ')) >= {NGRAM}
 ), sigs AS (
   SELECT doc_id,
@@ -1485,7 +1476,7 @@ def q_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_MINHASH_MERGE = f"""
 WITH sh AS (
   SELECT doc_id, source,
-         CAST(('0x' || substr(md5(unnest({_SQL_SHINGLES})), 1, 7)) AS BIGINT) AS h
+         {_SQL_MH_BASE} AS h
   FROM documents WHERE len(string_split(text, ' ')) >= {NGRAM}
 )
 SELECT source, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
@@ -1537,7 +1528,7 @@ def q_host_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain is |hosts|-sized."""
     d = (t_wide(spark, sf_dir, "documents")
          .select("doc_id", "source", "n_chars")
-         .withColumn("_h", hex2long(F.md5(F.col("doc_id").cast("string")))))
+         .withColumn("_h", md5_long(F.col("doc_id").cast("string"))))
     raw_url = F.concat(
         F.when(F.expr("(_h % 2) = 0"), F.lit("http://"))
         .otherwise(F.lit("https://")),
@@ -1575,7 +1566,7 @@ def q_host_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_HOST_DEDUP = f"""
 WITH u AS (
   SELECT doc_id, source, n_chars,
-         {sql_hex2long("md5(CAST(doc_id AS VARCHAR))")} AS h
+         {sql_md5_long("CAST(doc_id AS VARCHAR)")} AS h
   FROM documents
 ), raw AS (
   SELECT doc_id, n_chars,

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
 from hippo_claim_crossover_spark.operators.ranking import (
     grouped_global_rank,
     grouped_histogram_cdf,
@@ -21,12 +23,12 @@ from hippo_claim_crossover_spark.operators.ranking import (
 )
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
+    aes_key,
     duck_round,
-    hex2long,
     money_micros,
     money_sum,
     money_sum_sql,
-    sql_hex2long,
+    sql_aes_key,
     t,
     t_wide,
     within_rel_band,
@@ -179,8 +181,7 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, engine, or run (unlike TABLESAMPLE/rand()). md5-derived so the
     oracle computes the identical bucket."""
     o = t(spark, sf_dir, "orders")
-    bucket = F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")),
-                                1, 15), 16, 10).cast("long") % 10
+    bucket = md5_long(F.col("o_orderkey").cast("string")) % 10
     return (
         o.where(bucket == 0)
         .select(F.col("o_orderkey").alias("claim_id"),
@@ -189,11 +190,11 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SAMPLE_HASH = """
+ORACLE_SAMPLE_HASH = f"""
 SELECT o_orderkey AS claim_id, o_custkey AS subscriber_id,
        round(o_totalprice, 2) AS total
 FROM orders
-WHERE CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15)) AS BIGINT) % 10 = 0
+WHERE {sql_md5_long("CAST(o_orderkey AS VARCHAR)")} % 10 = 0
 """
 
 
@@ -250,7 +251,6 @@ FROM lineitem GROUP BY l_returnflag
 
 
 _WSAMPLE_K = 100
-_POW60 = float(1 << 60)   # 16^15: the md5-prefix value space
 
 
 def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,10 +258,10 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Efraimidis–Spirakis A-ES): keep the top-K documents by
     ``u^(1/w)`` where ``w`` is the importance weight (doc length here —
     the 'sample long documents proportionally more' curation knob) and
-    ``u`` is a CONTENT-ADDRESSED uniform — ``(md5_prefix + 1) / 16^15``
-    — so membership depends only on the key, never on partitioning,
-    run, or engine (the q_sample_hash discipline, upgraded from
-    Bernoulli to weighted-without-replacement).
+    ``u`` is a CONTENT-ADDRESSED uniform — ``(md5_long + 1) / 2^60``,
+    ``base.aes_key`` — so membership depends only on the key, never on
+    partitioning, run, or engine (the q_sample_hash discipline, upgraded
+    from Bernoulli to weighted-without-replacement).
 
     Scale shape: one scan + TakeOrdered(K) (per-partition heaps, driver
     merges K rows) — no shuffle of the table, no RNG state. The one
@@ -271,10 +271,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     K-boundary; hash-verified against DuckDB at all three fixture
     scales."""
     d = t(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-               16, 10).cast("double")
-    u = (h + F.lit(1.0)) / F.lit(_POW60)
-    key = F.pow(u, F.lit(1.0) / F.col("n_chars").cast("double"))
+    key = aes_key(F.col("doc_id"), F.col("n_chars").cast("double"))
     return (
         d.select("doc_id", "source", "n_chars", key.alias("_k"))
         .orderBy(F.desc("_k"), F.asc("doc_id"))
@@ -287,9 +284,7 @@ ORACLE_SAMPLE_WEIGHTED = f"""
 SELECT doc_id, source, n_chars
 FROM (
   SELECT doc_id, source, n_chars,
-         pow((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) + 1.0) / {1 << 60}.0,
-             1.0 / CAST(n_chars AS DOUBLE)) AS k
+         {sql_aes_key("doc_id", "CAST(n_chars AS DOUBLE)")} AS k
   FROM documents
 )
 ORDER BY k DESC, doc_id
@@ -312,10 +307,7 @@ def q_sample_weighted_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic content-addressed weighting on top. The 5-value
     partition key never sees more than 20·partitions rows."""
     d = t(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-               16, 10).cast("double")
-    u = (h + F.lit(1.0)) / F.lit(_POW60)
-    key = F.pow(u, F.lit(1.0) / F.col("n_chars").cast("double"))
+    key = aes_key(F.col("doc_id"), F.col("n_chars").cast("double"))
     w = Window.partitionBy("source").orderBy(F.desc("_k"), F.asc("doc_id"))
     return (
         d.select("doc_id", "source", "n_chars", key.alias("_k"))
@@ -331,9 +323,8 @@ FROM (
   SELECT source, doc_id, n_chars,
          row_number() OVER (
            PARTITION BY source
-           ORDER BY pow((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-                               1, 15)) AS BIGINT) + 1.0) / {1 << 60}.0,
-                        1.0 / CAST(n_chars AS DOUBLE)) DESC, doc_id) AS rk
+           ORDER BY {sql_aes_key("doc_id", "CAST(n_chars AS DOUBLE)")} DESC,
+                    doc_id) AS rk
   FROM documents
 )
 WHERE rk <= {_WSAMPLE_GROUP_K}
@@ -575,8 +566,7 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.count(F.lit(1)).alias("n_cat"),
                   F.sum(x_u).alias("s_u")))
     return (o.join(F.broadcast(stats), "o_orderpriority")
-            .where(hex2long(F.md5(F.col("o_orderkey").cast("string")))
-                   % 20 == 0)
+            .where(md5_long(F.col("o_orderkey").cast("string")) % 20 == 0)
             .select(F.col("o_orderkey").alias("orderkey"),
                     F.col("o_orderpriority").alias("priority"),
                     duck_round(F.col("o_totalprice"), 2)
@@ -589,7 +579,7 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("orderkey"))
 
 
-ORACLE_TARGET_ENCODE = """
+ORACLE_TARGET_ENCODE = f"""
 WITH stats AS (
   SELECT o_orderpriority, count(*) AS n_cat,
          sum(CAST(floor(o_totalprice * 1e6 + 0.5) AS BIGINT)) AS s_u
@@ -603,8 +593,7 @@ SELECT o.o_orderkey AS orderkey,
                                 AS BIGINT) AS DOUBLE) / 1e6)
              / (s.n_cat - 1) * 1e4 + 0.5) / 1e4 AS loo_encoding
 FROM orders o JOIN stats s USING (o_orderpriority)
-WHERE CAST(('0x' || substr(md5(CAST(o.o_orderkey AS VARCHAR)), 1, 15))
-           AS BIGINT) % 20 = 0
+WHERE {sql_md5_long("CAST(o.o_orderkey AS VARCHAR)")} % 20 = 0
 ORDER BY orderkey
 """
 
@@ -634,7 +623,6 @@ def q_sample_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "lang_counts")
     tot = lang_n.agg(F.sum("n_lang").alias("n_tot"),
                      F.count(F.lit(1)).alias("k_lang"))
-    from hippo_claim_crossover_spark.plans.base import aes_key
     w = (F.col("n_tot").cast("double")
          / (F.col("k_lang") * F.col("n_lang")).cast("double"))
     key = aes_key(F.col("doc_id"), w)
@@ -658,10 +646,8 @@ WITH lang_n AS (
   FROM documents
 ), keyed AS (
   SELECT d.doc_id, d.lang,
-         pow((CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) + 1.0) / {1 << 60}.0,
-             1.0 / (CAST(t.n_tot AS DOUBLE)
-                    / CAST(t.k_lang * l.n_lang AS DOUBLE))) AS k
+         {sql_aes_key("d.doc_id", "CAST(t.n_tot AS DOUBLE) / "
+                      "CAST(t.k_lang * l.n_lang AS DOUBLE)")} AS k
   FROM documents d
   JOIN lang_n l ON d.lang = l.lang
   CROSS JOIN tot t
@@ -686,12 +672,12 @@ CMS_WIDTH = 1024
 def _cms_cell(tok, seed):
     """Row ``seed``'s cell index for token ``tok`` — md5-affine, engine-
     portable (DuckDB mirror: :data:`_CMS_CELL_SQL`)."""
-    return hex2long(F.md5(F.concat_ws(
-        ":", F.lit("cms"), seed.cast("string"), tok))) % CMS_WIDTH
+    return md5_long(F.concat_ws(
+        ":", F.lit("cms"), seed.cast("string"), tok)) % CMS_WIDTH
 
 
-_CMS_CELL_SQL = (sql_hex2long("md5('cms' || ':' || "
-                              "CAST({seed} AS VARCHAR) || ':' || {tok})")
+_CMS_CELL_SQL = (sql_md5_long("'cms' || ':' || "
+                              "CAST({seed} AS VARCHAR) || ':' || {tok}")
                  + f" % {CMS_WIDTH}")
 
 
@@ -853,7 +839,7 @@ def q_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .alias("k"))
               .distinct())
     hashed = materialize(
-        scoped.select("event_type", hex2long(F.md5("k")).alias("h")),
+        scoped.select("event_type", md5_long("k").alias("h")),
         "user_day_hashes")
     exact = (hashed.groupBy("event_type")
              .agg(F.count(F.lit(1)).alias("exact_distinct")))
@@ -890,7 +876,7 @@ WITH keys AS (
   FROM events
 ), hashed AS (
   SELECT event_type,
-         {sql_hex2long("md5(k)")} AS h
+         {sql_md5_long("k")} AS h
   FROM keys
 ), exact AS (
   SELECT event_type, CAST(count(*) AS BIGINT) AS exact_distinct
@@ -962,7 +948,7 @@ def q_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
               .distinct())
     # consumers: sketch build + exact self-join (×2) + per-type counts
     hashed = materialize(
-        scoped.select("_t", hex2long(F.md5("k")).alias("h")),
+        scoped.select("_t", md5_long("k").alias("h")),
         "user_day_hashes")
     n_t = hashed.groupBy("_t").agg(F.count(F.lit(1)).alias("_n"))
     w = Window.partitionBy("_t").orderBy("h")
@@ -1030,7 +1016,7 @@ WITH keys AS (
               AS VARCHAR) AS k
   FROM events
 ), hashed AS (
-  SELECT t, {sql_hex2long("md5(k)")} AS h FROM keys
+  SELECT t, {sql_md5_long("k")} AS h FROM keys
 ), n_t AS (
   SELECT t, CAST(count(*) AS BIGINT) AS n FROM hashed GROUP BY t
 ), ranked AS (
@@ -1281,7 +1267,7 @@ def q_quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_QUANTILE_SKETCH_MERGE = f"""
 WITH o AS (
   SELECT o_orderpriority AS priority, o_totalprice, o_orderkey,
-         {sql_hex2long("md5(CAST(o_orderkey AS VARCHAR))")}
+         {sql_md5_long("CAST(o_orderkey AS VARCHAR)")}
            % {QSK_BUCKETS} AS b
   FROM orders
 ), ranked AS (
@@ -1394,7 +1380,7 @@ def q_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("c_nationkey") == F.col("n_nationkey")))
 
     def lap_noise(tag: str, b: float):
-        u = (hex2long(F.md5(F.concat(F.lit(f"dp:{tag}:"), F.col("n_name"))))
+        u = (md5_long(F.concat(F.lit(f"dp:{tag}:"), F.col("n_name")))
              .cast("double") / F.lit(_DP_DENOM))
         tshift = u - F.lit(0.5)
         ln_u = F.floor(F.log(F.lit(1.0) - F.lit(2.0) * F.abs(tshift))
@@ -1428,8 +1414,8 @@ WITH c AS (
   GROUP BY n.n_name
 ), noised AS (
   SELECT n_name, n_cnt, s,
-         ({sql_hex2long("md5('dp:count:' || n_name)")}) AS hc,
-         ({sql_hex2long("md5('dp:sum:' || n_name)")}) AS hs
+         ({sql_md5_long("'dp:count:' || n_name")}) AS hc,
+         ({sql_md5_long("'dp:sum:' || n_name")}) AS hs
   FROM agg
 ), calc AS (
   SELECT n_name, n_cnt, s,
@@ -1494,7 +1480,7 @@ def q_dataset_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.expr(f"share * N div {_MIX_DENOM}")))
     ranked = grouped_global_rank(
         tagged.withColumn(
-            "_h", hex2long(F.md5(F.col("doc_id").cast("string")))),
+            "_h", md5_long(F.col("doc_id").cast("string"))),
         ["source"], ["_h", "doc_id"], out_col="_rn")
     sel = (ranked
            .join(F.broadcast(quota.select("source", "n_take")), "source")
@@ -1533,7 +1519,7 @@ WITH shares AS (
 ), ranked AS (
   SELECT t.source, t.doc_id,
          row_number() OVER (PARTITION BY t.source ORDER BY
-           {sql_hex2long("md5(CAST(t.doc_id AS VARCHAR))")},
+           {sql_md5_long("CAST(t.doc_id AS VARCHAR)")},
            t.doc_id) AS rn
   FROM tagged t
 ), sel AS (

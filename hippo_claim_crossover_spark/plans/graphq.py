@@ -20,8 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
 from hippo_claim_crossover_spark.plans.base import (
-    QuerySpec, duck_round, hex2long, money_micros, t)
+    QuerySpec, duck_round, money_micros, t)
 from hippo_claim_crossover_spark.session import materialize
 
 DAMPING = 0.85
@@ -374,13 +376,13 @@ def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.count(F.lit(1)) / 40).cast("long")).alias("_B"))
     users = (t(spark, sf_dir, "orders").select("o_custkey").distinct()
              .crossJoin(F.broadcast(b_row))
-             .withColumn("bkt", hex2long(
-                 F.md5(F.col("o_custkey").cast("string"))) % F.col("_B"))
+             .withColumn("bkt", md5_long(F.col("o_custkey").cast("string"))
+                         % F.col("_B"))
              .drop("_B"))
     items = (items_raw
              .crossJoin(F.broadcast(b_row))
-             .withColumn("bkt", hex2long(
-                 F.md5(F.col("p_partkey").cast("string"))) % F.col("_B"))
+             .withColumn("bkt", md5_long(F.col("p_partkey").cast("string"))
+                         % F.col("_B"))
              .drop("_B"))
     owned = (t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
              .join(t(spark, sf_dir, "lineitem")
@@ -390,9 +392,9 @@ def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (users.join(items, "bkt")
             .join(owned, (users.o_custkey == owned.o_custkey)
                   & (items.p_partkey == owned.l_partkey), "left_anti")
-            .withColumn("u", hex2long(
-                F.md5(F.concat_ws(":", users.o_custkey.cast("string"),
-                                  items.p_partkey.cast("string"))))))
+            .withColumn("u", md5_long(
+                F.concat_ws(":", users.o_custkey.cast("string"),
+                            items.p_partkey.cast("string")))))
     from pyspark.sql import Window
     w = Window.partitionBy(users.o_custkey).orderBy("u")
     return (cand.withColumn("neg_rank", F.row_number().over(w))
@@ -402,28 +404,27 @@ def q_negative_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("custkey", "neg_rank"))
 
 
-ORACLE_NEGATIVE_SAMPLE = """
+ORACLE_NEGATIVE_SAMPLE = f"""
 WITH b AS (
   SELECT greatest(8, CAST(floor(count(*) / 40) AS BIGINT)) AS nb
   FROM part
 ), users AS (
   SELECT DISTINCT o_custkey,
-         CAST(('0x' || substr(md5(CAST(o_custkey AS VARCHAR)), 1, 15))
-              AS BIGINT) % (SELECT nb FROM b) AS bkt
+         {sql_md5_long("CAST(o_custkey AS VARCHAR)")}
+           % (SELECT nb FROM b) AS bkt
   FROM orders
 ), items AS (
   SELECT p_partkey,
-         CAST(('0x' || substr(md5(CAST(p_partkey AS VARCHAR)), 1, 15))
-              AS BIGINT) % (SELECT nb FROM b) AS bkt
+         {sql_md5_long("CAST(p_partkey AS VARCHAR)")}
+           % (SELECT nb FROM b) AS bkt
   FROM part
 ), owned AS (
   SELECT DISTINCT o.o_custkey, l.l_partkey
   FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
 ), cand AS (
   SELECT u.o_custkey, i.p_partkey,
-         CAST(('0x' || substr(md5(CAST(u.o_custkey AS VARCHAR) || ':'
-                                  || CAST(i.p_partkey AS VARCHAR)), 1, 15))
-              AS BIGINT) AS uh
+         {sql_md5_long("CAST(u.o_custkey AS VARCHAR) || ':' "
+                       "|| CAST(i.p_partkey AS VARCHAR)")} AS uh
   FROM users u
   JOIN items i ON u.bkt = i.bkt
   WHERE NOT EXISTS (SELECT 1 FROM owned w

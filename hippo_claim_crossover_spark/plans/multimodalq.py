@@ -14,7 +14,7 @@ from hippo_claim_crossover_spark.multimodal import (
     read_binary_files,
     sample_frames,
 )
-from hippo_claim_crossover_spark.plans.base import QuerySpec, t
+from hippo_claim_crossover_spark.plans.base import QuerySpec, r4_sql, t
 from hippo_claim_crossover_spark.session import fixture_dir, materialize
 
 
@@ -403,10 +403,9 @@ def _oracle_mm_pairfilter() -> str:
     from hippo_claim_crossover_spark.plans.similarity import (
         NP_T_SQL,
         _bucket_sql_gated,
-        _r4,
     )
-    cos4 = _r4("list_dot_product(p.v, c.c) / (sqrt(list_dot_product(p.v, "
-               "p.v)) * sqrt(list_dot_product(c.c, c.c)))")
+    cos4 = r4_sql("list_dot_product(p.v, c.c) / (sqrt(list_dot_product("
+                  "p.v, p.v)) * sqrt(list_dot_product(c.c, c.c)))")
     return f"""
 WITH {NP_T_SQL}, m AS (
   SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -435,7 +434,7 @@ WITH {NP_T_SQL}, m AS (
   SELECT b.vec_id AS vec_id
   FROM kept a JOIN kept b
     ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-  WHERE {_r4('list_dot_product(a.vn, b.vn)')} >= {MM_DUP_COS}
+  WHERE {r4_sql('list_dot_product(a.vn, b.vn)')} >= {MM_DUP_COS}
   GROUP BY b.vec_id
 ), final AS (
   SELECT * FROM kept

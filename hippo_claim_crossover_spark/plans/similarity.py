@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hippo_claim_crossover_spark.operators import similarity as ops_sim
-from hippo_claim_crossover_spark.plans.base import QuerySpec, t_wide
+from hippo_claim_crossover_spark.plans.base import (
+    QuerySpec, r4_sql, r6_sql, t_wide)
 
 DIM = 64
 N_PLANES = 8
@@ -34,18 +35,6 @@ NULL_RANK_SENTINEL = TOP_K + 1
 # Hyperplanes come from the operators API (md5-seeded, deterministic) —
 # identical constants are baked into both the Spark plan and the oracle SQL.
 _PLANES = [ops_sim.srp_hyperplane(p, DIM) for p in range(N_PLANES)]
-
-
-# floor(x*10^nd + 0.5)/10^nd mirrors functions.scalar.duck_round
-# exactly (same association order) — NOT DuckDB round(), whose
-# half-away-from-zero differs from the floor formula on negative halfway
-# cosines. Used for every cosine the oracles emit or rank on.
-def _r6(expr: str) -> str:
-    return f"floor(({expr}) * 1e6 + 0.5) / 1e6"
-
-
-def _r4(expr: str) -> str:
-    return f"floor(({expr}) * 1e4 + 0.5) / 1e4"
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,7 +72,7 @@ WITH n AS (
   FROM embeddings
 ), q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = {QUERY_VEC_ID})
 SELECT n.vec_id,
-       {_r4('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
+       {r4_sql('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
 FROM n, q
 WHERE n.vec_id != {QUERY_VEC_ID}
 ORDER BY cosine DESC, vec_id
@@ -165,11 +154,11 @@ WITH {NP_T_SQL}, n AS (
   FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings), np_t
 ), pairs AS (
   SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-         {_r4('list_dot_product(a.vn, b.vn)')} AS cosine
+         {r4_sql('list_dot_product(a.vn, b.vn)')} AS cosine
   FROM n a JOIN n b ON a.b0 = b.b0 AND a.vec_id != b.vec_id
   UNION
   SELECT a.vec_id, b.vec_id,
-         {_r4('list_dot_product(a.vn, b.vn)')}
+         {r4_sql('list_dot_product(a.vn, b.vn)')}
   FROM n a JOIN n b ON a.b1 = b.b1 AND a.vec_id != b.vec_id
 )
 SELECT vec_id, neighbor_id, cosine, rk AS rank
@@ -217,17 +206,17 @@ WITH e AS (
   SELECT vec_id, cent_id AS cell FROM (
     SELECT s.vec_id, cents.cent_id, row_number() OVER (
       PARTITION BY s.vec_id ORDER BY
-      {_r6('list_dot_product(s.v, cents.cv) / (s.nrm * cents.cnrm)')} DESC,
+      {r6_sql('list_dot_product(s.v, cents.cv) / (s.nrm * cents.cnrm)')} DESC,
       cents.cent_id) AS rn
     FROM s, cents) WHERE rn = 1
 ), probed AS (
   SELECT cent_id AS cell FROM cents, q
-  ORDER BY {_r6('list_dot_product(cents.cv, q.qv) / (cents.cnrm * q.qnrm)')}
+  ORDER BY {r6_sql('list_dot_product(cents.cv, q.qv) / (cents.cnrm * q.qnrm)')}
   DESC, cent_id
   LIMIT {NPROBE}
 )
 SELECT s.vec_id, assign.cell,
-       {_r4('list_dot_product(s.v, q.qv) / (s.nrm * q.qnrm)')} AS cosine
+       {r4_sql('list_dot_product(s.v, q.qv) / (s.nrm * q.qnrm)')} AS cosine
 FROM s JOIN assign USING (vec_id) JOIN probed ON assign.cell = probed.cell, q
 ORDER BY cosine DESC, s.vec_id
 LIMIT {TOP_K}
@@ -281,14 +270,14 @@ samp AS (
   SELECT vec_id, m, j FROM (
     SELECT sub.vec_id, sub.m, code.j, row_number() OVER (
       PARTITION BY sub.vec_id, sub.m
-      ORDER BY {_r6(_L2SQ.format(a='sub.sv', b='code.cv'))}, code.j) AS rn
+      ORDER BY {r6_sql(_L2SQ.format(a='sub.sv', b='code.cv'))}, code.j) AS rn
     FROM sub JOIN code ON sub.m = code.m) WHERE rn = 1
 ), qsub AS (
   SELECT m, list_slice(qv, m*{_PQ_SUB}+1, m*{_PQ_SUB}+{_PQ_SUB}) AS qs
   FROM q, range(0, {ops_sim.PQ_M}) t(m)
 ), dtab AS (
   SELECT code.m, code.j,
-         CAST(floor(({_r6(_L2SQ.format(a='qsub.qs', b='code.cv'))}) * 1e6
+         CAST(floor(({r6_sql(_L2SQ.format(a='qsub.qs', b='code.cv'))}) * 1e6
               + 0.5) AS BIGINT) AS dmic
   FROM qsub JOIN code ON qsub.m = code.m
 )
@@ -501,7 +490,7 @@ cand AS (
   FROM embeddings
 ), q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = {QUERY_VEC_ID})
 SELECT c.doc_id, c.bm25,
-       {_r4('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
+       {r4_sql('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
 FROM cand c JOIN n ON n.vec_id = c.doc_id CROSS JOIN q
 ORDER BY cosine DESC, c.doc_id
 LIMIT {TOP_K}
@@ -592,7 +581,7 @@ lex AS (
 ), q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = {QUERY_VEC_ID}),
 dense AS (
   SELECT n.vec_id,
-         {_r4('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
+         {r4_sql('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
   FROM n, q WHERE n.vec_id != {QUERY_VEC_ID}
   ORDER BY cosine DESC, vec_id LIMIT {N_RERANK_CAND}
 ), den_r AS (
@@ -689,7 +678,7 @@ def _oracle_fused_cte(tag: str, vexpr: str) -> str:
   SELECT v AS qv, nrm AS qnrm FROM n_{tag} WHERE vec_id = {QUERY_VEC_ID}
 ), dense_{tag} AS (
   SELECT n.vec_id,
-         {_r4('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
+         {r4_sql('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
   FROM n_{tag} n, q_{tag} q WHERE n.vec_id != {QUERY_VEC_ID}
   ORDER BY cosine DESC, vec_id LIMIT {N_RERANK_CAND}
 ), den_r_{tag} AS (
@@ -805,7 +794,7 @@ lex AS (
 ), q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = {QUERY_VEC_ID}),
 dense AS (
   SELECT n.vec_id,
-         {_r4('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
+         {r4_sql('list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm)')} AS cosine
   FROM n, q WHERE n.vec_id != {QUERY_VEC_ID}
   ORDER BY cosine DESC, vec_id LIMIT {N_RERANK_CAND}
 ), den_r AS (

@@ -19,11 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
+    money_micros,
     money_sum,
     money_sum_sql,
-    sql_hex2long,
     t,
 )
 from hippo_claim_crossover_spark.session import fixture_dir, run_dir
@@ -258,9 +260,9 @@ def q_src_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_SRC_PYDS = f"""
-SELECT i AS doc_id, substr(md5(CAST(i AS VARCHAR)), 1, 8) AS token,
+SELECT i AS doc_id, left(md5(CAST(i AS VARCHAR)), 8) AS token,
        CAST(8 AS INTEGER) AS n_chars,
-       substr(md5(CAST(i AS VARCHAR)), 1, 1) AS bucket
+       left(md5(CAST(i AS VARCHAR)), 1) AS bucket
 FROM range(0, {PYDS_N}) t(i)
 """
 
@@ -377,7 +379,7 @@ def q_src_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_SRC_PYDS_STREAM = f"""
-SELECT i AS doc_id, substr(md5(CAST(i AS VARCHAR)), 1, 8) AS token,
+SELECT i AS doc_id, left(md5(CAST(i AS VARCHAR)), 8) AS token,
        CAST(8 AS INTEGER) AS n_chars
 FROM range(0, {PYDS_N}) t(i)
 """
@@ -560,8 +562,6 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-robin target partitions can collide across input splits.)
     Every shipped fixture is ≥60k lineitem rows; guarded by the
     oracle's own hash-checked ``n_rows_frag`` column."""
-    from hippo_claim_crossover_spark.plans.base import money_micros
-
     cols = ["l_orderkey", "l_linenumber", "qty_u", "price_u"]
     src = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
@@ -576,7 +576,6 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite").parquet(f"{out}/compact")
 
     def audit(leg: str):
-        from hippo_claim_crossover_spark.plans.base import hex2long
         # input_file_name() is non-deterministic to the optimizer, so it
         # must be projected into a column before aggregation.
         # Two-level shape (r12 VERDICT #5): per-FILE partials first —
@@ -590,7 +589,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every byte — but the audit leg is now metadata-sized.
         df = (spark.read.schema(src.schema).parquet(f"{out}/{leg}")
               .withColumn("_f", F.input_file_name()))
-        h = hex2long(F.md5(F.concat_ws("#", *cols)))
+        h = md5_long(F.concat_ws("#", *cols))
         per_file = df.groupBy("_f").agg(
             F.count(F.lit(1)).alias("_n"),
             F.sum(h.cast("decimal(38,0)")).alias("_h"))
@@ -609,13 +608,13 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_COMPACT_FILES = f"""
 WITH h AS (
-  SELECT {sql_hex2long(
-      "md5(CAST(l_orderkey AS VARCHAR) || '#' || "
+  SELECT {sql_md5_long(
+      "CAST(l_orderkey AS VARCHAR) || '#' || "
       "CAST(l_linenumber AS VARCHAR) || '#' || "
       "CAST(CAST(floor(l_quantity * 1e6 + 0.5) AS BIGINT) AS VARCHAR) "
       "|| '#' || "
       "CAST(CAST(floor(l_extendedprice * 1e6 + 0.5) AS BIGINT) "
-      "AS VARCHAR))")} AS hv
+      "AS VARCHAR)")} AS hv
   FROM lineitem
 ), a AS (
   SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -653,8 +652,6 @@ def q_backfill_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     a snapshot test (tests/test_plans.py). The mode is set as a
     per-write option, never session-wide (a session-level dynamic
     default is a loaded gun for unrelated writes)."""
-    from hippo_claim_crossover_spark.plans.base import hex2long, money_micros
-
     out = run_dir(spark, "q_backfill_partition", sf_dir)
     base = t(spark, sf_dir, "events").select(
         "event_id", "value", "event_type")
@@ -673,8 +670,8 @@ def q_backfill_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("value", T.DoubleType()),
         T.StructField("event_type", T.StringType()),
     ])).parquet(out)
-    h = hex2long(F.md5(F.concat_ws(
-        "#", "event_id", money_micros(F.col("value")))))
+    h = md5_long(F.concat_ws(
+        "#", "event_id", money_micros(F.col("value"))))
     return (ev.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_rows"),
                  F.pmod(F.sum(h.cast("decimal(38,0)")),
@@ -693,9 +690,9 @@ WITH src AS (
   FROM events
 ), h AS (
   SELECT event_type,
-         {sql_hex2long(
-      "md5(CAST(event_id AS VARCHAR) || '#' || "
-      "CAST(CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS VARCHAR))")}
+         {sql_md5_long(
+      "CAST(event_id AS VARCHAR) || '#' || "
+      "CAST(CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS VARCHAR)")}
            AS hv
   FROM src
 )

@@ -29,13 +29,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
 from hippo_claim_crossover_spark.operators.ranking import grouped_percentiles
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
     duck_round,
-    hex2long,
     money_micros,
-    sql_hex2long,
     t,
 )
 from hippo_claim_crossover_spark.session import materialize
@@ -459,9 +459,9 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep = o_spread.select(
         "prio", "o_orderkey", "x_u",
         F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("b"))
-    u = (hex2long(F.md5(F.concat_ws(
+    u = (md5_long(F.concat_ws(
         ":", F.lit("boot"), F.col("o_orderkey").cast("string"),
-        F.col("b").cast("string"))))
+        F.col("b").cast("string")))
         .cast("double") / F.lit(float(1 << 60)))
     w = F.when(u < _POIS1_CDF[0], 0).when(u < _POIS1_CDF[1], 1) \
         .when(u < _POIS1_CDF[2], 2).when(u < _POIS1_CDF[3], 3) \
@@ -507,9 +507,9 @@ WITH o AS (
   FROM o
 ), drawn AS (
   SELECT prio, b, x_u,
-         CAST({sql_hex2long(
-             "md5('boot' || ':' || CAST(o_orderkey AS VARCHAR) "
-             "|| ':' || CAST(b AS VARCHAR))")} AS DOUBLE)
+         CAST({sql_md5_long(
+             "'boot' || ':' || CAST(o_orderkey AS VARCHAR) "
+             "|| ':' || CAST(b AS VARCHAR)")} AS DOUBLE)
            / {float(1 << 60)!r} AS u
   FROM rep
 ), weighted AS (
@@ -827,7 +827,7 @@ def _canon_row_hash() -> Column:
         F.col("o_orderkey"), F.col("o_custkey"), F.col("o_orderstatus"),
         cents, F.date_format("o_orderdate", "yyyy-MM-dd"),
         F.col("o_orderpriority"))
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+    return md5_long(s)
 
 
 def q_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -887,11 +887,11 @@ def reconcile_digests(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-_CANON_SQL = ("CAST(('0x' || substr(md5("
-              "o_orderkey || '|' || o_custkey || '|' || o_orderstatus"
-              " || '|' || CAST(floor({price} * 100 + 0.5) AS BIGINT)"
-              " || '|' || strftime(o_orderdate, '%Y-%m-%d')"
-              " || '|' || o_orderpriority), 1, 15)) AS BIGINT)")
+_CANON_SQL = sql_md5_long(
+    "o_orderkey || '|' || o_custkey || '|' || o_orderstatus"
+    " || '|' || CAST(floor({price} * 100 + 0.5) AS BIGINT)"
+    " || '|' || strftime(o_orderdate, '%Y-%m-%d')"
+    " || '|' || o_orderpriority")
 
 ORACLE_RECONCILE = f"""
 WITH a AS (

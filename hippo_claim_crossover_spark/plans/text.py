@@ -13,11 +13,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hippo_claim_crossover_spark.operators import text as ops_text
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
 from hippo_claim_crossover_spark.plans.base import (
     QuerySpec,
+    aes_key,
     duck_round,
-    hex2long,
-    sql_hex2long,
+    sql_aes_key,
     t,
     t_wide,
 )
@@ -939,9 +941,7 @@ def q_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage ever sees a global ordering. md5 (not xxhash64) so DuckDB
     computes the identical key."""
     d = t(spark, sf_dir, "documents")
-    key = F.conv(F.substring(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":42"))),
-        1, 15), 16, 10).cast("long")
+    key = md5_long(F.concat(F.col("doc_id").cast("string"), F.lit(":42")))
     w = Window.partitionBy("shard").orderBy("skey", "doc_id")
     return (
         d.select("doc_id", key.alias("skey"))
@@ -951,11 +951,10 @@ def q_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SHUFFLE_SHARDS = """
+ORACLE_SHUFFLE_SHARDS = f"""
 WITH k AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 15))
-              AS BIGINT) AS skey
+         {sql_md5_long("CAST(doc_id AS VARCHAR) || ':42'")} AS skey
   FROM documents
 )
 SELECT doc_id, CAST(skey % 16 AS INTEGER) AS shard,
@@ -1028,9 +1027,8 @@ def q_matmul(spark: SparkSession, sf_dir: str) -> DataFrame:
         terms.select("term").distinct()
         .crossJoin(topics)
         .select("term", "topic",
-                (F.conv(F.substring(
-                    F.md5(F.concat_ws(":", "term", "topic")), 1, 15),
-                    16, 10).cast("long") % 7).alias("w"))
+                (md5_long(F.concat_ws(":", "term", "topic")) % 7)
+                .alias("w"))
     )
     dense = (F.broadcast(weights)
              if _corpus_bytes(spark, sf_dir) <= _MATMUL_BCAST_BYTES
@@ -1051,8 +1049,7 @@ WITH terms AS (
   WHERE length(term) >= 3 GROUP BY doc_id, term
 ), weights AS (
   SELECT term, topic,
-         CAST(('0x' || substr(md5(term || ':' || topic), 1, 15))
-              AS BIGINT) % 7 AS w
+         {sql_md5_long("term || ':' || topic")} % 7 AS w
   FROM (SELECT DISTINCT term FROM terms),
        (SELECT unnest(range({N_TOPICS})) AS topic)
 )
@@ -1203,7 +1200,7 @@ def q_text_strip_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").alias("text_len"),
         (F.size(F.split(html, "<a href")) - 1).alias("n_links"),
         (stripped == F.col("text")).cast("int").alias("ok"),
-        (hex2long(F.md5(stripped)) % 1000000007).alias("h"))
+        (md5_long(stripped) % 1000000007).alias("h"))
     return (
         per_doc.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -1216,11 +1213,11 @@ def q_text_strip_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("source"))
 
 
-ORACLE_TEXT_STRIP_HTML = """
+ORACLE_TEXT_STRIP_HTML = f"""
 WITH h AS (
   SELECT source, text, length(text) AS text_len,
          '<html><head><title>d' || CAST(doc_id AS VARCHAR)
-         || '</title><style>p{margin:0;}</style>'
+         || '</title><style>p{{margin:0;}}</style>'
          || '<script>var x=1;</script></head><body>'
          || '<nav><a href="/">home</a>'
          || repeat('<a href="/p">more</a>', CAST(doc_id % 3 AS INT))
@@ -1254,8 +1251,8 @@ SELECT source, count(*) AS n_docs,
        CAST(sum(html_len - text_len) AS BIGINT) AS markup_chars,
        floor((CAST(sum(n_links) AS DOUBLE) / count(*)) * 1e4 + 0.5) / 1e4
          AS avg_links,
-       CAST(sum(CAST(('0x' || substr(md5(stripped), 1, 15)) AS BIGINT)
-                % 1000000007) AS BIGINT) AS stripped_hash
+       CAST(sum({sql_md5_long("stripped")} % 1000000007) AS BIGINT)
+         AS stripped_hash
 FROM s GROUP BY source ORDER BY source
 """
 
@@ -1341,7 +1338,7 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (t_wide(spark, sf_dir, "documents")
             .select("doc_id",
                     F.explode(F.split(F.col("text"), " ")).alias("tok"))
-            .withColumn("dim", hex2long(F.md5("tok")) % D))
+            .withColumn("dim", md5_long("tok") % D))
     return (toks.groupBy("dim")
             .agg(F.count(F.lit(1)).alias("total_count"),
                  F.countDistinct("tok").alias("distinct_tokens"),
@@ -1349,13 +1346,13 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("dim"))
 
 
-ORACLE_FEATURE_HASH = """
+ORACLE_FEATURE_HASH = f"""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS tok
   FROM documents
 ), h AS (
   SELECT doc_id, tok,
-         CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) % 64 AS dim
+         {sql_md5_long("tok")} % 64 AS dim
   FROM toks
 )
 SELECT dim, count(*) AS total_count,
@@ -1388,8 +1385,6 @@ def q_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 5-key final aggregate.  Every ratio rides duck_round and every
     count is exact, so the 4-stage composite stays hash-checkable.
     """
-    from hippo_claim_crossover_spark.plans.base import aes_key
-
     K = 100
     d = t_wide(spark, sf_dir, "documents")
     n, mean_len, distinct_ratio = _gopher_metrics()
@@ -1430,7 +1425,7 @@ def q_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang"))
 
 
-ORACLE_EXPORT_PIPELINE = r"""
+ORACLE_EXPORT_PIPELINE = rf"""
 WITH m AS (
   SELECT doc_id, lang, text,
          CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
@@ -1458,10 +1453,8 @@ WITH m AS (
   SELECT sum(n_lang) AS n_tot, count(*) AS k_lang FROM lang_n
 ), keyed AS (
   SELECT s.doc_id, s.lang, s.n_tokens, s.n_pii,
-         pow((CAST(('0x' || substr(md5(CAST(s.doc_id AS VARCHAR)), 1, 15))
-                   AS BIGINT) + 1.0) / 1152921504606846976.0,
-             1.0 / (CAST(t.n_tot AS DOUBLE)
-                    / CAST(t.k_lang * l.n_lang AS DOUBLE))) AS k
+         {sql_aes_key("s.doc_id", "CAST(t.n_tot AS DOUBLE) / "
+                      "CAST(t.k_lang * l.n_lang AS DOUBLE)")} AS k
   FROM scrubbed s
   JOIN lang_n l ON s.lang = l.lang
   CROSS JOIN tot t
@@ -1474,6 +1467,13 @@ SELECT lang, count(*) AS n_docs,
        CAST(sum(n_pii) AS BIGINT) AS pii_hits
 FROM top GROUP BY lang ORDER BY lang
 """
+
+
+def _log_u(x):
+    """``⌊log2(x)·1e6⌉`` as a BIGINT: a log snapped to integer micro-bits,
+    identical in both engines for the small integer counts it is fed."""
+    return (F.floor(F.log2(x.cast("double")) * F.lit(1e6) + F.lit(0.5))
+            .cast("long"))
 
 
 def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1510,8 +1510,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = (tc.groupBy("doc_id", "source")
                .agg(F.sum(term_u).alias("sum_u"),
                     F.sum("c").alias("n")))
-    logn_u = F.floor(F.log2(F.col("n").cast("double"))
-                     * F.lit(1e6) + F.lit(0.5)).cast("long")
+    logn_u = _log_u(F.col("n"))
     per_doc = per_doc.withColumn(
         "h_n_u", F.col("n") * logn_u - F.col("sum_u"))
     h_bits = (F.col("h_n_u").cast("double")
@@ -1606,10 +1605,6 @@ def q_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = c2.groupBy("w1").agg(F.sum("_c2").alias("_c1"))
     vocab = (docs.select(F.explode(F.split("text", " ")).alias("tok"))
              .agg(F.count_distinct("tok").alias("_v")))
-
-    def _log_u(x):
-        return F.floor(F.log2(x.cast("double")) * F.lit(1e6)
-                       + F.lit(0.5)).cast("long")
 
     cost_u = (_log_u(F.col("_c1") + F.col("_v"))
               - _log_u(F.col("_c2") + F.lit(1)))
@@ -1776,7 +1771,7 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"i -> array_join(slice(tk, i, {WINNOW_K}), ' '))"))
                 .alias("pos0", "kgram"))
         .select("doc_id", "source", (F.col("pos0") + 1).alias("pos"),
-                hex2long(F.md5("kgram")).alias("h")),
+                md5_long("kgram").alias("h")),
         "kgram_hashes")
     # Canonical winnowing selects each window's ARGMIN position
     # (leftmost on hash ties). Encoding (h, pos) as one fixed-width
@@ -1829,7 +1824,7 @@ WITH d AS (
   FROM d WHERE n_tok >= {WINNOW_K}
 ), kg AS (
   SELECT doc_id, source, u.pos AS pos,
-         {sql_hex2long("md5(u.kg)")} AS h
+         {sql_md5_long("u.kg")} AS h
   FROM kg0
 ), sel AS (
   SELECT DISTINCT doc_id, source, mk,
@@ -1981,17 +1976,13 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "source", "lang",
                     F.explode(F.split("text", " ")).alias("tok"))
             .select("doc_id", "source",
-                    (hex2long(F.md5("tok")) % DSIR_BUCKETS).alias("b"),
+                    (md5_long("tok") % DSIR_BUCKETS).alias("b"),
                     (F.col("lang") == DSIR_TARGET_LANG).alias("is_t")))
     counts = (toks.groupBy("b")
               .agg(F.count(F.lit(1)).alias("c_r"),
                    F.sum(F.when(F.col("is_t"), 1).otherwise(0))
                    .cast("long").alias("c_t")))
     tot = counts.agg(F.sum("c_r").alias("n_r"), F.sum("c_t").alias("n_t"))
-
-    def _log_u(x):
-        return (F.floor(F.log2(x.cast("double")) * F.lit(1e6) + F.lit(0.5))
-                .cast("long"))
 
     lam = (counts.crossJoin(F.broadcast(tot))
            .select("b",
@@ -2021,7 +2012,7 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_DSIR = f"""
 WITH toks AS (
   SELECT doc_id, source,
-         {sql_hex2long("md5(tok)")} % {DSIR_BUCKETS} AS b,
+         {sql_md5_long("tok")} % {DSIR_BUCKETS} AS b,
          (lang = '{DSIR_TARGET_LANG}') AS is_t
   FROM (SELECT doc_id, source, lang,
                unnest(string_split(text, ' ')) AS tok FROM documents)
@@ -2111,7 +2102,7 @@ def q_span_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 " + if(i < n_mask % n_spans, 1L, 0L)"))
              .withColumn("start",
                          F.col("i") * F.col("seg")
-                         + hex2long(F.md5(F.concat_ws("#", "doc_id", "i")))
+                         + md5_long(F.concat_ws("#", "doc_id", "i"))
                          % (F.col("seg") - F.col("len_i") + 1))
              .withColumn("pos_sum",
                          F.expr("len_i * start"
@@ -2158,8 +2149,8 @@ WITH base AS (
          n_mask // n_spans
            + CASE WHEN i < n_mask % n_spans THEN 1 ELSE 0 END AS len_i,
          i * seg
-           + {sql_hex2long(
-               "md5(CAST(doc_id AS VARCHAR) || '#' || CAST(i AS VARCHAR))")}
+           + {sql_md5_long(
+               "CAST(doc_id AS VARCHAR) || '#' || CAST(i AS VARCHAR)")}
              % (seg
                 - (n_mask // n_spans
                    + CASE WHEN i < n_mask % n_spans THEN 1 ELSE 0 END)

@@ -27,11 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 # PROVIDED it has been idle past a safety margin: a tag-differs-only rule
 # deletes the scratch of a session that is still running concurrently
 # (observed: a check_oracle session pruned a live pytest session's
-# bucketed tables mid-suite). The root is ``_SCRATCH_ROOTS[0]``, read at
-# call time so a harness can redirect it by assignment.
+# scratch mid-suite). ``_SCRATCH_ROOTS`` holds the one root, ``_scratch/``
+# in the checkout; it is read at call time so a harness can redirect it by
+# assignment.
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_SCRATCH_ROOTS = (os.path.join(_REPO, "_scratch"),
-                  os.path.join(_REPO, "spark-warehouse", "bktest.db"))
+_SCRATCH_ROOTS = (os.path.join(_REPO, "_scratch"),)
 _RUN_TAG = re.compile(r"local[-_](\d+)")
 _PRUNED_FOR: set[str] = set()
 _PRUNE_IDLE_SECS = 2 * 3600  # > any single harness session's lifetime

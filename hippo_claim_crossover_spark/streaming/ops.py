@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from hippo_claim_crossover_spark.session import conf_scope
 
@@ -199,6 +200,17 @@ def interval_join(left: DataFrame, right: DataFrame,
     )
 
 
+def _drain(result: DataFrame, writer: DataStreamWriter,
+           partitions: int | None) -> None:
+    """Run ``writer`` (a ``result.writeStream`` builder) with availableNow
+    until its source is drained, with the shuffle/state partition count
+    scoped to ``partitions or STREAM_SHUFFLE_DEFAULT``."""
+    with conf_scope(result.sparkSession, {
+            "spark.sql.shuffle.partitions":
+            str(partitions or STREAM_SHUFFLE_DEFAULT)}):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def write_foreach_batch(result: DataFrame, out_dir: str,
                         checkpoint_dir: str,
                         partitions: int | None = None) -> None:
@@ -213,13 +225,9 @@ def write_foreach_batch(result: DataFrame, out_dir: str,
         (batch_df.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_dir))
 
-    with conf_scope(result.sparkSession, {
-            "spark.sql.shuffle.partitions":
-            str(partitions or STREAM_SHUFFLE_DEFAULT)}):
-        q = (result.writeStream.foreachBatch(_write)
-             .option("checkpointLocation", checkpoint_dir)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
+    _drain(result, result.writeStream.foreachBatch(_write)
+           .option("checkpointLocation", checkpoint_dir)
+           .outputMode("append"), partitions)
 
 
 def run_to_parquet(result: DataFrame, out_dir: str,
@@ -229,14 +237,10 @@ def run_to_parquet(result: DataFrame, out_dir: str,
     fault-tolerant sink whose commit log makes checkpoint RESTARTS
     exactly-once (the memory sink refuses to recover); q_stream_resume
     runs two of these against one checkpoint to pin the contract."""
-    with conf_scope(result.sparkSession, {
-            "spark.sql.shuffle.partitions":
-            str(partitions or STREAM_SHUFFLE_DEFAULT)}):
-        q = (result.writeStream.format("parquet")
-             .option("path", out_dir)
-             .option("checkpointLocation", checkpoint)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
+    _drain(result, result.writeStream.format("parquet")
+           .option("path", out_dir)
+           .option("checkpointLocation", checkpoint)
+           .outputMode("append"), partitions)
 
 
 def run_to_memory(result: DataFrame, name: str,
@@ -250,14 +254,10 @@ def run_to_memory(result: DataFrame, name: str,
     memory SINK itself is per-run, so a resumed run's table holds only
     the output its own batches emit."""
     w = (result.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode).trigger(availableNow=True))
+         .outputMode(output_mode))
     if checkpoint is not None:
         w = w.option("checkpointLocation", checkpoint)
-    with conf_scope(result.sparkSession, {
-            "spark.sql.shuffle.partitions":
-            str(partitions or STREAM_SHUFFLE_DEFAULT)}):
-        q = w.start()
-        q.awaitTermination()
+    _drain(result, w, partitions)
 
 
 def land_batch_file(df: DataFrame, src_dir: str, batch_idx: int) -> None:

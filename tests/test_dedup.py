@@ -6,10 +6,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hippo_claim_crossover_spark.plans.dedup import (
-    _hex2long,
-    _shingles,
-)
+from hippo_claim_crossover_spark.operators.hashing import (
+    md5_long, sql_md5_long)
+from hippo_claim_crossover_spark.plans.dedup import _shingles
 
 
 def _docs(spark, rows):
@@ -29,15 +28,32 @@ def test_shingles(spark):
     assert out == ["a b c d", "b c d e"]
 
 
-def test_hex2long_matches_duckdb(spark):
+def test_md5_long_matches_duckdb(spark):
+    """Spark ``md5_long``, DuckDB ``sql_md5_long`` and hashlib build the
+    same 60-bit key for ASCII, empty, non-ASCII and cast-integer inputs,
+    and the key's top 28 bits (``>> 32``, the MinHash base hash) are
+    exactly the 7-hex prefix."""
+    import hashlib
+
     import duckdb
 
-    got = _docs(spark, [(1, "hello")]).select(
-        _hex2long(F.md5("text")).alias("h")).head()["h"]
-    want = duckdb.sql(
-        "SELECT CAST(('0x' || substr(md5('hello'), 1, 15)) AS BIGINT)"
-    ).fetchone()[0]
-    assert got == want
+    texts = ["hello", "", "naïve café ✓"]
+    df = spark.createDataFrame([(s,) for s in texts], "s string").union(
+        spark.range(42, 43).select(F.col("id").cast("string").alias("s")))
+    got = {r["s"]: (r["h"], r["top"]) for r in df.select(
+        "s", md5_long("s").alias("h"),
+        F.shiftright(md5_long("s"), 32).alias("top")).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?)", [[s] for s in texts])
+    con.execute("INSERT INTO t SELECT CAST(CAST(42 AS BIGINT) AS VARCHAR)")
+    duck = {s: (h, top) for s, h, top in con.execute(
+        f"SELECT s, {sql_md5_long('s')}, ({sql_md5_long('s')} >> 32) "
+        "FROM t").fetchall()}
+    for s in texts + ["42"]:
+        hexdigest = hashlib.md5(s.encode()).hexdigest()
+        want = (int(hexdigest[:15], 16), int(hexdigest[:7], 16))
+        assert got[s] == duck[s] == want, s
 
 
 def test_ngram_jaccard_finds_planted_pair(spark):

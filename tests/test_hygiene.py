@@ -25,8 +25,10 @@ harness code and legitimately materialize results.)
 A second lint keeps every scratch path behind ``session.py``'s API: no
 other package module may spell a scratch root or checkout path. A third
 keeps parquet reads on a declared schema (inference costs a Spark job per
-read). A fourth keeps every checkpoint behind ``session.materialize``
-and every session conf change behind ``session.conf_scope``.
+read). A fourth keeps every checkpoint behind ``session.materialize``,
+every session conf change behind ``session.conf_scope``, and the md5-prefix
+content hash behind ``operators/hashing.py``'s ``md5_long`` /
+``sql_md5_long``.
 """
 
 from __future__ import annotations
@@ -187,11 +189,9 @@ def test_committed_freshness_artifact_matches_the_live_gate_window():
 SCRATCH_LITERALS = (os.path.dirname(PKG), "_scratch")
 
 
-def test_scratch_paths_come_only_from_the_session_api():
-    """Every scratch path in the package goes through ``session.py``
-    (``fixture_dir`` / ``run_dir`` / ``last_output``): a hard-coded
-    scratch root or checkout path in any other module — in a string
-    literal or a comment — fails here."""
+def _literal_hits(literals, owner_file: str) -> list[str]:
+    """Every string literal or comment outside ``owner_file`` (relative
+    to the package) that contains one of ``literals``."""
     import io
     import tokenize
 
@@ -200,7 +200,7 @@ def test_scratch_paths_come_only_from_the_session_api():
         for fname in files:
             path = os.path.join(root, fname)
             rel = os.path.relpath(path, PKG)
-            if not fname.endswith(".py") or rel == "session.py":
+            if not fname.endswith(".py") or rel == owner_file:
                 continue
             with open(path) as f:
                 src = f.read()
@@ -211,7 +211,16 @@ def test_scratch_paths_come_only_from_the_session_api():
                       tokenize.generate_tokens(io.StringIO(src).readline)
                       if tok.type == tokenize.COMMENT]
             hits += [f"{rel}:{line} {lit!r}" for line, text in texts
-                     for lit in SCRATCH_LITERALS if lit in text]
+                     for lit in literals if lit in text]
+    return hits
+
+
+def test_scratch_paths_come_only_from_the_session_api():
+    """Every scratch path in the package goes through ``session.py``
+    (``fixture_dir`` / ``run_dir`` / ``last_output``): a hard-coded
+    scratch root or checkout path in any other module — in a string
+    literal or a comment — fails here."""
+    hits = _literal_hits(SCRATCH_LITERALS, "session.py")
     assert not hits, f"hard-coded scratch path(s) outside session.py: {hits}"
 
 
@@ -275,16 +284,23 @@ def test_parquet_reads_declare_their_schema():
     assert not stale, f"INFERRED_READS entries no longer infer: {stale}"
 
 
-# (calls, owner): each call may appear in the package only inside
-# ``session.<owner>``. A call is named by its method, or by
-# ``<receiver attribute>.<method>`` (``spark.conf.set`` -> ``conf.set``).
+# (calls, literals, owning file, owner): each call may appear in the
+# package only inside the top-level function ``owner`` of the owning file,
+# and each literal (in a string or a comment) only in the owning file. A
+# call is named by its method, or by ``<receiver attribute>.<method>``
+# (``spark.conf.set`` -> ``conf.set``).
 SESSION_OWNED = [
     # materialize tags the checkpoint's jobs ``ckpt:<why>`` and holds the
     # lazy / fault-tolerance policy
-    pytest.param({"localCheckpoint", "checkpoint"}, "materialize",
-                 id="checkpoint"),
+    pytest.param({"localCheckpoint", "checkpoint"}, (), "session.py",
+                 "materialize", id="checkpoint"),
     # conf_scope puts every key back as it found it, set or unset
-    pytest.param({"conf.set", "conf.unset"}, "conf_scope", id="conf"),
+    pytest.param({"conf.set", "conf.unset"}, (), "session.py", "conf_scope",
+                 id="conf"),
+    # the md5-prefix content hash, which every DuckDB oracle must rebuild
+    # bit for bit: md5_long in Spark, sql_md5_long in the oracle SQL
+    pytest.param({"conv"}, ("substr(md5(",), "operators/hashing.py",
+                 "md5_long", id="hash"),
 ]
 
 
@@ -297,12 +313,15 @@ def _call_names(func: ast.expr) -> set[str]:
     return names
 
 
-@pytest.mark.parametrize("calls, owner", SESSION_OWNED)
-def test_session_primitives_own_their_calls(calls, owner):
+@pytest.mark.parametrize("calls, literals, owner_file, owner",
+                         SESSION_OWNED)
+def test_session_primitives_own_their_calls(calls, literals, owner_file,
+                                            owner):
     """``session.materialize`` is the one way the package materializes an
-    intermediate, and ``session.conf_scope`` the one way it changes a
-    session conf. Any of ``calls`` anywhere else in the package fails
-    here."""
+    intermediate, ``session.conf_scope`` the one way it changes a session
+    conf, and ``operators/hashing.py`` the one place the md5-prefix
+    content hash is spelled. Any of ``calls`` outside ``owner``, or any
+    of ``literals`` outside ``owner_file``, fails here."""
     hits, owners = [], []
     for root, _dirs, files in os.walk(PKG):
         for fname in files:
@@ -317,9 +336,11 @@ def test_session_primitives_own_their_calls(calls, owner):
                 for node in ast.walk(top):
                     if (isinstance(node, ast.Call)
                             and _call_names(node.func) & calls):
-                        if (rel, top_owner) == ("session.py", owner):
+                        if (rel, top_owner) == (owner_file, owner):
                             owners.append(top_owner)
                         else:
                             hits.append(f"{rel}:{node.lineno} in {top_owner}")
-    assert not hits, f"{sorted(calls)} outside session.{owner}: {hits}"
-    assert owners, f"session.{owner} lost its call"
+    assert not hits, f"{sorted(calls)} outside {owner_file}:{owner}: {hits}"
+    assert owners, f"{owner_file}:{owner} lost its call"
+    hits = _literal_hits(literals, owner_file)
+    assert not hits, f"{list(literals)} outside {owner_file}: {hits}"
